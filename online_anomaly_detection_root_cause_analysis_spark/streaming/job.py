@@ -22,11 +22,32 @@ distributed-aggregation -> serial-detector shape:
 Both queries checkpoint independently; kill + restart resumes from the
 WALs and the idempotent sinks dedupe replayed commits (tests:
 tests/test_streaming.py::test_checkpoint_resume).
+
+**One state partition per query.** Both sinks funnel a micro-batch
+into one file (`coalesce(1)`), and that collapses the whole
+post-shuffle stage — state store, aggregation or
+applyInPandasWithState, and the write — into one task. A stateful
+query fixes its state-store partition count from
+`spark.sql.shuffle.partitions` at first start, so with the session's
+nproc partitions that one task loaded, ran and committed nproc state
+partitions one after another every trigger, for no parallelism. Both
+queries therefore start with `spark.sql.shuffle.partitions=1`
+(`_one_state_partition`); the query clones the session at `start()`,
+so the session itself keeps its value for batch work. The 1 is not an
+option: it follows from the single-file commit funnel that the detect
+query's commit atomicity needs. The map side (scan, extraction,
+partial aggregation) keeps its parallelism across input splits. On
+restart Spark restores the partition count from the checkpoint's
+offset log, so a checkpoint first written at N partitions resumes at N.
+Keyed tails (`key=...`) therefore run their detectors one after another
+in that task; the batch replay `make_batch_tail(key_col=...)` is the
+parallel form.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +56,21 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from .sink import write_batch_idempotent
 from .state import TOTAL_DIM, TailConfig, make_tail_fn, tail_output_schema
+
+
+@contextmanager
+def _one_state_partition(spark: SparkSession):
+    """Start a stateful query with one state-store partition (module
+    docstring), then give the session back its own value. The session
+    conf is shared: a query planned on it from another thread during
+    the start would see the 1 too."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def long_form_window_aggs(
@@ -247,13 +283,14 @@ class StreamingJob:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             write_batch_idempotent(batch_df, batch_id, aggs_dir, coalesce=1)
 
-        return (
-            aggs.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", self._ckpt("aggregate"))
-            .queryName("aggregate")
-            .start()
-        )
+        with _one_state_partition(aggs.sparkSession):
+            return (
+                aggs.writeStream.outputMode("append")
+                .foreachBatch(sink)
+                .option("checkpointLocation", self._ckpt("aggregate"))
+                .queryName("aggregate")
+                .start()
+            )
 
     def start_lsh_candidates_query(self, records_stream: DataFrame):
         """Streaming MinHash-LSH fuzzy-dedup candidate stage (requires
@@ -379,10 +416,11 @@ class StreamingJob:
             finally:
                 batch_df.unpersist()
 
-        return (
-            out.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", self._ckpt("detect"))
-            .queryName("detect")
-            .start()
-        )
+        with _one_state_partition(spark):
+            return (
+                out.writeStream.outputMode("append")
+                .foreachBatch(sink)
+                .option("checkpointLocation", self._ckpt("detect"))
+                .queryName("detect")
+                .start()
+            )

@@ -47,11 +47,6 @@ def write_batch_idempotent(
     return True
 
 
-def read_committed(spark, out_dir: str) -> DataFrame:
-    """Read only rows from committed batches."""
-    return spark.read.parquet(out_dir)
-
-
 def iceberg_writer_options(
     table: str,
     checkpoint_location: str,

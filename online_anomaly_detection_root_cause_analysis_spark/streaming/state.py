@@ -567,7 +567,13 @@ def make_tail_fn(config: TailConfig, with_key: bool = False):
         else:
             tail = StreamingTail(config)
         out_rows: list[dict[str, Any]] = []
-        for pdf in pdf_iter:
+        # one rows_to_windows over the whole group: Spark hands it over
+        # in Arrow batches of maxRecordsPerBatch rows, unsorted across
+        # batches, so a per-batch sort would feed windows out of order
+        # and cut a window split across two batches in two
+        chunks = list(pdf_iter)
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True)
             for ws, current, records, breakdown, hierarchy in rows_to_windows(pdf):
                 out_rows.extend(
                     tail.process_window(ws, current, records, breakdown, hierarchy)

@@ -3,14 +3,16 @@
 Measures the streaming DETECT stage (applyInPandasWithState over a
 file stream of finalized window aggregates) at local[32], single-key
 vs K-key, on IDENTICAL total window volume: the keyed variant
-partitions the same windows across K independent detector states, so
-the Python tail work parallelizes across cores instead of serializing
-through the reference's keyBy(0) single subtask.
+partitions the same windows across K independent detector states.
+The streaming detect query runs those states one after another in one
+task (one state partition, see streaming/job.py), so K keys do not
+parallelize the Python tail work across cores; only the batch replay
+`make_batch_tail(key_col=...)` does.
 
 The tail is the MacroBase scorer+classifier with simple RCA — real
 per-window Python work — so this measures the stage the multi-key
-generalization actually parallelizes (the upstream aggregation is
-already distributed; bench.py covers it).
+generalization partitions (the upstream aggregation is already
+distributed; bench.py covers it).
 
 Prints one JSON line:
   {"single_key": {...}, "multi_key": {...}, "speedup": S, "keys": K}

@@ -10,6 +10,7 @@
 - out-of-order input within the watermark matches batch.
 """
 
+import contextlib
 import math
 import os
 
@@ -279,7 +280,88 @@ def test_stateful_tail_matches_replay(spark, pages_path_factory, tmp_path):
     assert got_rca == want_rca
 
 
-def test_checkpoint_resume(spark, tmp_path):
+class _FakeGroupState:
+    """Minimal applyInPandasWithState GroupState stand-in for driving
+    make_tail_fn without Spark."""
+
+    def __init__(self):
+        self._v = None
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+
+def test_tail_fn_joins_arrow_batches_of_one_group():
+    """applyInPandasWithState hands one group's rows over in Arrow
+    batches (maxRecordsPerBatch rows each), unsorted across batches.
+    The tail must see the group as a whole: the same rows split into
+    two shuffled chunks give the same output as one chunk."""
+    import numpy as np
+    import pandas as pd
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        make_tail_fn,
+    )
+
+    rows = []
+    for i in range(30):
+        ws = 1_700_000_000 + 60 * i
+        # window 25 spikes past max_value; each half alone stays under it
+        per_dim = 40.0 if i == 25 else 10.0
+        for name, group in (("host", "url"), ("lang", "content")):
+            for value in ("a", "b"):
+                rows.append((ws, name, value, group, 1, per_dim, 1))
+        rows.append((ws, "__total__", "__total__", "__total__", 0, 2 * per_dim, 2))
+    cols = ["window_start_epoch", "dim_name", "dim_value", "dim_group",
+            "dim_level", "dim_sum", "dim_count"]
+    pdf = pd.DataFrame(rows, columns=cols)
+    shuffled = pdf.sample(frac=1.0, random_state=np.random.RandomState(3))
+    half = len(shuffled) // 2
+
+    fn = make_tail_fn(TailConfig(mode="threshold", min_value=0, max_value=50))
+
+    def run(chunks):
+        out = list(fn((0,), iter(chunks), _FakeGroupState()))
+        return pd.concat(out, ignore_index=True) if out else None
+
+    want = run([pdf])
+    got = run([shuffled.iloc[:half], shuffled.iloc[half:]])
+    assert want is not None and (want["row_type"] == "alert").sum() == 1
+    pd.testing.assert_frame_equal(got, want)
+
+
+def _state_partitions(q) -> set:
+    """numShufflePartitions of every stateful operator in the query's
+    recorded progress."""
+    parts = {
+        op["numShufflePartitions"]
+        for p in q.recentProgress for op in p["stateOperators"]
+    }
+    assert parts, "no progress with a stateful operator was recorded"
+    return parts
+
+
+def test_checkpoint_resume(spark, tmp_path, monkeypatch):
+    """Kill + restart resumes from the checkpoints. Both queries run
+    one state-store partition and leave the session's own
+    spark.sql.shuffle.partitions alone; a checkpoint first written at
+    the session's n partitions resumes at n, with the same tables as
+    one uninterrupted 1-partition run."""
+    from online_anomaly_detection_root_cause_analysis_spark.streaming import job as jobmod
+
+    # conftest's 8, unless an earlier in-process get_spark() re-set it
+    session_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    n = int(session_partitions)
+    assert n > 1
+
     spec = PagesSpec(n_pages=2000)
     pdf = generate_pages(spec).sort_values("warc_ts")
     inc_path = tmp_path / "pages_inc"
@@ -290,18 +372,39 @@ def test_checkpoint_resume(spark, tmp_path):
     tail = TailConfig(mode="threshold", min_value=0, max_value=50000)
     work = str(tmp_path / "job_inc")
 
-    job = _run_job(spark, work, str(inc_path), tail)
+    def run(work_dir: str, pages_path: str, partitions: int):
+        job = StreamingJob(
+            work_dir=work_dir, cfg=CFG, tail=tail, size_s=300, slide_s=60,
+        )
+        stream = build_page_records(read_pages_stream(spark, pages_path), CFG)
+        for start in (
+            lambda: job.start_aggregate_query(stream),
+            lambda: job.start_detect_query(spark),
+        ):
+            q = start()
+            after_start = spark.conf.get("spark.sql.shuffle.partitions")
+            q.processAllAvailable()
+            q.stop()
+            assert after_start == session_partitions, q.name
+            assert _state_partitions(q) == {partitions}, q.name
+        return job
 
-    # second half arrives later; restart resumes from the checkpoints
+    # the first start writes its checkpoints at the session's n
+    with monkeypatch.context() as m:
+        m.setattr(jobmod, "_one_state_partition", lambda s: contextlib.nullcontext())
+        run(work, str(inc_path), partitions=n)
+
+    # second half arrives later; restart resumes from the checkpoints,
+    # at the partition count they were written with
     _write_chunks(pdf.iloc[1000:], inc_path, 4, start_idx=4)
-    job = _run_job(spark, work, str(inc_path), tail)
+    job = run(work, str(inc_path), partitions=n)
 
     # golden: one uninterrupted run over all data
     golden_work = str(tmp_path / "job_gold")
     all_path = tmp_path / "pages_all"
     all_path.mkdir(parents=True)
     _write_chunks(pdf, all_path, 8)
-    gold = _run_job(spark, golden_work, str(all_path), tail)
+    gold = run(golden_work, str(all_path), partitions=1)
 
     got = spark.read.parquet(job.alerts_dir)
     want = spark.read.parquet(gold.alerts_dir)
@@ -486,6 +589,14 @@ def test_lineage_metrics_listener(spark, tmp_path):
             .start()
         )
         q.processAllAvailable()
+        # processAllAvailable can return before the last batch's
+        # progress is recorded, and stop() would then drop its event
+        deadline = time.time() + 30
+        while (
+            sum(p["numInputRows"] for p in q.recentProgress) < len(pdf)
+            and time.time() < deadline
+        ):
+            time.sleep(0.1)
         q.stop()
         q.awaitTermination(30)
     finally:
