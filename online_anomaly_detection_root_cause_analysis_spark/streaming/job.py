@@ -6,10 +6,12 @@ distributed-aggregation -> serial-detector shape:
 1. **aggregate** (distributed): rate-limited source stream ->
    watermark -> groupBy(window(ts, size, slide), dim) long-form sums,
    with per-window totals riding along as dim_name='__total__' ->
-   append mode -> foreachBatch writing ONE commit-atomic parquet file
-   per micro-batch into `aggs/`. Commit atomicity matters: every
-   finalized window's rows land in exactly one file, so the tail can
-   treat files as ordered, complete units. (Production: an Iceberg
+   append mode -> foreachBatch committing ONE parquet file per
+   micro-batch into `aggs/` (`streaming/sink.py`): the batch is
+   collected with one `toArrow()` and written on the driver, and an
+   empty batch commits its marker only. Commit atomicity matters:
+   every finalized window's rows land in exactly one file, so the tail
+   can treat files as ordered, complete units. (Production: an Iceberg
    table, whose snapshots give the same commit atomicity without the
    single-file funnel; the funnel here carries only per-window
    aggregates — a ~10^6x reduction from the input — not raw events.)
@@ -17,30 +19,36 @@ distributed-aggregation -> serial-detector shape:
 2. **detect** (serial tail): file-stream over `aggs/`
    (maxFilesPerTrigger=1, i.e. one upstream commit per trigger) ->
    single-key applyInPandasWithState(StreamingTail) -> foreachBatch
-   idempotent sink split into `alerts/` + `rca/`.
+   idempotent sink: one `toArrow()` per batch, split by `row_type`
+   into `alerts/` + `rca/`.
 
 Both queries checkpoint independently; kill + restart resumes from the
 WALs and the idempotent sinks dedupe replayed commits (tests:
-tests/test_streaming.py::test_checkpoint_resume).
+tests/test_streaming.py::test_checkpoint_resume,
+::test_replayed_batches_are_skipped). A replayed batch still runs: each
+sink collects before it checks the marker, because a stateful batch
+commits its state store only when its plan executes, and Spark fails
+the query when a batch leaves it uncommitted.
 
-**One state partition per query.** Both sinks funnel a micro-batch
-into one file (`coalesce(1)`), and that collapses the whole
-post-shuffle stage — state store, aggregation or
-applyInPandasWithState, and the write — into one task. A stateful
-query fixes its state-store partition count from
-`spark.sql.shuffle.partitions` at first start, so with the session's
-nproc partitions that one task loaded, ran and committed nproc state
-partitions one after another every trigger, for no parallelism. Both
+**One state partition per query.** The post-shuffle stage of each
+query (state store, then aggregation or applyInPandasWithState) feeds
+one driver-side collect per trigger, of a few thousand aggregate or
+alert rows. A stateful query fixes its state-store partition count
+from `spark.sql.shuffle.partitions` at first start; at the session's
+nproc partitions, every trigger loaded and committed nproc state-store
+versions, and that fixed cost outweighed any parallelism over so few
+rows (state commits took 2.3-4.9x longer than at one partition). Both
 queries therefore start with `spark.sql.shuffle.partitions=1`
 (`_one_state_partition`); the query clones the session at `start()`,
 so the session itself keeps its value for batch work. The 1 is not an
-option: it follows from the single-file commit funnel that the detect
-query's commit atomicity needs. The map side (scan, extraction,
-partial aggregation) keeps its parallelism across input splits. On
-restart Spark restores the partition count from the checkpoint's
-offset log, so a checkpoint first written at N partitions resumes at N.
+option: a sink that collects each batch into one file, as the detect
+query's commit atomicity needs, has no use for more. The map side
+(scan, extraction, partial aggregation) keeps its parallelism across
+input splits. On restart Spark restores the partition count from the
+checkpoint's offset log, so a checkpoint first written at N partitions
+resumes at N.
 Keyed tails (`key=...`) therefore run their detectors one after another
-in that task; the batch replay `make_batch_tail(key_col=...)` is the
+in one task; the batch replay `make_batch_tail(key_col=...)` is the
 parallel form.
 """
 
@@ -50,6 +58,7 @@ import os
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -281,7 +290,7 @@ class StreamingJob:
         aggs_dir = self.aggs_dir
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            write_batch_idempotent(batch_df, batch_id, aggs_dir, coalesce=1)
+            write_batch_idempotent(batch_df.toArrow(), batch_id, aggs_dir)
 
         with _one_state_partition(aggs.sparkSession):
             return (
@@ -355,7 +364,7 @@ class StreamingJob:
         os.makedirs(cands_dir, exist_ok=True)
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            write_batch_idempotent(batch_df, batch_id, cands_dir, coalesce=1)
+            write_batch_idempotent(batch_df.toArrow(), batch_id, cands_dir)
 
         return (
             cands.writeStream.outputMode("append")
@@ -401,20 +410,13 @@ class StreamingJob:
         alerts_dir, rca_dir = self.alerts_dir, self.rca_dir
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df = batch_df.cache()
-            try:
+            table = batch_df.toArrow()
+            row_type = table["row_type"]
+            rows = table.drop_columns(["row_type"])
+            for kind, out_dir in (("alert", alerts_dir), ("rca", rca_dir)):
                 write_batch_idempotent(
-                    batch_df.filter(F.col("row_type") == "alert").drop("row_type"),
-                    batch_id,
-                    alerts_dir,
+                    rows.filter(pc.equal(row_type, kind)), batch_id, out_dir
                 )
-                write_batch_idempotent(
-                    batch_df.filter(F.col("row_type") == "rca").drop("row_type"),
-                    batch_id,
-                    rca_dir,
-                )
-            finally:
-                batch_df.unpersist()
 
         with _one_state_partition(spark):
             return (

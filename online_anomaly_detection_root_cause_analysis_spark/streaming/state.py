@@ -48,6 +48,8 @@ from ..algorithms.summarizer import (
 
 TOTAL_DIM = "__total__"
 PICKLE_VERSION = 1
+_MODES = ("threshold", "macrobase", "zscore", "hstrees")
+_RCA_MODES = ("simple", "hierarchical", "macrobase")
 
 
 @dataclass
@@ -105,6 +107,25 @@ class TailConfig:
     # parent_pairs join.
     hierarchy_from_data: bool = False
 
+    def __post_init__(self) -> None:
+        # fail where the job is built, not in a Python worker at the
+        # first window
+        if self.mode not in _MODES:
+            raise ValueError(f"unknown mode {self.mode!r}; expected one of {_MODES}")
+        if self.rca_mode is not None and self.rca_mode not in _RCA_MODES:
+            raise ValueError(
+                f"unknown rca_mode {self.rca_mode!r}; expected one of {_RCA_MODES}"
+            )
+        if self.mode == "macrobase" and self.detector_spec is None:
+            raise ValueError("mode='macrobase' needs a detector_spec")
+        if self.resolved_rca_mode == "macrobase" and self.summarizer_spec is None:
+            raise ValueError("MacroBase RCA needs a summarizer_spec")
+
+    @property
+    def resolved_rca_mode(self) -> str:
+        """rca_mode, or the reference pairing when it is None."""
+        return self.rca_mode or ("macrobase" if self.mode == "macrobase" else "simple")
+
 
 def tail_output_schema(with_key: bool = False) -> str:
     base = (
@@ -148,9 +169,7 @@ class StreamingTail:
     hstrees: Any = None
 
     def __post_init__(self) -> None:
-        self.rca = self.config.rca_mode or (
-            "macrobase" if self.config.mode == "macrobase" else "simple"
-        )
+        self.rca = self.config.resolved_rca_mode
         self.window_hierarchy: dict = {}
         if self.config.mode == "macrobase" and self.scorer is None:
             self.scorer = EWFeatureTransform(self.config.detector_spec)
@@ -563,6 +582,12 @@ def make_tail_fn(config: TailConfig, with_key: bool = False):
     def fn(key, pdf_iter, state) -> Iterator[pd.DataFrame]:
         if state.exists:
             version, blob = state.get
+            if version != PICKLE_VERSION:
+                raise RuntimeError(
+                    f"tail state for key {key!r} has version {version}; this "
+                    f"engine reads version {PICKLE_VERSION}. Restart the detect "
+                    "query from a new checkpoint."
+                )
             tail = pickle.loads(bytes(blob))
         else:
             tail = StreamingTail(config)

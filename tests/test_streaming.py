@@ -17,6 +17,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from online_anomaly_detection_root_cause_analysis_spark.algorithms.ewfeature import (
+    EWFeatureSpec,
+)
 from online_anomaly_detection_root_cause_analysis_spark.config import web_pages_config
 from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
     PagesSpec,
@@ -35,6 +38,7 @@ from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
     StreamingTail,
     TailConfig,
     rows_to_windows,
+    tail_output_schema,
 )
 
 CFG = web_pages_config()
@@ -172,6 +176,14 @@ def _norm_rows(df):
         )
         for row in df.collect()
     )
+
+
+def _read_tail_table(spark, directory: str):
+    """An alerts/ or rca/ table. An empty batch commits no part file,
+    so a table that never got a row has no file to infer a schema
+    from; the schema is the tail's output without row_type."""
+    schema = tail_output_schema().removeprefix("row_type string, ")
+    return spark.read.schema(schema).parquet(directory)
 
 
 @pytest.fixture(scope="module")
@@ -338,6 +350,49 @@ def test_tail_fn_joins_arrow_batches_of_one_group():
     pd.testing.assert_frame_equal(got, want)
 
 
+def test_tail_fn_rejects_state_of_another_version():
+    """State pickled under another PICKLE_VERSION is not loaded: the
+    tail fails with the version in the message."""
+    import pickle
+
+    import pandas as pd
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        PICKLE_VERSION,
+        make_tail_fn,
+    )
+
+    config = TailConfig(mode="threshold", min_value=0, max_value=50)
+    state = _FakeGroupState()
+    state.update((PICKLE_VERSION + 1, pickle.dumps(StreamingTail(config))))
+    fn = make_tail_fn(config)
+    with pytest.raises(RuntimeError, match=f"version {PICKLE_VERSION + 1}"):
+        list(fn((0,), iter([pd.DataFrame()]), state))
+
+
+_DETECTOR_SPEC = EWFeatureSpec(
+    warmup_count=20, sample_size=50, decay_period=100,
+    decay_rate=0.01, training_period=100, percentile=0.95,
+)
+
+
+@pytest.mark.parametrize(
+    "kwargs, message",
+    [
+        (dict(mode="macrobase"), "detector_spec"),
+        (dict(mode="macrobase", rca_mode="simple"), "detector_spec"),
+        (dict(mode="bogus"), "unknown mode"),
+        (dict(rca_mode="bogus"), "unknown rca_mode"),
+        (dict(mode="macrobase", detector_spec=_DETECTOR_SPEC), "summarizer_spec"),
+        (dict(rca_mode="macrobase"), "summarizer_spec"),
+    ],
+)
+def test_tail_config_rejects_bad_config(kwargs, message):
+    """A bad TailConfig fails where the job is built."""
+    with pytest.raises(ValueError, match=message):
+        TailConfig(**kwargs)
+
+
 def _state_partitions(q) -> set:
     """numShufflePartitions of every stateful operator in the query's
     recorded progress."""
@@ -472,20 +527,159 @@ def test_watermark_handles_out_of_order(spark, pages_path_factory, tmp_path):
     assert _norm_rows(streamed) == _norm_rows(batch_restricted)
 
 
-def test_iceberg_writer_options():
-    """Production sink option mapping (pure — iceberg jars not in this
-    image; write_batch_idempotent above tests the same exactly-once
-    contract end-to-end via the marker protocol)."""
+def _parts(directory: str) -> list[str]:
+    return sorted(f for f in os.listdir(directory) if f.startswith("part-"))
+
+
+def test_sink_commits_empty_batch_as_marker_only(tmp_path):
+    import pyarrow as pa
+
     from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
-        iceberg_writer_options,
+        write_batch_idempotent,
     )
 
-    opts = iceberg_writer_options("ad.alerts", "/ckpt/alerts", trigger_seconds=60)
-    assert opts["path"] == "ad.alerts"
-    assert opts["checkpointLocation"] == "/ckpt/alerts"
-    assert opts["fanout-enabled"] == "true"
-    assert opts["trigger-interval-seconds"] == "60"
-    assert "trigger-interval-seconds" not in iceberg_writer_options("t", "/c")
+    out = str(tmp_path / "out")
+    empty = pa.table({"x": pa.array([], pa.int64())})
+    assert write_batch_idempotent(empty, 3, out)
+    assert os.listdir(out) == ["_committed_0000000003"]
+
+
+def test_sink_skips_a_replayed_batch(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
+        write_batch_idempotent,
+    )
+
+    out = tmp_path / "out"
+
+    def snapshot():
+        return {p.name: (p.stat().st_mtime_ns, p.read_bytes()) for p in out.iterdir()}
+
+    assert write_batch_idempotent(pa.table({"x": [1, 2]}), 5, str(out))
+    before = snapshot()
+    assert sorted(before) == ["_committed_0000000005", "part-0000000005-0000.parquet"]
+    assert not write_batch_idempotent(pa.table({"x": [7]}), 5, str(out))
+    assert snapshot() == before
+    assert pq.read_table(out / "part-0000000005-0000.parquet")["x"].to_pylist() == [1, 2]
+    with pytest.raises(ValueError):
+        write_batch_idempotent(pa.table({"x": [1]}), 6, str(out), 0)
+
+
+def test_sink_rerun_after_crash_before_marker(tmp_path, monkeypatch):
+    """A crash between publishing the part file and writing the marker:
+    the rerun of the batch ends with one part file and the marker, and
+    no temp file is left."""
+    import builtins
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
+        write_batch_idempotent,
+    )
+
+    out = str(tmp_path / "out")
+    table = pa.table({"x": [1, 2, 3]})
+    real_open = builtins.open
+
+    def crash_on_marker(path, *a, **k):
+        if os.path.basename(str(path)).startswith("_committed_"):
+            raise OSError("crash before the marker")
+        return real_open(path, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", crash_on_marker)
+        with pytest.raises(OSError):
+            write_batch_idempotent(table, 2, out)
+    assert os.listdir(out) == ["part-0000000002-0000.parquet"]
+
+    assert write_batch_idempotent(table, 2, out)
+    assert sorted(os.listdir(out)) == [
+        "_committed_0000000002", "part-0000000002-0000.parquet",
+    ]
+    assert pq.read_table(os.path.join(out, "part-0000000002-0000.parquet")).equals(table)
+
+
+def _source_files_per_batch(ckpt: str) -> dict[int, set]:
+    """File-source batch -> basenames it read, from the source's
+    metadata log (plain and compacted entries)."""
+    import json
+
+    out: dict[int, set] = {}
+    log = os.path.join(ckpt, "sources", "0")
+    for name in os.listdir(log):
+        if name.startswith("."):
+            continue
+        with open(os.path.join(log, name)) as f:
+            for line in f:
+                if line.startswith("{"):
+                    entry = json.loads(line)
+                    out.setdefault(entry["batchId"], set()).add(
+                        os.path.basename(entry["path"])
+                    )
+    return out
+
+
+def test_replayed_batches_are_skipped(spark, tmp_path, monkeypatch):
+    """Drop the last `commits/` entry of both checkpoints and restart:
+    Spark replays each query's last batch, every sink sees a batchId it
+    already committed and skips it, and all three tables equal an
+    uninterrupted run. The detect query reads one non-empty `aggs/`
+    part file per batch."""
+    import pandas as pd
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming import job as jobmod
+
+    calls = []
+    write = jobmod.write_batch_idempotent
+
+    def recording_write(table, batch_id, out_dir, coalesce=1):
+        wrote = write(table, batch_id, out_dir, coalesce)
+        calls.append((os.path.basename(out_dir), batch_id, wrote))
+        return wrote
+
+    monkeypatch.setattr(jobmod, "write_batch_idempotent", recording_write)
+
+    pdf = generate_pages(PagesSpec(n_pages=1500)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 5)
+    # every window alerts, so alerts/ and rca/ get a part file per batch
+    tail = TailConfig(mode="threshold", min_value=0, max_value=0)
+
+    def run(work_dir: str):
+        return _run_job(spark, work_dir, str(pages), tail)
+
+    job = run(str(tmp_path / "job"))
+    last = {}
+    for name in ("aggregate", "detect"):
+        commits = os.path.join(job.work_dir, "checkpoints", name, "commits")
+        last[name] = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        for f in (str(last[name]), f".{last[name]}.crc"):
+            os.remove(os.path.join(commits, f))
+    calls.clear()
+    run(job.work_dir)
+    replayed = {(d, b) for d, b, wrote in calls if not wrote}
+    assert ("aggs", last["aggregate"]) in replayed
+    assert {("alerts", last["detect"]), ("rca", last["detect"])} <= replayed
+    assert all(not wrote for _, _, wrote in calls)
+
+    gold = run(str(tmp_path / "gold"))
+    for sub in ("aggs", "alerts", "rca"):
+        got, want = (os.path.join(j.work_dir, sub) for j in (job, gold))
+        assert _parts(got) == _parts(want), sub
+        batches = [f.split("-")[1] for f in _parts(got)]
+        assert len(batches) == len(set(batches)), sub
+        assert _norm_rows(spark.read.parquet(got)) == _norm_rows(spark.read.parquet(want))
+    assert spark.read.parquet(job.alerts_dir).count() > 0
+
+    agg_parts = _parts(job.aggs_dir)
+    assert all(len(pd.read_parquet(os.path.join(job.aggs_dir, f))) for f in agg_parts)
+    read = _source_files_per_batch(os.path.join(job.work_dir, "checkpoints", "detect"))
+    assert all(len(files) == 1 for files in read.values())
+    assert sorted(f for files in read.values() for f in files) == agg_parts
 
 
 def test_streaming_session_windows_match_batch(spark, tmp_path):

@@ -28,7 +28,7 @@ from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
     rows_to_windows,
 )
 
-from .test_streaming import _write_chunks
+from .test_streaming import _read_tail_table, _write_chunks
 
 CFG = web_pages_config()
 
@@ -68,8 +68,8 @@ def test_streaming_macrobase_matches_replay(spark, tmp_path):
     q2.processAllAvailable()
     q2.stop()
 
-    alerts = spark.read.parquet(job.alerts_dir)
-    rca = spark.read.parquet(job.rca_dir)
+    alerts = _read_tail_table(spark, job.alerts_dir)
+    rca = _read_tail_table(spark, job.rca_dir)
     assert alerts.count() > 0
 
     # pure-Python replay over the identical finalized windows
@@ -177,12 +177,12 @@ def test_checkpoint_resume_macrobase(spark, tmp_path):
     # leg 1: kill mid-warm-up — no classifier flush yet
     _write_chunks(a, inc_path, 2, start_idx=0)
     job = run(inc_path, work)
-    assert spark.read.parquet(job.alerts_dir).count() == 0
+    assert _read_tail_table(spark, job.alerts_dir).count() == 0
 
     # leg 2: resume into steady state (warm-up flush + emissions)
     _write_chunks(b, inc_path, 3, start_idx=2)
     job = run(inc_path, work)
-    mid_alerts = spark.read.parquet(job.alerts_dir).count()
+    mid_alerts = _read_tail_table(spark, job.alerts_dir).count()
     assert mid_alerts > 0
 
     # leg 3: resume again mid-steady-state
