@@ -85,7 +85,13 @@ def main() -> None:
             bands=args.bands,
         )
     else:
-        cands = spark.read.parquet(args.candidates).select("doc_a", "doc_b").distinct()
+        # explicit schema: a streaming candidates dir that never got a
+        # pair holds only `_committed_` markers, nothing to infer from
+        cands = (
+            spark.read.schema("doc_a long, doc_b long")
+            .parquet(args.candidates)
+            .distinct()
+        )
         pairs = verify_candidate_pairs(
             docs, cands, n=args.ngram, threshold=args.threshold
         )

@@ -26,9 +26,10 @@ Both queries checkpoint independently; kill + restart resumes from the
 WALs and the idempotent sinks dedupe replayed commits (tests:
 tests/test_streaming.py::test_checkpoint_resume,
 ::test_replayed_batches_are_skipped). A replayed batch still runs: each
-sink collects before it checks the marker, because a stateful batch
-commits its state store only when its plan executes, and Spark fails
-the query when a batch leaves it uncommitted.
+sink collects (or, for candidates, drains) the batch before it skips
+the commit, because a stateful batch commits its state store only when
+its plan executes, and Spark fails the query when a batch leaves it
+uncommitted.
 
 **One state partition per query.** The post-shuffle stage of each
 query (state store, then aggregation or applyInPandasWithState) feeds
@@ -55,12 +56,16 @@ parallel form.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass
+from itertools import islice
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
 
 from ..config import EngineConfig
 from .sink import write_batch_idempotent
@@ -80,6 +85,18 @@ def _one_state_partition(spark: SparkSession):
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def _arrow_chunks(df: DataFrame, rows: int = 50_000) -> Iterator[pa.Table]:
+    """Collect `df` as Arrow tables of at most `rows` rows, one
+    partition at a time (`toLocalIterator`): the driver holds one
+    partition and one chunk, never the whole frame. Slower per row
+    than `toArrow()`, for sinks whose batch has no size bound."""
+    it = df.toLocalIterator()
+    while chunk := list(islice(it, rows)):
+        yield LocalDataToArrowConversion.convert(
+            chunk, df.schema, use_large_var_types=False
+        )
 
 
 def long_form_window_aggs(
@@ -309,7 +326,14 @@ class StreamingJob:
         sinks. State is bucket-keyed and watermark-bounded (see
         operators/dedup.py::streaming_minhash_lsh); the offline
         verify/cluster jobs (near_duplicates / near_dup_clusters)
-        consume the candidate table."""
+        consume the candidate table.
+
+        A batch's pairs reach the file in bounded Arrow chunks
+        (`_arrow_chunks`), not one `toArrow()`: a trigger of m copies
+        of one text emits m(m-1)/2 pairs per band, m up to max_group. A batch with no
+        pair commits its `_committed_` marker only, so a run that found
+        none leaves no part file: readers pass a schema
+        (jobs/run_dedup.py reads `doc_a long, doc_b long`)."""
         from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
         if self.fuzzy_dedup_col is None:
@@ -364,7 +388,7 @@ class StreamingJob:
         os.makedirs(cands_dir, exist_ok=True)
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            write_batch_idempotent(batch_df.toArrow(), batch_id, cands_dir)
+            write_batch_idempotent(_arrow_chunks(batch_df), batch_id, cands_dir)
 
         return (
             cands.writeStream.outputMode("append")

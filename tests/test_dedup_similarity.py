@@ -1258,6 +1258,44 @@ def test_run_dedup_job_cli(spark, tmp_path, monkeypatch):
     assert kept2 == kept1
 
 
+def test_run_dedup_on_marker_only_candidates(spark, tmp_path, monkeypatch):
+    """A streaming candidates dir whose batches found no pair holds
+    only `_committed_` markers: jobs/run_dedup.py must read it as an
+    empty candidate table and keep every document as its own cluster."""
+    import importlib
+    import os
+    import sys
+
+    import pyarrow as pa
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
+        write_batch_idempotent,
+    )
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs")
+    )
+    run_dedup = importlib.import_module("run_dedup")
+
+    docs_pd = [(i, " ".join(f"w{i}x{j}" for j in range(8))) for i in range(6)]
+    in_dir = str(tmp_path / "docs")
+    spark.createDataFrame(docs_pd, "doc_id long, text string").write.parquet(in_dir)
+    cands_dir = str(tmp_path / "cands")
+    no_pairs = pa.table({"doc_a": pa.array([], pa.int64()), "doc_b": pa.array([], pa.int64())})
+    for batch_id in range(2):
+        write_batch_idempotent(no_pairs, batch_id, cands_dir)
+    assert all(f.startswith("_committed_") for f in os.listdir(cands_dir))
+
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(
+        sys, "argv",
+        ["run_dedup.py", "--input", in_dir, "--out", out, "--candidates", cands_dir],
+    )
+    run_dedup.main()
+    kept = {r.doc_id for r in spark.read.parquet(out + "/keep").collect()}
+    assert kept == set(range(6))
+
+
 def test_mixture_weights_exact_integer_path(spark):
     """T=0.5 (1/T = 2, integer) must take the BIGINT-exact path: q ~
     n_tokens^2 with all three outputs single IEEE divisions of exact

@@ -602,6 +602,41 @@ def test_sink_rerun_after_crash_before_marker(tmp_path, monkeypatch):
     assert pq.read_table(os.path.join(out, "part-0000000002-0000.parquet")).equals(table)
 
 
+def test_sink_streams_chunks_into_one_part_file(tmp_path):
+    """A batch handed over as Arrow chunks lands in one part file, empty
+    chunks included; only empty chunks commit the marker alone; a
+    replayed batch's chunks are still consumed, since consuming them is
+    what runs a lazily collected batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
+        write_batch_idempotent,
+    )
+
+    out = str(tmp_path / "out")
+    schema = pa.schema([("x", pa.int64())])
+    consumed = []
+
+    def chunks(*values):
+        for v in values:
+            consumed.append(v)
+            yield pa.RecordBatch.from_pylist([{"x": x} for x in v], schema=schema)
+
+    assert write_batch_idempotent(chunks([], [1, 2], [], [3]), 0, out)
+    assert sorted(os.listdir(out)) == ["_committed_0000000000", "part-0000000000-0000.parquet"]
+    assert pq.read_table(os.path.join(out, "part-0000000000-0000.parquet"))["x"].to_pylist() == [1, 2, 3]
+
+    assert write_batch_idempotent(chunks([], []), 1, out)
+    assert _parts(out) == ["part-0000000000-0000.parquet"]
+
+    consumed.clear()
+    assert not write_batch_idempotent(chunks([9], [8]), 0, out)
+    assert consumed == [[9], [8]]
+    assert pq.read_table(os.path.join(out, "part-0000000000-0000.parquet"))["x"].to_pylist() == [1, 2, 3]
+    assert not [f for f in os.listdir(out) if f.startswith("_tmp_")]
+
+
 def _source_files_per_batch(ckpt: str) -> dict[int, set]:
     """File-source batch -> basenames it read, from the source's
     metadata log (plain and compacted entries)."""
@@ -1573,6 +1608,17 @@ def test_lsh_candidates_checkpoint_resume(spark, tmp_path):
         )
     )
     assert cross == len(early)
+
+    # replay of the last batch: its candidates are collected lazily, so
+    # the skipped commit must still run the stateful batch
+    commits = os.path.join(work, "checkpoints", "lsh_candidates", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, f))
+    before = {f: os.path.getmtime(os.path.join(job.candidates_dir, f)) for f in os.listdir(job.candidates_dir)}
+    job = run(inc, work)
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert {f: os.path.getmtime(os.path.join(job.candidates_dir, f)) for f in os.listdir(job.candidates_dir)} == before
 
 
 def test_streaming_shard_manifest(spark, tmp_path):
