@@ -85,8 +85,8 @@ def main() -> None:
             bands=args.bands,
         )
     else:
-        # explicit schema: a streaming candidates dir that never got a
-        # pair holds only `_committed_` markers, nothing to infer from
+        # the streaming candidates dir is a Spark file-sink table: the
+        # read lists committed files from its `_spark_metadata` log
         cands = (
             spark.read.schema("doc_a long, doc_b long")
             .parquet(args.candidates)

@@ -18,7 +18,7 @@ Layout
 - ``sources``     deterministic pages generator, batch/stream readers
 - ``operators``   windowed aggregation, offset baseline, detectors, RCA
                   contributor finders, dedup/similarity/text-analysis ops
-- ``detection``   composite detector pipelines (threshold, macrobase)
+- ``detection``   the threshold detector pipeline
 - ``streaming``   stateful streaming stages, exactly-once sink, listener
 """
 

@@ -34,7 +34,6 @@ from .fptree import StreamingFPGrowth
 from .models import (
     AggregatedRecordsWBaseline,
     AnomalyEvent,
-    Dimension,
     DimensionSummary,
     ItemsetWithCount,
     RCAResult,
@@ -255,10 +254,3 @@ class ExponentiallyDecayingEmergingItemsets:
         ret.sort(key=lambda x: (-x.num_records, -len(x.dimension_summaries)))
         return ret
 
-
-def make_summary_dimension(name: str, value: str, group: str | None = None, level: int = 1) -> Dimension:
-    """Convenience for CSV-style pre-aggregated rows (the reference's
-    readCSV convention, EWStreamingSummarizerTest.scala:19-51: every
-    attribute column is a level-1 dimension whose group is the column
-    name)."""
-    return Dimension(name, value, group if group is not None else name, level)

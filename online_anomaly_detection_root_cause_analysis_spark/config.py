@@ -120,14 +120,6 @@ def config_from_dict(d: dict) -> EngineConfig:
     )
 
 
-def config_from_json_file(path: str) -> EngineConfig:
-    """JSON twin of the reference's HOCON file (same key layout)."""
-    import json
-
-    with open(path) as f:
-        return config_from_dict(json.load(f))
-
-
 def web_pages_parent_value(child_name: str, child_value: str) -> str:
     """Parent dimension value derived from the child's, for the web
     pages hierarchy (tld <- domain <- host). Twin of the column

@@ -53,15 +53,6 @@ def _token_hash_col(tok, method: str):
     raise ValueError(f"unknown token hash {method!r}")
 
 
-def token_shingles(text_col, n: int = 3):
-    """Distinct n-token shingles, JVM-side: split -> slice windows."""
-    tokens = F.split(F.trim(text_col), r"\s+")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(tokens) - (n - 1), F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tokens, i, n)))
-    )
-
-
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup via content hash group-by: (doc_id, dup_group_size,
     group_min_id) for every doc belonging to a duplicate group."""

@@ -53,22 +53,6 @@ _Q_SLICE = 512
 _PAIR_SLICE = 200_000
 
 
-def make_bucket_udf(planes: list[list[float]]):
-    """Vectorized hyperplane bucketing: one numpy matmul per Arrow
-    batch (the expression form with aggregate()/zip_with() evaluates
-    interpreted per element — measured 10-100x slower)."""
-    mat = np.asarray(planes, dtype=np.float64).T  # (dim, bits)
-    weights = (1 << np.arange(mat.shape[1])).astype(np.int64)
-
-    @pandas_udf(T.LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        arr = np.stack(vecs.to_numpy())  # (n, dim)
-        bits = arr.astype(np.float64) @ mat > 0
-        return pd.Series(bits @ weights)
-
-    return bucket
-
-
 def make_multi_bucket_udf(table_planes: list[list[list[float]]]):
     """All L hash tables in ONE Arrow pass: stack every table's
     hyperplanes into a single (dim, L*bits) matrix, one matmul, then

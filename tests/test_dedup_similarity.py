@@ -1258,18 +1258,28 @@ def test_run_dedup_job_cli(spark, tmp_path, monkeypatch):
     assert kept2 == kept1
 
 
-def test_run_dedup_on_marker_only_candidates(spark, tmp_path, monkeypatch):
-    """A streaming candidates dir whose batches found no pair holds
-    only `_committed_` markers: jobs/run_dedup.py must read it as an
-    empty candidate table and keep every document as its own cluster."""
+def test_run_dedup_on_pairless_candidates(spark, tmp_path, monkeypatch):
+    """The streaming candidates query over pages that share no
+    near-duplicate text commits batches with no pair:
+    jobs/run_dedup.py must read its table as empty and keep every
+    document as its own cluster."""
     import importlib
     import os
     import sys
 
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
-        write_batch_idempotent,
+    from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
+        PagesSpec,
+        generate_pages,
+        read_pages_stream,
+    )
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
+        StreamingJob,
+    )
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        TailConfig,
     )
 
     sys.path.insert(
@@ -1277,23 +1287,40 @@ def test_run_dedup_on_marker_only_candidates(spark, tmp_path, monkeypatch):
     )
     run_dedup = importlib.import_module("run_dedup")
 
-    docs_pd = [(i, " ".join(f"w{i}x{j}" for j in range(8))) for i in range(6)]
-    in_dir = str(tmp_path / "docs")
-    spark.createDataFrame(docs_pd, "doc_id long, text string").write.parquet(in_dir)
-    cands_dir = str(tmp_path / "cands")
-    no_pairs = pa.table({"doc_a": pa.array([], pa.int64()), "doc_b": pa.array([], pa.int64())})
-    for batch_id in range(2):
-        write_batch_idempotent(no_pairs, batch_id, cands_dir)
-    assert all(f.startswith("_committed_") for f in os.listdir(cands_dir))
+    pdf = generate_pages(PagesSpec(n_pages=6)).sort_values("warc_ts")
+    pdf["text"] = [" ".join(f"w{i}x{j}" for j in range(8)) for i in range(len(pdf))]
+    pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
+    src = tmp_path / "pages"
+    src.mkdir()
+    for i, half in enumerate((pdf.iloc[:3], pdf.iloc[3:])):
+        path = src / f"chunk-{i:05d}.parquet"
+        pq.write_table(pa.Table.from_pandas(half, preserve_index=False), path)
+        os.utime(path, (1e9 + i, 1e9 + i))
 
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=None, tail=TailConfig(mode="zscore"),
+        fuzzy_dedup_col="text",
+    )
+    q = job.start_lsh_candidates_query(read_pages_stream(spark, str(src)))
+    q.processAllAvailable()
+    q.stop()
+    assert q.lastProgress is not None and q.lastProgress["batchId"] >= 1
+    assert spark.read.parquet(job.candidates_dir).count() == 0
+
+    docs = spark.createDataFrame(pdf[["url", "text"]]).select(
+        F.xxhash64("url").alias("doc_id"), "text"
+    )
+    in_dir = str(tmp_path / "docs")
+    docs.write.parquet(in_dir)
     out = str(tmp_path / "out")
     monkeypatch.setattr(
         sys, "argv",
-        ["run_dedup.py", "--input", in_dir, "--out", out, "--candidates", cands_dir],
+        ["run_dedup.py", "--input", in_dir, "--out", out,
+         "--candidates", job.candidates_dir],
     )
     run_dedup.main()
     kept = {r.doc_id for r in spark.read.parquet(out + "/keep").collect()}
-    assert kept == set(range(6))
+    assert kept == {r.doc_id for r in docs.collect()} and len(kept) == 6
 
 
 def test_mixture_weights_exact_integer_path(spark):

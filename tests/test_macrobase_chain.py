@@ -2,7 +2,9 @@
 reference's crown-jewel pipeline tests (EWStreamingSummarizerTest
 .scala:53-348), on deterministically re-synthesized fixtures
 (FIXTURES.md): specs match the reference tests; goldens are the same
-qualitative assertions (planted root cause is what gets reported)."""
+qualitative assertions (planted root cause is what gets reported).
+The chain is the streaming tail's own: StreamingTail in macrobase
+detection + macrobase RCA mode, one fixture row per window."""
 
 import pandas as pd
 import pytest
@@ -10,11 +12,15 @@ import pytest
 from online_anomaly_detection_root_cause_analysis_spark.algorithms.ewfeature import (
     EWFeatureSpec,
 )
+from online_anomaly_detection_root_cause_analysis_spark.algorithms.models import (
+    Dimension,
+)
 from online_anomaly_detection_root_cause_analysis_spark.algorithms.summarizer import (
     SummarizerSpec,
 )
-from online_anomaly_detection_root_cause_analysis_spark.detection.macrobase import (
-    run_macrobase_chain,
+from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+    StreamingTail,
+    TailConfig,
 )
 
 from .fixtures import make_sensor10k_power, make_sensor10k_temp, make_simple_low_metric
@@ -22,13 +28,31 @@ from .fixtures import make_sensor10k_power, make_sensor10k_temp, make_simple_low
 
 def _rows_from_df(df: pd.DataFrame, metric_col: str):
     """The reference readCSV convention (EWStreamingSummarizerTest
-    .scala:19-51): metric column = current = baseline; every other
-    column is a level-1 dimension."""
+    .scala:19-51): metric column = current; every other column is a
+    level-1 dimension whose group is its own name."""
     dim_cols = [c for c in df.columns if c != metric_col]
     for i, row in enumerate(df.itertuples(index=False)):
         d = row._asdict()
-        metric = float(d[metric_col])
-        yield i, metric, metric, {c: str(d[c]) for c in dim_cols}
+        yield i, float(d[metric_col]), {c: str(d[c]) for c in dim_cols}
+
+
+def _macrobase_tail(det: EWFeatureSpec, summ: SummarizerSpec) -> TailConfig:
+    return TailConfig(
+        mode="macrobase", rca_mode="macrobase",
+        detector_spec=det, summarizer_spec=summ,
+    )
+
+
+def _tail_rca(df: pd.DataFrame, metric_col: str, det, summ) -> list[dict]:
+    """Each fixture row through the streaming tail as one window whose
+    breakdown gives every dimension the row's metric; the rca rows."""
+    tail = StreamingTail(_macrobase_tail(det, summ))
+    out = []
+    for seq, current, dims in _rows_from_df(df, metric_col):
+        breakdown = {Dimension(n, v, n, 1): current for n, v in dims.items()}
+        rows = tail.process_window(seq, current, 1, breakdown)
+        out.extend(r for r in rows if r["row_type"] == "rca")
+    return out
 
 
 def _summaries(rows_long: list[dict]) -> list[list[tuple[str, str]]]:
@@ -51,7 +75,7 @@ def test_mad_analyzer_simple():
         summary_generation_period=99,
     )
     df = make_simple_low_metric()
-    out = run_macrobase_chain(_rows_from_df(df, "A5"), det, summ)
+    out = _tail_rca(df, "A5", det, summ)
     summaries = _summaries(out)
     assert len(summaries) >= 1
     # golden (reference asserts 1 summary whose top dimension is A1=0;
@@ -73,7 +97,7 @@ def test_sensor10k_power():
         summary_generation_period=9999,
     )
     df = make_sensor10k_power()
-    out = run_macrobase_chain(_rows_from_df(df, "power_drain"), det, summ)
+    out = _tail_rca(df, "power_drain", det, summ)
     summaries = _summaries(out)
     # golden: exactly one summary, its single dimension is device 2040
     assert len(summaries) == 1
@@ -93,7 +117,7 @@ def test_sensor10k_temp():
         attribute_combinations=True, summary_generation_period=9999,
     )
     df = make_sensor10k_temp()
-    out = run_macrobase_chain(_rows_from_df(df, "temperature"), det, summ)
+    out = _tail_rca(df, "temperature", det, summ)
     summaries = _summaries(out)
     assert len(summaries) >= 1
     # golden: every reported dimension is firmware 0.4 and/or M101,
@@ -110,9 +134,14 @@ def test_sensor10k_temp():
 
 
 def test_macrobase_spark_wrapper(spark):
-    """Same chain through the Spark applyInPandas wrapper."""
-    from online_anomaly_detection_root_cause_analysis_spark.detection.macrobase import (
-        macrobase_summaries,
+    """Same chain through the Spark batch replay (make_batch_tail), on
+    long-form aggregate rows: one window per fixture row, its metric as
+    the window total and as every dimension's sum. Dimensions reach
+    the tail ordered by name (rows_to_windows), which for A1..A4 is
+    the fixture's own column order."""
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        TOTAL_DIM,
+        make_batch_tail,
     )
 
     det = EWFeatureSpec(
@@ -126,16 +155,23 @@ def test_macrobase_spark_wrapper(spark):
         summary_generation_period=99,
     )
     df = make_simple_low_metric()
-    rows = [
-        (seq, cur, base, dims)
-        for seq, cur, base, dims in _rows_from_df(df, "A5")
+    long_form = [
+        (seq, name, value, name, 1, current, 1)
+        for seq, current, dims in _rows_from_df(df, "A5")
+        for name, value in [*dims.items(), (TOTAL_DIM, TOTAL_DIM)]
     ]
-    sdf = spark.createDataFrame(
-        rows, "seq long, current double, baseline double, dims map<string,string>"
+    aggs = spark.createDataFrame(
+        long_form,
+        "window_start_epoch long, dim_name string, dim_value string, "
+        "dim_group string, dim_level int, dim_sum double, dim_count long",
     )
-    out = macrobase_summaries(sdf, det, summ).collect()
+    out = (
+        make_batch_tail(aggs, _macrobase_tail(det, summ))
+        .filter("row_type = 'rca'")
+        .collect()
+    )
     # identical to the pure-Python run
-    pure = run_macrobase_chain(_rows_from_df(df, "A5"), det, summ)
+    pure = _tail_rca(df, "A5", det, summ)
     assert len(out) == len(pure)
     spark_set = sorted(
         (r.summary_id, r.num_records, r.dim_name, r.dim_value) for r in out

@@ -602,41 +602,6 @@ def test_sink_rerun_after_crash_before_marker(tmp_path, monkeypatch):
     assert pq.read_table(os.path.join(out, "part-0000000002-0000.parquet")).equals(table)
 
 
-def test_sink_streams_chunks_into_one_part_file(tmp_path):
-    """A batch handed over as Arrow chunks lands in one part file, empty
-    chunks included; only empty chunks commit the marker alone; a
-    replayed batch's chunks are still consumed, since consuming them is
-    what runs a lazily collected batch."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.sink import (
-        write_batch_idempotent,
-    )
-
-    out = str(tmp_path / "out")
-    schema = pa.schema([("x", pa.int64())])
-    consumed = []
-
-    def chunks(*values):
-        for v in values:
-            consumed.append(v)
-            yield pa.RecordBatch.from_pylist([{"x": x} for x in v], schema=schema)
-
-    assert write_batch_idempotent(chunks([], [1, 2], [], [3]), 0, out)
-    assert sorted(os.listdir(out)) == ["_committed_0000000000", "part-0000000000-0000.parquet"]
-    assert pq.read_table(os.path.join(out, "part-0000000000-0000.parquet"))["x"].to_pylist() == [1, 2, 3]
-
-    assert write_batch_idempotent(chunks([], []), 1, out)
-    assert _parts(out) == ["part-0000000000-0000.parquet"]
-
-    consumed.clear()
-    assert not write_batch_idempotent(chunks([9], [8]), 0, out)
-    assert consumed == [[9], [8]]
-    assert pq.read_table(os.path.join(out, "part-0000000000-0000.parquet"))["x"].to_pylist() == [1, 2, 3]
-    assert not [f for f in os.listdir(out) if f.startswith("_tmp_")]
-
-
 def _source_files_per_batch(ckpt: str) -> dict[int, set]:
     """File-source batch -> basenames it read, from the source's
     metadata log (plain and compacted entries)."""
@@ -715,6 +680,78 @@ def test_replayed_batches_are_skipped(spark, tmp_path, monkeypatch):
     read = _source_files_per_batch(os.path.join(job.work_dir, "checkpoints", "detect"))
     assert all(len(files) == 1 for files in read.values())
     assert sorted(f for files in read.values() for f in files) == agg_parts
+
+
+@pytest.mark.parametrize("fault", ["before_rca", "before_commit_log"])
+def test_detect_sink_fault_replays_to_an_uninterrupted_run(
+    spark, tmp_path, monkeypatch, fault
+):
+    """A raise inside one detect batch that has RCA rows: after
+    `alerts/` committed and before `rca/` is written (before_rca), or
+    after both commits and before Spark's commit log
+    (before_commit_log). The query fails; a restart without the fault
+    replays the batch, and `alerts/` and `rca/` equal an uninterrupted
+    run, with at most one part file per batch."""
+    from online_anomaly_detection_root_cause_analysis_spark.streaming import job as jobmod
+
+    fault_batch = 1
+    calls = []
+    armed = [True]
+    write = jobmod.write_batch_idempotent
+
+    def faulty_write(table, batch_id, out_dir, coalesce=1):
+        kind = os.path.basename(out_dir)
+        hit = armed[0] and batch_id == fault_batch and kind == "rca"
+        if hit and fault == "before_rca":
+            raise RuntimeError("injected fault before the rca commit")
+        wrote = write(table, batch_id, out_dir, coalesce)
+        calls.append((kind, batch_id, wrote))
+        if hit:
+            raise RuntimeError("injected fault before the commit log")
+        return wrote
+
+    monkeypatch.setattr(jobmod, "write_batch_idempotent", faulty_write)
+
+    pdf = generate_pages(PagesSpec(n_pages=1500)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 5)
+    # every window alerts, so every detect batch has alert and RCA rows
+    tail = TailConfig(mode="threshold", min_value=0, max_value=0)
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=CFG, tail=tail, size_s=300, slide_s=60,
+    )
+    q = job.start_aggregate_query(
+        build_page_records(read_pages_stream(spark, str(pages)), CFG)
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    q = job.start_detect_query(spark)
+    with pytest.raises(Exception, match="injected fault"):
+        q.processAllAvailable()
+    q.stop()
+    commits = os.path.join(job.work_dir, "checkpoints", "detect", "commits")
+    assert str(fault_batch) not in os.listdir(commits)
+    rca_part = f"part-{fault_batch:010d}-0000.parquet"
+    assert (rca_part in _parts(job.rca_dir)) == (fault == "before_commit_log")
+
+    armed[0] = False
+    calls.clear()
+    q = job.start_detect_query(spark)
+    q.processAllAvailable()
+    q.stop()
+    replayed = {(kind, wrote) for kind, b, wrote in calls if b == fault_batch}
+    assert replayed == {("alerts", False), ("rca", fault == "before_rca")}
+
+    gold = _run_job(spark, str(tmp_path / "gold"), str(pages), tail)
+    assert rca_part in _parts(gold.rca_dir)
+    for sub in ("alerts", "rca"):
+        got, want = (os.path.join(j.work_dir, sub) for j in (job, gold))
+        assert _parts(got) == _parts(want), sub
+        batches = [f.split("-")[1] for f in _parts(got)]
+        assert len(batches) == len(set(batches)), sub
+        assert _norm_rows(spark.read.parquet(got)) == _norm_rows(spark.read.parquet(want))
 
 
 def test_streaming_session_windows_match_batch(spark, tmp_path):
