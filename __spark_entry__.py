@@ -35,10 +35,6 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
 from online_anomaly_detection_root_cause_analysis_spark.functions.text import (
     LANG_MARKERS,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-    extract_audio_features,
-    extract_media_features,
-)
 from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
@@ -1243,153 +1239,6 @@ pairs AS (
 SELECT vec_a, vec_b, floor(cosine*10000 + 0.5)/10000 AS cosine
 FROM pairs WHERE cosine >= 0.9
 """
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing over a MIXED synthetic image corpus
-    (VERDICT r2 #7; r5 widens it per VERDICT r4 #6): each document
-    becomes a binary payload carrying one of the three real magics —
-    doc_id%4 routes to PNG (IHDR big-endian u32 dims at offset 16),
-    GIF89a (little-endian u16 dims at offset 6), baseline JPEG (APP0
-    segment to skip, then SOF0 with big-endian u16 height/width), or
-    JPEG with two 0xFF FILL BYTES before the SOF marker (the ITU
-    T.81 §B.1.1.2 padding branch of the parser) — followed by the
-    utf-8 text bytes. width = doc_id%500+1 and height = doc_id%300+1
-    in EVERY format, so the oracle recomputes both dims from doc_id
-    independently of the header bytes the engine parses
-    (operators/multimodal.py::parse_image_header). n_bytes covers the
-    per-format binary construction; content_sha gates the text content
-    (DuckDB's sha256 is VARCHAR-only, so the full-payload sha is not
-    SQL-reproducible for non-UTF8 binary); mean_byte (fake pixel
-    decode) is omitted from the compared output."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    w = (F.col("doc_id") % 500 + 1).cast("int")
-    h = (F.col("doc_id") % 300 + 1).cast("int")
-    text_bytes = F.encode("text", "utf-8")
-    be16 = lambda c: F.unhex(F.lpad(F.hex(c), 4, "0"))
-    png_payload = F.concat(
-        F.unhex(F.lit("89504E470D0A1A0A0000000D49484452")),  # magic+len+IHDR
-        F.unhex(F.lpad(F.hex(w), 8, "0")),
-        F.unhex(F.lpad(F.hex(h), 8, "0")),
-        F.unhex(F.lit("0806000000")),  # bit depth / color type / etc
-        text_bytes,
-    )  # 29-byte header
-    gif_payload = F.concat(
-        F.encode(F.lit("GIF89a"), "utf-8"),
-        _le_bytes(w, 2),
-        _le_bytes(h, 2),
-        text_bytes,
-    )  # 10-byte header
-    jpeg_payload = F.concat(
-        F.unhex(F.lit("FFD8")),            # SOI
-        F.unhex(F.lit("FFE000042020")),    # APP0 segment (len 4) to skip
-        F.unhex(F.lit("FFC0001108")),      # SOF0, seg len, precision
-        be16(h),
-        be16(w),
-        text_bytes,
-    )  # 17-byte header
-    jpeg_padded_payload = F.concat(
-        F.unhex(F.lit("FFD8")),
-        F.unhex(F.lit("FFFFFFC0001108")),  # two 0xFF fills, then SOF0
-        be16(h),
-        be16(w),
-        text_bytes,
-    )  # 13-byte header
-    branch = F.col("doc_id") % 4
-    payload = (
-        F.when(branch == 0, png_payload)
-        .when(branch == 1, gif_payload)
-        .when(branch == 2, jpeg_payload)
-        .otherwise(jpeg_padded_payload)
-    )
-    mime = (
-        F.when(branch == 0, F.lit("image/png"))
-        .when(branch == 1, F.lit("image/gif"))
-        .otherwise(F.lit("image/jpeg"))
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        payload.alias("payload"),
-        mime.alias("mime"),
-        F.lit(None).cast("string").alias("source_url"),
-        F.lit(None).cast("timestamp").alias("captured_ts"),
-    )
-    feats = extract_media_features(media, fake_decode=True)
-    content = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.sha2(F.col("text"), 256).alias("content_sha"),
-    )
-    return feats.join(content, "media_id").select(
-        "media_id", "n_bytes", "width", "height", "content_sha"
-    )
-
-
-def _le_bytes(col, n: int):
-    """Little-endian byte string of an integer column (n bytes) — for
-    synthesizing RIFF/WAVE headers in pure JVM expressions."""
-    return F.concat(
-        *[
-            F.unhex(
-                F.lpad(
-                    F.hex(
-                        F.shiftright(col.cast("long"), 8 * i).bitwiseAND(F.lit(255))
-                    ),
-                    2,
-                    "0",
-                )
-            )
-            for i in range(n)
-        ]
-    )
-
-
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio plumbing (r4) over SYNTHETIC WAV payloads —
-    the audio twin of media_features: each document becomes a byte-
-    valid RIFF/WAVE container (PCM fmt chunk with sample_rate/channels
-    derived from doc_id, the utf-8 text bytes as the data chunk)
-    assembled entirely in JVM expressions. The engine's features come
-    from the HEADER PARSER (operators/multimodal.py::parse_wav_header)
-    reading those bytes; the oracle recomputes every field from doc_id
-    and the text length independently. duration_ms is integer math
-    (frames*1000 // rate) so it replays exactly; payload sha is
-    replaced by the text content sha for the same DuckDB
-    VARCHAR-sha256 reason as media_features."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rate = (F.col("doc_id") % 8) * 1000 + 8000
-    ch = F.col("doc_id") % 2 + 1
-    block_align = ch * 2  # 16-bit PCM
-    data = F.encode("text", "utf-8")
-    dsize = F.octet_length(data)
-    wav_payload = F.concat(
-        F.unhex(F.lit("52494646")),            # 'RIFF'
-        _le_bytes(dsize + 36, 4),
-        F.unhex(F.lit("57415645666D7420")),    # 'WAVE' + 'fmt '
-        _le_bytes(F.lit(16), 4),               # fmt chunk size
-        _le_bytes(F.lit(1), 2),                # PCM
-        _le_bytes(ch, 2),
-        _le_bytes(rate, 4),
-        _le_bytes(rate * block_align, 4),      # byte rate
-        _le_bytes(block_align, 2),
-        _le_bytes(F.lit(16), 2),               # bits per sample
-        F.unhex(F.lit("64617461")),            # 'data'
-        _le_bytes(dsize, 4),
-        data,
-    )
-    # content_sha rides the SAME scan as the payload (r9):
-    # extract_audio_features passes non-payload columns through, so
-    # the old feats-to-content join (second scan + join) is gone
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        wav_payload.alias("payload"),
-        F.sha2(F.col("text"), 256).alias("content_sha"),
-    )
-    feats = extract_audio_features(media)
-    return feats.select(
-        "media_id", "n_bytes", "sample_rate", "channels",
-        "bits_per_sample", "n_frames", "duration_ms", "content_sha",
-    )
 
 
 # ------------------------------------------- hierarchical RCA over events
@@ -3069,7 +2918,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontamination": q_decontamination,
         "contamination_report": q_contamination_report,
         # -- changed r9 second pass (pane-based window aggregation):
-        # rotated in; audio_features/media_features/value_percentiles
+        # rotated in; value_percentiles
         # (r8-green, unchanged) rotated out to make room
         "dimension_breakdown": q_dimension_breakdown,
         "dimension_breakdown_salted": q_dimension_breakdown_salted,
@@ -3092,7 +2941,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sliding_window_sum": q_sliding_window_sum,
         "tumbling_window_sum": q_tumbling_window_sum,
         # -- r7-green remainder (window tail first, then the rest)
-        "audio_features": q_audio_features,
         "curation_pipeline": q_curation_pipeline,
         "pii_redaction": q_pii_redaction,
         "macrobase_summaries": q_macrobase_summaries,
@@ -3142,7 +2990,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r8-green, unchanged in the r9 second pass: rotated out for
         # the pane-based window-aggregation block at the front
         "sequence_packing": q_sequence_packing,
-        "media_features": q_media_features,
         "value_percentiles": q_value_percentiles,
     }
 
@@ -4396,22 +4243,6 @@ SELECT query_id, vec_id, floor(cosine*10000 + 0.5)/10000 AS cosine, rank
 FROM r WHERE rank <= 10
 """
 
-# synthetic-PNG twin: 29 header bytes (16 magic+len+IHDR, 8 dims,
-# 5 depth/color) + text; dimensions recomputed from doc_id — the
-# engine's come from parsing the actual header bytes
-_MEDIA_SQL = """
-SELECT doc_id AS media_id,
-       CASE doc_id % 4 WHEN 0 THEN 29   -- PNG magic+IHDR
-            WHEN 1 THEN 10              -- GIF89a logical screen
-            WHEN 2 THEN 17              -- JPEG SOI+APP0+SOF0
-            ELSE 13 END                 -- JPEG SOI+2 fill bytes+SOF0
-       + octet_length(encode(text)) AS n_bytes,
-       CAST(doc_id % 500 + 1 AS INTEGER) AS width,
-       CAST(doc_id % 300 + 1 AS INTEGER) AS height,
-       sha256(text) AS content_sha
-FROM documents
-"""
-
 _HEV = ("SELECT ts, value, event_type, CAST(user_id % 5 AS VARCHAR) AS user_band, "
         "CAST(user_id % 10 AS VARCHAR) AS user_bucket FROM events")
 
@@ -4779,19 +4610,6 @@ def oracle_sql() -> dict[str, str]:
         "embedding_topk_ivf": _EMB_BRUTE_SQL,
         # LSH blocking must find exactly the corpus-wide exact pair set
         "embedding_near_duplicates": _EMB_NEAR_DUP_SQL,
-        "media_features": _MEDIA_SQL,
-        "audio_features": """
-            SELECT doc_id AS media_id,
-                   44 + octet_length(encode(text)) AS n_bytes,
-                   CAST(8000 + (doc_id % 8)*1000 AS INT) AS sample_rate,
-                   CAST(1 + doc_id % 2 AS INT) AS channels,
-                   CAST(16 AS INT) AS bits_per_sample,
-                   octet_length(encode(text)) // ((1 + doc_id % 2)*2) AS n_frames,
-                   (octet_length(encode(text)) // ((1 + doc_id % 2)*2)) * 1000
-                       // (8000 + (doc_id % 8)*1000) AS duration_ms,
-                   sha256(text) AS content_sha
-            FROM documents
-        """,
         "length_histogram": """
 WITH keyed AS (
   SELECT lang AS key,

@@ -109,7 +109,7 @@ def build_tail(args: argparse.Namespace) -> TailConfig:
     )
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--work", required=True)
@@ -162,71 +162,16 @@ def main() -> None:
         "gate, e.g. \"value > 0\"); stateless map-side filter",
     )
     ap.add_argument(
-        "--decontaminate-against", default=None,
-        help="path to a parquet table of benchmark documents (column "
-        "'text'); stream pages sharing any word n-gram with it are "
-        "dropped BEFORE record building (eval-set decontamination "
-        "inside the ingest stream; the benchmark gram set is bounded "
-        "and broadcast once — operators/textstats.py::"
-        "streaming_decontaminate)",
-    )
-    ap.add_argument(
-        "--decontaminate-ngram", type=int, default=8,
-        help="n-gram size for --decontaminate-against (13 in the "
-        "GPT-3 §C convention; smaller for short-document corpora)",
-    )
-    ap.add_argument(
-        "--fuzzy-dedup-col", default=None,
-        help="page text column to run the streaming MinHash-LSH "
-        "fuzzy-dedup candidate stage over (e.g. text): a third query "
-        "writes near-dup candidate pairs (keyed by xxhash64(url)) to "
-        "<work>/near_dup_candidates for the offline verify/cluster "
-        "jobs; state is band-bucket-keyed and bounded by the "
-        "--fuzzy-watermark span",
-    )
-    ap.add_argument(
-        "--fuzzy-watermark", default="1 hour",
-        help="event-time span fuzzy-dedup candidate state lives for",
-    )
-    ap.add_argument(
-        "--fuzzy-old-banded", default=None,
-        help="path to the curated corpus's banded-signature table "
-        "(banded_signature_table output): the candidates query also "
-        "probes it per micro-batch (stream-static band join, zero "
-        "state) and emits cross-snapshot candidates with side='old' "
-        "— the streaming fuzzy tier of the monthly-refresh pattern",
-    )
-    ap.add_argument(
-        "--fuzzy-bands", type=int, default=32,
-        help="LSH band count for the fuzzy-dedup candidate stage; "
-        "MUST equal the banding of --fuzzy-old-banded's table "
-        "(asserted at startup via the table's stamped metadata)",
-    )
-    ap.add_argument(
-        "--fuzzy-num-hashes", type=int, default=64,
-        help="MinHash signature length for the fuzzy-dedup stage",
-    )
-    ap.add_argument(
-        "--fuzzy-ngram", type=int, default=3,
-        help="shingle size for the fuzzy-dedup MinHash signatures",
-    )
-    ap.add_argument(
-        "--fuzzy-seed", type=int, default=7,
-        help="MinHash permutation seed for the fuzzy-dedup stage",
-    )
-    ap.add_argument(
-        "--fuzzy-max-group", type=int, default=1000,
-        help="hot-bucket cap: LSH buckets (stream state AND the "
-        "old-banded probe side) beyond this size stop pairing",
-    )
-    ap.add_argument(
         "--hierarchy-from-data", action="store_true",
         help="resolve hierarchical-RCA parent values from per-window "
         "co-occurrence (parent = independent record field) instead of "
         "deriving them from the child value",
     )
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
+
+def main() -> None:
+    args = parse_args()
     spark = get_spark(app_name="online-ad-rca")
     spark.streams.addListener(
         LineageMetricsListener(os.path.join(args.work, "metrics.jsonl"))
@@ -238,32 +183,13 @@ def main() -> None:
         with_hierarchy=args.hierarchy_from_data, key=args.key,
         dedup_col=args.dedup_col,
         pre_filter=args.pre_filter,
-        fuzzy_dedup_col=args.fuzzy_dedup_col,
-        fuzzy_watermark=args.fuzzy_watermark,
-        fuzzy_old_banded_path=args.fuzzy_old_banded,
-        fuzzy_n=args.fuzzy_ngram,
-        fuzzy_num_hashes=args.fuzzy_num_hashes,
-        fuzzy_bands=args.fuzzy_bands,
-        fuzzy_seed=args.fuzzy_seed,
-        fuzzy_max_group=args.fuzzy_max_group,
     )
     pages = read_pages_stream(spark, args.input, args.max_files_per_trigger)
-    if args.decontaminate_against:
-        from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-            streaming_decontaminate,
-        )
-
-        bench = spark.read.parquet(args.decontaminate_against).select("text")
-        pages = streaming_decontaminate(pages, bench, n=args.decontaminate_ngram)
     stream = build_page_records(pages, cfg)
     q1 = job.start_aggregate_query(stream)
     q2 = job.start_detect_query(spark)
-    extra = ""
-    if args.fuzzy_dedup_col:
-        q3 = job.start_lsh_candidates_query(pages)
-        extra = f" lsh_candidates={q3.id} -> {job.candidates_dir},"
     print(
-        f"aggregate={q1.id} detect={q2.id};{extra} "
+        f"aggregate={q1.id} detect={q2.id}; "
         f"alerts -> {job.alerts_dir}, rca -> {job.rca_dir}"
     )
     spark.streams.awaitAnyTermination()

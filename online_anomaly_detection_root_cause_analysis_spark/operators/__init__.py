@@ -1,3 +1,8 @@
+"""Windowed aggregation, baselines, detectors and RCA contributor
+finders. The text-curation operators (`dedup`, `similarity`,
+`textstats`) are not re-exported: import them by module, so the
+AD/RCA path never loads them."""
+
 from .windows import (
     dimension_breakdown,
     session_window_agg,
@@ -7,35 +12,9 @@ from .windows import (
 from .baseline import breakdown_with_baseline, with_offset_baseline
 from .threshold import threshold_alerts
 from .contributors import simple_contributors, hierarchical_contributors
-from .dedup import (
-    exact_duplicates,
-    minhash_lsh_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash_pairs,
-)
-from .similarity import brute_force_topk, lsh_topk
-from .textstats import (
-    document_fingerprints,
-    document_language_id,
-    document_text_stats,
-)
-from .multimodal import extract_media_features, frame_sample_plan
 
 __all__ = [
     "breakdown_with_baseline",
-    "brute_force_topk",
-    "document_fingerprints",
-    "document_language_id",
-    "document_text_stats",
-    "exact_duplicates",
-    "extract_media_features",
-    "frame_sample_plan",
-    "lsh_topk",
-    "minhash_lsh_pairs",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "simhash_pairs",
     "dimension_breakdown",
     "hierarchical_contributors",
     "session_window_agg",

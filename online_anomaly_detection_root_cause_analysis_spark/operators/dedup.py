@@ -623,9 +623,8 @@ def verify_candidate_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard verification of a CANDIDATE pair table
     (doc_a, doc_b) — the verify stage of `near_duplicates`, public so
-    the offline job of the two-job streaming topology can consume a
-    MATERIALIZED candidate table (the streaming LSH query's
-    near_dup_candidates output, or incremental probes) instead of
+    a batch job can verify a MATERIALIZED candidate table (the written
+    output of streaming_minhash_lsh, or incremental probes) instead of
     regenerating candidates in-query. Same df_cap hot-shingle pruning
     and no-broadcast-hint contract as near_duplicates (see its
     docstring for the measured rationale).
@@ -845,10 +844,8 @@ def streaming_minhash_lsh(
     LSH candidacy needs exact-Jaccard verification, and a per-doc
     any-band rollup would be a second stateful operator in the same
     query (illegal) for a decision the batch verify job makes anyway.
-    Production topology: this stage writes the candidate table online
-    (see StreamingJob.start_lsh_candidates_query); `near_duplicates`-
-    style verification and `near_dup_clusters` consume it offline —
-    the same two-job split the batch docstrings already prescribe.
+    Verification stays a batch step: `verify_candidate_pairs` and
+    `near_dup_clusters` consume the written candidate table.
 
     State is bounded by (buckets live in one watermark span) x
     max_group: a bucket admits at most `max_group` live docs (further
@@ -974,8 +971,8 @@ def streaming_incremental_lsh(
     column: 'old' rows are (curated doc_a, stream doc_b) band
     collisions, 'new' rows the in-stream (earlier, later) pairs.
     Candidates — not drops — remain the correct streaming primitive
-    (see streaming_minhash_lsh); the offline verify/cluster jobs
-    consume the candidate table exactly as they consume
+    (see streaming_minhash_lsh); verify_candidate_pairs and
+    near_dup_clusters consume the candidate table exactly as they consume
     incremental_near_dups' candidate stage, whose batch semantics the
     BATCH twin of this function reproduces (parity-tested: same
     corpus, same old side, same pair set).

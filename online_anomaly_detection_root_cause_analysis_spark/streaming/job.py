@@ -211,57 +211,15 @@ class StreamingJob:
     # watermark span of distinct keys
     dedup_col: str | None = None
     # SQL boolean expression applied to records BEFORE dedup/watermark/
-    # aggregation (r5): the streaming twin of the batch quality gate —
-    # e.g. "value > 0" or a gopher-rule expression over record columns.
+    # aggregation, e.g. "value > 0" over record columns.
     # Pure map-side (stateless), so it rides the source scan with zero
     # extra stages and shrinks everything downstream (dedup state,
     # shuffle volume, window totals)
     pre_filter: str | None = None
 
-    # text/content column to run the streaming MinHash-LSH fuzzy-dedup
-    # candidate stage over (r5 VERDICT #3). None = stage off. When set,
-    # start_lsh_candidates_query() runs as a THIRD query alongside
-    # aggregate/detect, writing near-dup candidate pairs to
-    # candidates_dir for the offline verify/cluster jobs — candidates
-    # online, verification offline (the two-job topology the batch
-    # dedup docstrings prescribe)
-    fuzzy_dedup_col: str | None = None
-    fuzzy_watermark: str = "1 hour"
-    # record column identifying the document for candidate pairs
-    # (north_star: streams are keyed by url). Non-integral columns are
-    # keyed by xxhash64 — deterministic, so the offline verify job
-    # recomputes the same key from the same column
-    fuzzy_id_col: str = "url"
-    # event-time column of the frame passed to the candidates query
-    # (the raw page stream uses warc_ts; built records use ts)
-    fuzzy_ts_col: str = "warc_ts"
-    # path to the curated corpus's persisted banded-signature table
-    # (operators/dedup.py::banded_signature_table). When set, the
-    # candidates query also probes it per micro-batch (stream-static
-    # equi-join on band keys, zero state) and emits cross-snapshot
-    # candidates with side='old' — the streaming fuzzy tier of the
-    # incremental_near_dups monthly-refresh pattern
-    fuzzy_old_banded_path: str | None = None
-    # LSH banding parameters for the candidates query (r7 ADVICE:
-    # previously unexposed, so the old-banded probe silently used
-    # defaults that mismatched banded_signature_table's bands=32 and
-    # emitted zero side='old' rows). These MUST equal the parameters
-    # the old banded table was built with — the table's stamped
-    # column metadata is asserted at plan time
-    fuzzy_n: int = 3
-    fuzzy_num_hashes: int = 64
-    fuzzy_bands: int = 32
-    fuzzy_seed: int = 7
-    fuzzy_token_hash: str = "xxhash64"
-    fuzzy_max_group: int = 1000
-
     @property
     def aggs_dir(self) -> str:
         return os.path.join(self.work_dir, "aggs")
-
-    @property
-    def candidates_dir(self) -> str:
-        return os.path.join(self.work_dir, "near_dup_candidates")
 
     @property
     def alerts_dir(self) -> str:
@@ -300,81 +258,6 @@ class StreamingJob:
                 .queryName("aggregate")
                 .start()
             )
-
-    def start_lsh_candidates_query(self, records_stream: DataFrame):
-        """Streaming MinHash-LSH fuzzy-dedup candidate stage (requires
-        fuzzy_dedup_col): a third query beside aggregate/detect that
-        writes near-duplicate candidate pairs to candidates_dir. State
-        is bucket-keyed and watermark-bounded (see
-        operators/dedup.py::streaming_minhash_lsh); the offline
-        verify/cluster jobs (near_duplicates / near_dup_clusters)
-        consume the candidate table.
-
-        The table is Spark's own parquet file sink: executors write the
-        pairs, and each batch commits once through the directory's
-        `_spark_metadata` log, which skips a replayed batch. A batch
-        has no size bound (a trigger of m copies of one text emits
-        m(m-1)/2 pairs per band, m up to max_group), so no row passes
-        through the driver. Read the table with Spark, which lists
-        committed files from that log."""
-        from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-        if self.fuzzy_dedup_col is None:
-            raise ValueError("fuzzy_dedup_col is not configured")
-        from ..operators.dedup import streaming_minhash_lsh
-
-        # NOTE: no pre_filter here — it is a RECORD-column expression
-        # and this query consumes the raw page stream; candidates
-        # should cover the whole crawl regardless of the metric gate
-        src = records_stream
-        id_type = src.schema[self.fuzzy_id_col].dataType
-        if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-            doc_key = F.col(self.fuzzy_id_col).cast("long")
-        else:
-            doc_key = F.xxhash64(F.col(self.fuzzy_id_col))
-        src = src.select(
-            doc_key.alias("_fuzzy_id"),
-            F.col(self.fuzzy_ts_col).alias("_fuzzy_ts"),
-            F.col(self.fuzzy_dedup_col),
-        )
-        banding = dict(
-            n=self.fuzzy_n,
-            num_hashes=self.fuzzy_num_hashes,
-            bands=self.fuzzy_bands,
-            seed=self.fuzzy_seed,
-            token_hash=self.fuzzy_token_hash,
-            max_group=self.fuzzy_max_group,
-        )
-        if self.fuzzy_old_banded_path is not None:
-            from ..operators.dedup import streaming_incremental_lsh
-
-            old_banded = src.sparkSession.read.parquet(self.fuzzy_old_banded_path)
-            cands = streaming_incremental_lsh(
-                src,
-                old_banded,
-                ts="_fuzzy_ts",
-                text_col=self.fuzzy_dedup_col,
-                id_col="_fuzzy_id",
-                watermark=self.fuzzy_watermark,
-                **banding,
-            )
-        else:
-            cands = streaming_minhash_lsh(
-                src,
-                ts="_fuzzy_ts",
-                text_col=self.fuzzy_dedup_col,
-                id_col="_fuzzy_id",
-                watermark=self.fuzzy_watermark,
-                **banding,
-            )
-        return (
-            cands.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", self.candidates_dir)
-            .option("checkpointLocation", self._ckpt("lsh_candidates"))
-            .queryName("lsh_candidates")
-            .start()
-        )
 
     def start_detect_query(self, spark: SparkSession):
         # detect normally starts CONCURRENTLY with the aggregate query

@@ -14,12 +14,6 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-    decode_image_batch,
-    extract_media_features,
-    frame_sample_plan,
-    make_fake_media,
-)
 from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
@@ -197,52 +191,6 @@ def test_lsh_topk_recall_vs_brute_force(spark):
     assert all(q == v for q, v in top.items())
 
 
-def test_image_header_parsing():
-    """PNG/GIF/JPEG dimensions from header bytes alone (VERDICT r2
-    #7), no decode libs: constructed fixtures for each magic, plus the
-    not-an-image and truncated fallbacks."""
-    import struct
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        parse_image_header,
-    )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-        + struct.pack(">II", 640, 480) + b"\x08\x06\x00\x00\x00" + b"rest"
-    )
-    assert parse_image_header(png) == (640, 480)
-
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\xf7\x00\x00tail"
-    assert parse_image_header(gif) == (320, 200)
-
-    # JPEG: SOI, APP0 segment (16 bytes), then SOF0 with dims
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 768, 1024)  # height, width
-        + b"\x03" + b"\x00" * 9
-    )
-    assert parse_image_header(jpeg) == (1024, 768)
-
-    assert parse_image_header(b"plain text, not an image") is None
-    assert parse_image_header(png[:12]) is None  # truncated PNG header
-    assert parse_image_header(b"\xff\xd8\xff\xe0\x00\x04\x00\x00") is None
-
-    # decode_image_batch prefers the parsed header over the fake
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        decode_image_batch,
-    )
-
-    out = decode_image_batch(pd.Series([png, gif, jpeg, b"x" * 100]), fake=True)
-    assert list(zip(out.width, out.height)) == [
-        (640, 480), (320, 200), (1024, 768), (10, 10)
-    ]
-
-
 def test_embedding_near_duplicates_coverage(spark):
     """Embedding-cosine near-dup: the LSH-blocked pair set must equal
     the exact corpus-wide pair set on the planted-dup corpus (the
@@ -303,178 +251,6 @@ def test_embedding_topk_lsh_operating_point_covers_brute(spark):
         for r in lsh_topk(emb, queries, k=10, bits=5, tables=16, multiprobe=5).collect()
     }
     assert ann == brute
-
-
-def test_resize_images(spark):
-    """Resize plumbing: header-parsed dims drive an aspect-preserving
-    nearest-neighbor downsample; output is byte-deterministic and the
-    pixel buffer length equals out_width*out_height."""
-    import struct
-
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        resize_images,
-    )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-        + struct.pack(">II", 200, 100) + b"\x08\x06\x00\x00\x00" + bytes(range(256)) * 4
-    )
-    rows = [
-        (1, "image", png, "image/png", None, None),
-        (2, "image", b"j" * 900, "image/fake", None, None),  # fake 30x30
-        (3, "image", b"", "image/fake", None, None),         # empty payload
-    ]
-    media = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[
-            "media_id", "kind", "payload", "mime", "source_url", "captured_ts",
-        ]),
-        schema=MEDIA_SCHEMA,
-    )
-    out = {r.media_id: r for r in resize_images(media, max_dim=64).collect()}
-    r1 = out[1]
-    assert (r1.width, r1.height) == (200, 100)  # header-parsed, not fake
-    assert (r1.out_width, r1.out_height) == (64, 32)  # aspect preserved
-    assert len(r1.pixels) == 64 * 32
-    r2 = out[2]
-    assert (r2.width, r2.height) == (30, 30)
-    assert (r2.out_width, r2.out_height) == (30, 30)  # never upscale
-    assert bytes(r2.pixels) == b"j" * 900
-    assert out[3].out_width == 1 and out[3].out_height == 1
-    # byte-deterministic across runs
-    again = {r.media_id: bytes(r.pixels) for r in resize_images(media, max_dim=64).collect()}
-    assert {k: bytes(v.pixels) for k, v in out.items()} == again
-
-
-def test_multimodal_plumbing(spark):
-    media = make_fake_media(spark, n=120)
-    feats = extract_media_features(media, fake_decode=True)
-    rows = feats.collect()
-    assert len(rows) == 120
-    for r in rows[:10]:
-        assert r.width * r.height <= r.n_bytes
-        assert 0 <= r.mean_byte <= 255
-        assert len(r.payload_sha) == 64
-    # the real-decoder path is stubbed
-    import pandas as pd
-
-    with pytest.raises(NotImplementedError):
-        decode_image_batch(pd.Series([b"xx"]), fake=False)
-    # frame sampling plan explodes deterministically
-    plan = frame_sample_plan(media, every_n=10)
-    assert plan.filter(F.col("frame_idx") % 10 != 0).count() == 0
-    assert plan.count() > 0
-
-
-def test_corrupt_image_headers_fall_back():
-    """ADVICE r4 (medium): a header declaring w=0/h=0 or absurd dims
-    (2^31 x 2^31 in a 29-byte payload) must not crash the stage or
-    drive an unbounded allocation — _safe_dims rejects it and both
-    decode and resize fall back to the fake-decode path, exactly like
-    an unrecognized magic."""
-    import struct
-
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        _fake_decode,
-        _safe_dims,
-        decode_image_batch,
-        parse_image_header,
-    )
-
-    def png(w, h):
-        return (
-            b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-            + struct.pack(">II", w, h) + b"\x08\x06\x00\x00\x00" + b"body"
-        )
-
-    zero = png(0, 0)
-    zero_w = png(0, 480)
-    huge = png(2**31 - 1, 2**31 - 1)
-    gif_zero = b"GIF89a" + struct.pack("<HH", 0, 200) + b"\xf7\x00\x00tail"
-    ok = png(640, 480)
-
-    # raw parser still reports what the header SAYS...
-    assert parse_image_header(zero) == (0, 0)
-    assert parse_image_header(huge) == (2**31 - 1, 2**31 - 1)
-    # ...but the validated entry point rejects it
-    assert _safe_dims(zero) is None
-    assert _safe_dims(zero_w) is None
-    assert _safe_dims(huge) is None
-    assert _safe_dims(gif_zero) is None
-    assert _safe_dims(ok) == (640, 480)
-
-    out = decode_image_batch(pd.Series([zero, huge, gif_zero, ok]), fake=True)
-    for i, payload in enumerate([zero, huge, gif_zero]):
-        fw, fh, _ = _fake_decode(payload)
-        assert (out.width[i], out.height[i]) == (fw, fh)
-    assert (out.width[3], out.height[3]) == (640, 480)
-
-
-def test_corrupt_headers_resize_does_not_crash(spark):
-    """The resize stage over the same corrupt payloads completes and
-    emits sane (fake-dim) output — one bad file must not kill the
-    whole Spark stage."""
-    import struct
-
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        resize_images,
-    )
-
-    def png(w, h):
-        return (
-            b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-            + struct.pack(">II", w, h) + b"\x08\x06\x00\x00\x00" + b"body" * 8
-        )
-
-    rows = [
-        (1, "image", png(0, 0), "image/png", None, None),
-        (2, "image", png(2**31 - 1, 2**31 - 1), "image/png", None, None),
-        (3, "image", png(64, 32), "image/png", None, None),
-    ]
-    media = spark.createDataFrame(
-        pd.DataFrame(rows, columns=[
-            "media_id", "kind", "payload", "mime", "source_url", "captured_ts",
-        ]),
-        schema=MEDIA_SCHEMA,
-    )
-    out = {r.media_id: r for r in resize_images(media, max_dim=16).collect()}
-    assert len(out) == 3
-    for r in out.values():
-        assert r.width >= 1 and r.height >= 1
-        assert 1 <= r.out_width <= 16 and 1 <= r.out_height <= 16
-        assert len(r.pixels) == r.out_width * r.out_height
-    assert (out[3].width, out[3].height) == (64, 32)  # valid header kept
-
-
-def test_jpeg_fill_bytes_before_marker():
-    """ADVICE r4: JPEG permits runs of 0xFF fill bytes before a marker
-    (ITU T.81 B.1.1.2) — the scanner must skip them, not read a
-    'length' out of the padding and miss the SOF."""
-    import struct
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        parse_image_header,
-    )
-
-    jpeg_padded = (
-        b"\xff\xd8"
-        + b"\xff\xff\xff"                      # fill bytes before APP0
-        + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        + b"\xff\xff"                           # fill bytes before SOF0
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 480, 640)          # height, width
-        + b"\x03" + b"\x00" * 9
-    )
-    assert parse_image_header(jpeg_padded) == (640, 480)
-    # all-padding tail still returns None instead of looping/garbage
-    assert parse_image_header(b"\xff\xd8" + b"\xff" * 64) is None
 
 
 def test_ivf_topk_exhaustive_probe_equals_brute(spark):
@@ -638,65 +414,6 @@ def test_ivf_centroids_deterministic(spark):
     c1 = train_ivf_centroids(emb, n_centroids=8, seed=13)
     c2 = train_ivf_centroids(emb.repartition(7), n_centroids=8, seed=13)
     assert c1 == c2
-
-
-def test_wav_header_parsing(spark):
-    """RIFF/WAVE chunk-scan parser (audio twin of the image header
-    parser): canonical and extra-chunk layouts parse; truncated,
-    non-WAV, and degenerate-fmt payloads return None; the Spark op
-    emits NULL features for non-audio rows."""
-    import struct
-
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.multimodal import (
-        extract_audio_features,
-        parse_wav_header,
-    )
-
-    def wav(rate, ch, bits, data, extra_chunk=False):
-        ba = max(1, ch * bits // 8)
-        body = b""
-        if extra_chunk:  # LIST chunk before fmt — scanner must skip it
-            body += b"LIST" + struct.pack("<I", 4) + b"INFO"
-        body += b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, rate, rate * ba, ba, bits)
-        body += b"data" + struct.pack("<I", len(data)) + data
-        return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-    assert parse_wav_header(wav(16000, 2, 16, b"ab" * 200)) == (16000, 2, 16, 100)
-    assert parse_wav_header(wav(8000, 1, 16, b"ab" * 7, extra_chunk=True)) == (8000, 1, 16, 7)
-    assert parse_wav_header(b"not a wav") is None
-    assert parse_wav_header(b"RIFF\x00\x00\x00\x00WAVE") is None  # no chunks
-    assert parse_wav_header(wav(0, 2, 16, b"abcd")) is None       # rate 0
-    assert parse_wav_header(wav(8000, 0, 16, b"abcd")) is None    # 0 channels
-
-    # ADVICE r4: a lying 'data' size (0xFFFFFFFF declared, 8 real
-    # bytes) must be clamped to the bytes actually present — frames
-    # count real payload, not the declared size.
-    lying = wav(8000, 1, 16, b"ab" * 4)
-    lying = lying[: len(lying) - 8 - 4] + struct.pack("<I", 0xFFFFFFFF) + b"ab" * 4
-    assert parse_wav_header(lying) == (8000, 1, 16, 4)
-    # fully truncated data chunk (declared 100, zero bytes present)
-    hdr_only = wav(8000, 1, 16, b"x" * 100)[:-100]
-    assert parse_wav_header(hdr_only) == (8000, 1, 16, 0)
-
-    rows = [
-        (1, wav(44100, 2, 16, b"\x01\x02" * 441)),
-        (2, b"plain text payload"),
-    ]
-    media = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["media_id", "payload"]),
-        schema="media_id long, payload binary",
-    )
-    out = {r.media_id: r for r in extract_audio_features(media).collect()}
-    r1 = out[1]
-    assert (r1.sample_rate, r1.channels, r1.bits_per_sample) == (44100, 2, 16)
-    assert r1.n_frames == 441//2  # 882 bytes / block_align 4
-    assert r1.duration_ms == r1.n_frames * 1000 // 44100
-    assert len(r1.payload_sha) == 64
-    r2 = out[2]
-    assert r2.sample_rate is None and r2.n_frames is None  # honest NULL
-    assert r2.n_bytes == len(b"plain text payload")
 
 
 def test_repetition_ratios_and_quality_filter(spark):
@@ -1209,18 +926,19 @@ def test_mixture_weights_upweights_low_resource(spark):
     assert abs(sum(r["p_sample"] for r in out.values()) - 1.0) < 1e-5
 
 
-def test_run_dedup_job_cli(spark, tmp_path, monkeypatch):
-    """jobs/run_dedup.py end-to-end, both provenance branches of the
-    auto clusterer rule (r6 VERDICT #8): without --candidates it
-    generates LSH candidates in-job and clusters with PROPAGATION;
-    with a pre-accumulated --candidates table it verifies via
-    verify_candidate_pairs and clusters with STAR. Both keep-lists
-    must agree (the rule changes cost shape, never results)."""
-    import importlib
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    run_dedup = importlib.import_module("run_dedup")
+def test_candidate_table_verify_and_star_match_in_query_clusters(spark):
+    """The two ways to cluster near-dups agree (r6 VERDICT #8): LSH
+    candidates verified in-query (`near_duplicates`) and clustered by
+    PROPAGATION keep the same documents as a materialized candidate
+    table verified by `verify_candidate_pairs` and clustered by STAR
+    (the clusterer rule changes cost shape, never results). A
+    candidate table with no pair keeps every document."""
+    from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
+        near_dup_clusters,
+        near_dup_clusters_star,
+        near_duplicates,
+        verify_candidate_pairs,
+    )
 
     docs_pd = [
         (i, " ".join(f"w{i}x{j}" for j in range(8))) for i in range(20)
@@ -1229,98 +947,28 @@ def test_run_dedup_job_cli(spark, tmp_path, monkeypatch):
     body = "the quick brown fox jumps over the lazy dog by the river today"
     docs_pd += [(100 + k, body + f" tail{k}") for k in range(4)]
     docs = spark.createDataFrame(docs_pd, "doc_id long, text string")
-    in_dir = str(tmp_path / "docs")
-    docs.write.parquet(in_dir)
 
-    def run(argv):
-        monkeypatch.setattr(sys, "argv", ["run_dedup.py"] + argv)
-        run_dedup.main()
+    def kept(clusters):
+        return {
+            r.doc_id
+            for r in clusters.filter(F.col("doc_id") == F.col("cluster_rep")).collect()
+        }
 
-    out1 = str(tmp_path / "out_prop")
-    run(["--input", in_dir, "--out", out1])
-    kept1 = {r.doc_id for r in spark.read.parquet(out1 + "/keep").collect()}
+    in_query = near_duplicates(docs, n=3, threshold=0.3, num_hashes=64, bands=16)
+    kept1 = kept(near_dup_clusters(in_query.select("doc_a", "doc_b"), all_docs=docs))
     # min-id representative of the planted cluster survives, rest drop
     assert 100 in kept1 and not {101, 102, 103} & kept1
     assert all(i in kept1 for i in range(20))
 
-    # pre-accumulated candidate table -> auto picks star
-    from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    cands_dir = str(tmp_path / "cands")
-    minhash_lsh_pairs(docs, bands=16).select("doc_a", "doc_b").write.parquet(
-        cands_dir
-    )
-    out2 = str(tmp_path / "out_star")
-    run(["--input", in_dir, "--out", out2, "--candidates", cands_dir])
-    kept2 = {r.doc_id for r in spark.read.parquet(out2 + "/keep").collect()}
+    cands = minhash_lsh_pairs(docs, bands=16).select("doc_a", "doc_b").distinct()
+    verified = verify_candidate_pairs(docs, cands, n=3, threshold=0.3)
+    kept2 = kept(near_dup_clusters_star(verified.select("doc_a", "doc_b"), all_docs=docs))
     assert kept2 == kept1
 
-
-def test_run_dedup_on_pairless_candidates(spark, tmp_path, monkeypatch):
-    """The streaming candidates query over pages that share no
-    near-duplicate text commits batches with no pair:
-    jobs/run_dedup.py must read its table as empty and keep every
-    document as its own cluster."""
-    import importlib
-    import os
-    import sys
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
-        PagesSpec,
-        generate_pages,
-        read_pages_stream,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        StreamingJob,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-    )
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs")
-    )
-    run_dedup = importlib.import_module("run_dedup")
-
-    pdf = generate_pages(PagesSpec(n_pages=6)).sort_values("warc_ts")
-    pdf["text"] = [" ".join(f"w{i}x{j}" for j in range(8)) for i in range(len(pdf))]
-    pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
-    src = tmp_path / "pages"
-    src.mkdir()
-    for i, half in enumerate((pdf.iloc[:3], pdf.iloc[3:])):
-        path = src / f"chunk-{i:05d}.parquet"
-        pq.write_table(pa.Table.from_pandas(half, preserve_index=False), path)
-        os.utime(path, (1e9 + i, 1e9 + i))
-
-    job = StreamingJob(
-        work_dir=str(tmp_path / "job"), cfg=None, tail=TailConfig(mode="zscore"),
-        fuzzy_dedup_col="text",
-    )
-    q = job.start_lsh_candidates_query(read_pages_stream(spark, str(src)))
-    q.processAllAvailable()
-    q.stop()
-    assert q.lastProgress is not None and q.lastProgress["batchId"] >= 1
-    assert spark.read.parquet(job.candidates_dir).count() == 0
-
-    docs = spark.createDataFrame(pdf[["url", "text"]]).select(
-        F.xxhash64("url").alias("doc_id"), "text"
-    )
-    in_dir = str(tmp_path / "docs")
-    docs.write.parquet(in_dir)
-    out = str(tmp_path / "out")
-    monkeypatch.setattr(
-        sys, "argv",
-        ["run_dedup.py", "--input", in_dir, "--out", out,
-         "--candidates", job.candidates_dir],
-    )
-    run_dedup.main()
-    kept = {r.doc_id for r in spark.read.parquet(out + "/keep").collect()}
-    assert kept == {r.doc_id for r in docs.collect()} and len(kept) == 6
+    no_pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    lone = verify_candidate_pairs(docs, no_pairs, n=3, threshold=0.3)
+    kept3 = kept(near_dup_clusters_star(lone.select("doc_a", "doc_b"), all_docs=docs))
+    assert kept3 == {r.doc_id for r in docs.collect()}
 
 
 def test_mixture_weights_exact_integer_path(spark):

@@ -1161,6 +1161,139 @@ def test_streaming_job_pre_filter(spark, tmp_path):
     assert _norm_rows(unfiltered) != _norm_rows(baseline)
 
 
+def test_run_streaming_cli_end_to_end(spark, tmp_path, monkeypatch):
+    """The AD/RCA job through the real CLI: jobs/run_streaming.py
+    `main()` with real argv (keyed z-score detector, hierarchical RCA,
+    url dedup) over page files, one of which carries a re-fetch of a
+    page from the file before it. Checks the glue the parity tests do
+    not: argv parsing, the record pipeline the CLI builds and the two
+    queries it starts. `aggs/` equals the batch aggregation over the
+    deduplicated records; `alerts/` and `rca/` equal a replay of the
+    committed `aggs/` parts through the tail `build_tail` makes from
+    the same argv."""
+    import importlib
+    import sys
+    import threading
+    import time
+
+    import pandas as pd
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "jobs")
+    )
+    run_streaming = importlib.import_module("run_streaming")
+
+    pdf = (
+        generate_pages(PagesSpec(n_pages=2000))
+        .sort_values("warc_ts")
+        .drop_duplicates("url")
+        .reset_index(drop=True)
+    )
+    chunk = (len(pdf) + 3) // 4
+    parts = [pdf.iloc[i * chunk : (i + 1) * chunk] for i in range(4)]
+    # a crawl re-fetch: the last page of file 0 arrives again, with a
+    # longer body, at the head of file 1 (event time one second later,
+    # well inside the watermark span)
+    original = parts[0].tail(1)
+    refetch = original.assign(
+        warc_ts=(original["warc_ts"] + pd.Timedelta(seconds=1)).astype(
+            original["warc_ts"].dtype
+        ),
+        text=original["text"] + " refetched body",
+    )
+    parts[1] = pd.concat([refetch, parts[1]])
+    src = tmp_path / "pages"
+    src.mkdir()
+    for i, part in enumerate(parts):
+        _write_chunks(part, src, 1, start_idx=i)
+    work = str(tmp_path / "work")
+
+    argv = [
+        "--input", str(src),
+        "--work", work,
+        "--detector", "zscore",
+        "--rca", "hierarchical",
+        "--key", "lang",
+        "--dedup-col", "url",
+        "--ewma-alpha", "0.2",
+        "--ewma-z", "1.0",
+        "--watermark", "10 minutes",
+        "--max-files-per-trigger", "1",
+    ]
+    # main() blocks on awaitAnyTermination, so it runs on a thread and
+    # the test drains and stops its queries through spark.streams.
+    # awaitAnyTermination re-raises the failure of any query an earlier
+    # test left behind in this session until the manager is reset
+    spark.streams.resetTerminated()
+    monkeypatch.setattr(sys, "argv", ["run_streaming.py", *argv])
+    t = threading.Thread(target=run_streaming.main, daemon=True)
+    t.start()
+    deadline = time.time() + 120
+    live: set = set()
+    while time.time() < deadline:
+        live = {q.name for q in spark.streams.active}
+        if {"aggregate", "detect"} <= live:
+            break
+        time.sleep(0.5)
+    else:
+        pytest.fail(f"streaming queries never started: {live}")
+    by_name = {q.name: q for q in spark.streams.active}
+    by_name["aggregate"].processAllAvailable()
+    by_name["detect"].processAllAvailable()
+    for q in spark.streams.active:
+        q.stop()
+    t.join(timeout=60)
+    assert not t.is_alive()
+
+    aggs_dir = os.path.join(work, "aggs")
+    streamed = spark.read.parquet(aggs_dir)
+    emitted = [
+        r.window_start_epoch
+        for r in streamed.select("window_start_epoch").distinct().collect()
+    ]
+    assert emitted
+
+    def batch_aggs(frame):
+        records = build_page_records(
+            spark.createDataFrame(frame, schema=pages_schema()), CFG
+        )
+        return long_form_window_aggs(records, CFG, 300, 60, key="lang").filter(
+            F.col("window_start_epoch").isin(emitted)
+        )
+
+    assert _norm_rows(streamed) == _norm_rows(batch_aggs(pdf))
+    # without the dedup the re-fetch would have changed the sums
+    assert _norm_rows(streamed) != _norm_rows(batch_aggs(pd.concat(parts)))
+
+    tail_cfg = run_streaming.build_tail(run_streaming.parse_args(argv))
+    tails: dict = {}
+    expected = []
+    for f in sorted(os.listdir(aggs_dir)):
+        if not f.endswith(".parquet"):
+            continue
+        part = pd.read_parquet(os.path.join(aggs_dir, f))
+        for key, sub in part.groupby("tail_key", sort=True):
+            tail = tails.setdefault(key, StreamingTail(tail_cfg))
+            for ws, cur, rec, bd, hier in rows_to_windows(sub):
+                for row in tail.process_window(ws, cur, rec, bd, hier):
+                    expected.append({"tail_key": key, **row})
+
+    def norm(rows):
+        return sorted(
+            tuple(
+                f"{v:.6f}" if isinstance(v, float) else str(v)
+                for v in (r[c] for c in sorted(r) if c != "row_type")
+            )
+            for r in rows
+        )
+
+    for kind, table in (("alert", "alerts"), ("rca", "rca")):
+        got = [r.asDict() for r in spark.read.parquet(os.path.join(work, table)).collect()]
+        assert got, f"no {kind} rows"
+        assert norm(got) == norm(e for e in expected if e["row_type"] == kind), kind
+
+
+
 def test_streaming_decontaminate(spark, tmp_path):
     """Stream-side eval-overlap gate: the survivors of the streamed
     gate equal the batch decontaminate's clean set on the same rows,
@@ -1407,255 +1540,6 @@ def test_streaming_minhash_lsh_out_of_order_redelivery_hotbucket(spark, tmp_path
         ).collect()
     }
     assert batch == {(r.doc_a, r.doc_b, r.band_idx, r.band_hash) for r in out}
-
-
-def test_job_lsh_candidates_query_with_old_banded(spark, tmp_path):
-    """StreamingJob candidates query with fuzzy_old_banded_path (the
-    CLI --fuzzy-old-banded path): pages whose text already exists in
-    the curated corpus emit side='old' cross-snapshot candidates via
-    the stream-static band probe, in-stream mirrors still emit
-    side='new' through the bucket state."""
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
-        banded_signature_table,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
-        PagesSpec,
-        generate_pages,
-        read_pages_stream,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        StreamingJob,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-    )
-    from pyspark.sql import functions as F
-
-    pdf = generate_pages(PagesSpec(n_pages=150)).sort_values("warc_ts")
-    # the curated corpus holds the first 30 pages' text, keyed like
-    # the stream (xxhash64 of url)
-    curated = pdf.head(30).copy()
-    old_docs = spark.createDataFrame(curated[["url", "text"]]).select(
-        F.xxhash64("url").alias("doc_id"), "text"
-    )
-    old_dir = str(tmp_path / "old_banded")
-    # banded with the SAME (n, num_hashes, bands, seed) the stream
-    # probe uses (both sides on their aligned defaults, bands=32) —
-    # mismatched params now RAISE at plan time via the table's
-    # stamped column metadata (r7 ADVICE)
-    banded_signature_table(old_docs).write.parquet(old_dir)
-    # stream = fresh pages + RE-CRAWLS of curated pages (new url,
-    # same text) + an in-stream mirror pair
-    recrawls = curated.copy()
-    recrawls["url"] = recrawls["url"] + "?recrawl=1"
-    recrawls["warc_ts"] = pdf["warc_ts"].max() + pd.to_timedelta(
-        range(1, len(recrawls) + 1), unit="min"
-    )
-    stream_pdf = (
-        pd.concat([pdf.iloc[30:], recrawls])
-        .sort_values("warc_ts")
-        .reset_index(drop=True)
-    )
-    stream_pdf["warc_ts"] = stream_pdf["warc_ts"].astype("datetime64[us]")
-    src = tmp_path / "pages"
-    src.mkdir()
-    _write_chunks(stream_pdf, src, 3)
-
-    job = StreamingJob(
-        work_dir=str(tmp_path / "job"),
-        cfg=None,
-        tail=TailConfig(mode="zscore"),
-        fuzzy_dedup_col="text",
-        fuzzy_watermark="2 hours",
-        fuzzy_old_banded_path=old_dir,
-    )
-    q = job.start_lsh_candidates_query(read_pages_stream(spark, str(src)))
-    q.processAllAvailable()
-    q.stop()
-
-    cands = spark.read.parquet(job.candidates_dir)
-    old_pairs = {
-        (r.doc_a, r.doc_b)
-        for r in cands.filter(F.col("side") == "old").collect()
-    }
-    key = {
-        r.url: r.k
-        for r in spark.createDataFrame(
-            pd.concat([curated, recrawls])[["url"]]
-        ).select("url", F.xxhash64("url").alias("k")).collect()
-    }
-    hits = sum(
-        1
-        for u in recrawls["url"]
-        if (key[u.replace("?recrawl=1", "")], key[u]) in old_pairs
-    )
-    # exact text copies collide with their curated originals
-    assert hits == len(recrawls)
-
-
-def test_job_lsh_candidates_query(spark, tmp_path):
-    """StreamingJob.start_lsh_candidates_query end-to-end on the raw
-    page stream: re-crawled urls (same text, later warc_ts, distinct
-    url) must appear in the candidate table keyed by xxhash64(url),
-    via the idempotent file sink — the CLI --fuzzy-dedup-col path."""
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
-        PagesSpec,
-        generate_pages,
-        read_pages_stream,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        StreamingJob,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-    )
-    from pyspark.sql import functions as F
-
-    pdf = generate_pages(PagesSpec(n_pages=300)).sort_values("warc_ts")
-    mirrors = pdf.head(40).copy()
-    mirrors["url"] = mirrors["url"] + "?mirror=1"
-    mirrors["warc_ts"] = mirrors["warc_ts"] + pd.Timedelta(minutes=2)
-    pdf = (
-        pd.concat([pdf, mirrors]).sort_values("warc_ts").reset_index(drop=True)
-    )
-    pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
-    src = tmp_path / "pages"
-    src.mkdir()
-    _write_chunks(pdf, src, 3)
-
-    job = StreamingJob(
-        work_dir=str(tmp_path / "job"),
-        cfg=None,  # aggregate/detect not used in this test
-        tail=TailConfig(mode="zscore"),
-        fuzzy_dedup_col="text",
-        fuzzy_watermark="1 hour",
-    )
-    q = job.start_lsh_candidates_query(read_pages_stream(spark, str(src)))
-    q.processAllAvailable()
-    q.stop()
-
-    cands = spark.read.parquet(job.candidates_dir)
-    pair_set = {
-        (r.doc_a, r.doc_b) for r in cands.select("doc_a", "doc_b").collect()
-    }
-    key = {
-        r.url: r.k
-        for r in spark.createDataFrame(pdf[["url"]])
-        .select("url", F.xxhash64("url").alias("k"))
-        .collect()
-    }
-    hits = sum(
-        1
-        for u in mirrors["url"]
-        if (key[u[: -len("?mirror=1")]], key[u]) in pair_set
-        or (key[u], key[u[: -len("?mirror=1")]]) in pair_set
-    )
-    assert hits == len(mirrors)  # identical text -> all bands collide
-
-
-def test_lsh_candidates_checkpoint_resume(spark, tmp_path):
-    """Kill/resume soak for the streaming LSH stage: bucket state
-    (ids/tss arrays) rides the checkpoint, so a mirror page arriving
-    AFTER the restart must still pair with its original seen BEFORE
-    the restart — and the resumed candidate table must equal one
-    uninterrupted run (idempotent batch-id sink)."""
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
-        PagesSpec,
-        generate_pages,
-        read_pages_stream,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        StreamingJob,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-    )
-
-    pdf = generate_pages(PagesSpec(n_pages=240)).sort_values("warc_ts")
-    # mirrors of EARLY pages, arriving at the very end of the stream:
-    # their originals' bucket state must survive the restart
-    early = pdf.head(30).copy()
-    early["url"] = early["url"] + "?mirror=1"
-    early["warc_ts"] = pdf["warc_ts"].max() + pd.to_timedelta(
-        range(1, len(early) + 1), unit="min"
-    )
-    pdf = pd.concat([pdf, early]).sort_values("warc_ts").reset_index(drop=True)
-    pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
-
-    def run(pages_dir, work):
-        job = StreamingJob(
-            work_dir=work, cfg=None, tail=TailConfig(mode="zscore"),
-            fuzzy_dedup_col="text", fuzzy_watermark="2 hours",
-        )
-        q = job.start_lsh_candidates_query(
-            read_pages_stream(spark, str(pages_dir))
-        )
-        q.processAllAvailable()
-        q.stop()
-        return job
-
-    inc = tmp_path / "pages_inc"
-    inc.mkdir()
-    half = len(pdf) // 2  # all originals of the mirrors are in part 1
-    _write_chunks(pdf.iloc[:half], inc, 2, start_idx=0)
-    work = str(tmp_path / "job_inc")
-    job = run(inc, work)
-    mid = spark.read.parquet(job.candidates_dir).count()
-
-    _write_chunks(pdf.iloc[half:], inc, 2, start_idx=2)
-    job = run(inc, work)
-
-    alldir = tmp_path / "pages_all"
-    alldir.mkdir()
-    _write_chunks(pdf, alldir, 4)
-    gold = run(alldir, str(tmp_path / "job_gold"))
-
-    got = spark.read.parquet(job.candidates_dir)
-    want = spark.read.parquet(gold.candidates_dir)
-    got_set = {
-        (r.doc_a, r.doc_b, r.band_idx) for r in got.collect()
-    }
-    want_set = {
-        (r.doc_a, r.doc_b, r.band_idx) for r in want.collect()
-    }
-    assert want.count() > mid  # post-restart batches added candidates
-    assert got_set == want_set
-    # cross-restart pairing actually happened: mirrors only streamed
-    # after the restart, their originals only before it
-    from pyspark.sql import functions as F
-
-    keys = {
-        r.url: r.k
-        for r in spark.createDataFrame(pdf[["url"]])
-        .select("url", F.xxhash64("url").alias("k"))
-        .collect()
-    }
-    cross = sum(
-        1
-        for u in early["url"]
-        if any(
-            (keys[u[: -len("?mirror=1")]], keys[u], b) in got_set
-            for b in range(16)
-        )
-    )
-    assert cross == len(early)
-
-    # replay of the last batch: its candidates are collected lazily, so
-    # the skipped commit must still run the stateful batch
-    commits = os.path.join(work, "checkpoints", "lsh_candidates", "commits")
-    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
-    for f in (str(last), f".{last}.crc"):
-        os.remove(os.path.join(commits, f))
-    before = {f: os.path.getmtime(os.path.join(job.candidates_dir, f)) for f in os.listdir(job.candidates_dir)}
-    job = run(inc, work)
-    assert os.path.exists(os.path.join(commits, str(last)))
-    assert {f: os.path.getmtime(os.path.join(job.candidates_dir, f)) for f in os.listdir(job.candidates_dir)} == before
 
 
 def test_streaming_shard_manifest(spark, tmp_path):
