@@ -35,11 +35,6 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
 from online_anomaly_detection_root_cause_analysis_spark.functions.text import (
     LANG_MARKERS,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_topk,
-    lsh_topk,
-)
 from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
     document_fingerprints,
     document_language_id,
@@ -673,19 +668,6 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return redact_pii(planted)
 
 
-def q_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-100 — explode -> map-side partial count ->
-    one word shuffle -> TakeOrdered(k) with deterministic (count desc,
-    word asc) ties (operators/textstats.py::corpus_vocabulary)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        corpus_vocabulary,
-    )
-
-    return corpus_vocabulary(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), top_k=100
-    )
-
-
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible hash-based per-language sampling (the data-mixing
     stage): membership = sha60('doc-<id>') mod 10000 < rate[lang] *
@@ -741,62 +723,6 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return grouped_percentiles(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer training: first 16 BPE merge rules learned from the
-    corpus (distinct-word vocab + frequencies, one pair-count shuffle
-    per round, single-row argmax collect, map-side replace). 16 rounds
-    (r5 VERDICT #5) puts the gate past the toy regime: merged symbols
-    re-enter the pair statistics and later rules merge PRIOR MERGE
-    PRODUCTS (asserted in tests/test_dedup_similarity.py — the
-    interesting BPE case a 5-merge run never reaches). Oracle:
-    the same 16 rounds UNROLLED as DuckDB CTEs — identical char split,
-    weighted pair counts, (count desc, left, right) tiebreak, and
-    byte-identical single-pass replace semantics (probed: both engines
-    resume scanning after each replacement)
-    (operators/textstats.py::bpe_merges)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bpe_merges,
-    )
-
-    return bpe_merges(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), n_merges=16
-    )
-
-
-def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLY: run the 16 induced merge rules over the corpus
-    and report per-doc (n_words, n_tokens) — the fertility statistic
-    that budgets training FLOPs. Rules apply once to the distinct-word
-    vocab (bounded map pass), counts join back on the word key. Oracle:
-    the induction CTE chain carried one column wider (word kept through
-    every round) + the same explode/join/agg
-    (operators/textstats.py::bpe_tokenize)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bpe_tokenize,
-    )
-
-    return bpe_tokenize(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), n_merges=16
-    )
-
-
-def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk sequence packing: global token-stream offsets
-    via a distributed two-level prefix sum (parallel per-shard window
-    cumsums + an n_shards-row offset table broadcast back — the only
-    single-task window is shards-sized), then per-doc chunk span math
-    in codegen. Oracle: one global SQL window cumsum — semantics
-    identical regardless of sharding
-    (operators/textstats.py::sequence_packing)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        sequence_packing,
-    )
-
-    return sequence_packing(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), ctx_len=64
-    )
 
 
 def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1109,136 +1035,6 @@ def q_url_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
     )
     return url_host_stats(pages)
-
-
-def _query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-
-def q_embedding_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = brute_force_topk(emb, _query_vectors(spark, sf_dir), k=10)
-    return out.select(
-        "query_id", "vec_id",
-        (F.floor(F.col("cosine") * 10000.0 + 0.5) / 10000.0).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN driven at a recall-saturating operating point (16 tables x
-    5 bits, 5-bucket multiprobe): the candidate union provably covers
-    every true top-10 neighbor at the driver scales, so the exact
-    brute-force SQL is a valid oracle for the WHOLE LSH path
-    (bucketing, multiprobe, dedup, scoring, ranking). Production dials
-    probes/tables down; that recall knob is gated separately in
-    tests/test_dedup_similarity.py."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = lsh_topk(emb, _query_vectors(spark, sf_dir), k=10, bits=5, tables=16, multiprobe=5)
-    return out.select(
-        "query_id", "vec_id",
-        (F.floor(F.col("cosine") * 10000.0 + 0.5) / 10000.0).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (r4; the task's second scale path next to LSH) driven
-    at the EXHAUSTIVE-probe operating point (nprobe == n_centroids):
-    the union of all probed cells is the corpus iff the k-means cell
-    assignment PARTITIONS it — a vector dropped or double-assigned by
-    the quantizer/routing breaks the brute-force hash, so the oracle
-    gates the whole IVF machinery (deterministic sampled k-means
-    training, cell assignment, probe routing, candidate scoring,
-    ranking). It deliberately does NOT gate partial-probe recall: this
-    synthetic corpus is isotropic (uniform random vectors — true
-    neighbors spread across cells; measured recall 0.5/0.74 at
-    nprobe 4/8 of 16), so no non-degenerate probe count saturates
-    recall the way the planted-structure corpora do for LSH. The ANN
-    behavior — candidate-set reduction ~ nprobe/n_centroids and the
-    monotone recall knob — is gated in
-    tests/test_dedup_similarity.py::test_ivf_*."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = ivf_topk(
-        emb, _query_vectors(spark, sf_dir), k=10, n_centroids=16, nprobe=16
-    )
-    return out.select(
-        "query_id", "vec_id",
-        (F.floor(F.col("cosine") * 10000.0 + 0.5) / 10000.0).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def _emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings plus planted duplicates, derived identically in the
-    DuckDB oracle: every vec_id%20==0 gets an exact copy at +1_000_000;
-    every vec_id%10==0 gets a near-copy at +2_000_000 with
-    v'[i] = v[i] + 0.15*v[(i mod 64)+1] (cosine ~0.99 regardless of
-    the base vector — the perturbation is a small rotated admixture)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    exact = emb.filter(F.col("vec_id") % 20 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    idx = F.sequence(F.lit(1), F.lit(64))
-    vd = F.col("embedding")
-    near_vec = F.transform(
-        idx,
-        lambda i: F.element_at(vd, i.cast("int"))
-        + F.lit(0.15) * F.element_at(vd, ((i % 64) + 1).cast("int")),
-    )
-    near = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 2_000_000).alias("vec_id"), near_vec.alias("embedding")
-    )
-    return emb.unionByName(exact).unionByName(near)
-
-
-_EMB_CORPUS_SQL = """
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, embedding::DOUBLE[] FROM embeddings WHERE vec_id % 20 = 0
-  UNION ALL
-  SELECT vec_id + 2000000,
-         list_transform(generate_series(1, 64), i -> v[i] + 0.15*v[(i % 64) + 1])
-  FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-  WHERE vec_id % 10 = 0
-"""
-
-
-def q_embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (the last dedup modality from
-    the task list): LSH bucket blocking -> exact cosine verify; oracle
-    = the exact corpus-wide pair set (O(n^2) is fine at oracle scale,
-    never run by the engine). Coverage of the true pair set at this
-    operating point is deterministic and pytest-asserted, like
-    near_duplicates."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    p = embedding_near_duplicates(
-        _emb_corpus(spark, sf_dir), threshold=0.9, bits=8, tables=8
-    )
-    return p.select(
-        "vec_a", "vec_b",
-        (F.floor(F.col("cosine") * 10000.0 + 0.5) / 10000.0).alias("cosine"),
-    )
-
-
-_EMB_NEAR_DUP_SQL = f"""
-WITH corpus AS ({_EMB_CORPUS_SQL}),
-pairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         list_cosine_similarity(a.v, b.v) AS cosine
-  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, floor(cosine*10000 + 0.5)/10000 AS cosine
-FROM pairs WHERE cosine >= 0.9
-"""
 
 
 # ------------------------------------------- hierarchical RCA over events
@@ -2944,18 +2740,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curation_pipeline": q_curation_pipeline,
         "pii_redaction": q_pii_redaction,
         "macrobase_summaries": q_macrobase_summaries,
-        "bpe_merges": q_bpe_merges,
-        "bpe_tokenize": q_bpe_tokenize,
         "linear_quality": q_linear_quality,
         "bigram_surprisal": q_bigram_surprisal,
         "length_histogram": q_length_histogram,
         "blocklist_filter": q_blocklist_filter,
         "language_id": q_language_id,
         "fingerprints": q_fingerprints,
-        "embedding_topk_brute": q_embedding_topk_brute,
-        "embedding_topk_lsh": q_embedding_topk_lsh,
-        "embedding_topk_ivf": q_embedding_topk_ivf,
-        "embedding_near_duplicates": q_embedding_near_duplicates,
         "macrobase_summaries_decayed": q_macrobase_summaries_decayed,
         "macrobase_summaries_single": q_macrobase_summaries_single,
         "macrobase_summaries_multiattr": q_macrobase_summaries_multiattr,
@@ -2969,18 +2759,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the shared explicit token repartition, so its fingerprint
         # changed); dataset_card (green, unchanged) rotated out
         "ngram_jaccard": q_ngram_jaccard,
+        # top_words_per_lang rotated in: top_words_per_key's docstring
+        # changed when the corpus-vocabulary operator was deleted
+        "top_words_per_lang": q_top_words_per_lang,
         "dataset_card": q_dataset_card,
         "shard_manifest": q_shard_manifest,
         "text_stats": q_text_stats,
         "repetition_ratios": q_repetition_ratios,
         "quality_filter": q_quality_filter,
-        "vocabulary": q_vocabulary,
         "stratified_sample": q_stratified_sample,
         "url_host_stats": q_url_host_stats,
         "unigram_surprisal": q_unigram_surprisal,
         "perplexity_sample": q_perplexity_sample,
         "line_dedup": q_line_dedup,
-        "top_words_per_lang": q_top_words_per_lang,
         "exact_duplicates": q_exact_duplicates,
         # -- r8-green, unchanged in r9: rotated out of the window to
         # make room for the r9-changed block above
@@ -2989,7 +2780,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mixture_weights": q_mixture_weights,
         # r8-green, unchanged in the r9 second pass: rotated out for
         # the pane-based window-aggregation block at the front
-        "sequence_packing": q_sequence_packing,
         "value_percentiles": q_value_percentiles,
     }
 
@@ -3473,14 +3263,6 @@ FROM red
 """
 
 
-_VOCAB_SQL = """
-WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-c AS (SELECT word, count(*) AS n FROM w GROUP BY 1)
-SELECT CAST(row_number() OVER (ORDER BY n DESC, word) AS INT) AS rank, word, n
-FROM c ORDER BY n DESC, word LIMIT 100
-"""
-
-
 def _stratified_sample_oracle_sql() -> str:
     cases = " ".join(
         f"WHEN '{lang}' THEN {rate!r}" for lang, rate in sorted(_SAMPLE_RATES.items())
@@ -3529,116 +3311,6 @@ SELECT event_type,
        floor(quantile_cont(value, 0.99) * 1e6 + 0.5) / 1e6 AS p99
 FROM events
 GROUP BY event_type
-"""
-
-
-def _bpe_merges_oracle_sql(n: int = 16) -> str:
-    """The engine's 16 BPE rounds UNROLLED as chained CTEs: s{r} is the
-    symbolized weighted vocab after r merges, p{r} the weighted pair
-    counts, b{r} the round's argmax rule. Replace semantics are the
-    byte-identical single-pass scan both engines implement; SUM is
-    cast back to BIGINT (DuckDB widens to HUGEINT)."""
-    ctes = [
-        "v AS MATERIALIZED (SELECT word, COUNT(*) AS w FROM"
-        " (SELECT unnest(string_split(text, ' ')) AS word FROM documents)"
-        " GROUP BY word)",
-        "s0 AS MATERIALIZED"
-        " (SELECT w, array_to_string(string_split(word, ''), ' ') AS seq FROM v)",
-    ]
-    # MATERIALIZED keeps DuckDB from re-inlining each round's CTE into
-    # the next (16 chained rounds re-expand the base scan enough to
-    # exhaust file handles, and re-derivation cost grows per round)
-    for r in range(n):
-        ctes.append(
-            f"p{r} AS MATERIALIZED (SELECT s[i] AS l, s[i+1] AS r, SUM(w) AS c"
-            f" FROM (SELECT w, string_split(seq, ' ') AS s FROM s{r}) q{r},"
-            f" UNNEST(range(1, len(s))) AS t(i)"
-            f" GROUP BY 1, 2)"
-        )
-        ctes.append(
-            f"b{r} AS (SELECT l, r, c FROM p{r}"
-            f" ORDER BY c DESC, l ASC, r ASC LIMIT 1)"
-        )
-        if r < n - 1:
-            ctes.append(
-                f"s{r + 1} AS MATERIALIZED (SELECT w, trim(replace(' ' || seq || ' ',"
-                f" ' ' || (SELECT l FROM b{r}) || ' ' || (SELECT r FROM b{r}) || ' ',"
-                f" ' ' || (SELECT l FROM b{r}) || (SELECT r FROM b{r}) || ' ')) AS seq"
-                f" FROM s{r})"
-            )
-    selects = " UNION ALL ".join(
-        f"SELECT CAST({r + 1} AS BIGINT) AS rank, l AS \"left\", r AS \"right\","
-        f" l || r AS merged, CAST(c AS BIGINT) AS pair_count FROM b{r}"
-        for r in range(n)
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + selects
-
-
-def _bpe_tokenize_oracle_sql(n: int = 16) -> str:
-    """`_bpe_merges_oracle_sql`'s chain carried one column wider: every
-    s{r} keeps `word`, the final s{n} maps word -> post-merge symbol
-    count, and the corpus's exploded (doc, word) frequencies join back
-    for the per-doc token totals."""
-    ctes = [
-        "v AS MATERIALIZED (SELECT word, COUNT(*) AS w FROM"
-        " (SELECT unnest(string_split(text, ' ')) AS word FROM documents)"
-        " GROUP BY word)",
-        "s0 AS MATERIALIZED (SELECT word, w,"
-        " array_to_string(string_split(word, ''), ' ') AS seq FROM v)",
-    ]
-    for r in range(n):
-        ctes.append(
-            f"p{r} AS MATERIALIZED (SELECT s[i] AS l, s[i+1] AS r, SUM(w) AS c"
-            f" FROM (SELECT w, string_split(seq, ' ') AS s FROM s{r}) q{r},"
-            f" UNNEST(range(1, len(s))) AS t(i)"
-            f" GROUP BY 1, 2)"
-        )
-        ctes.append(
-            f"b{r} AS (SELECT l, r, c FROM p{r}"
-            f" ORDER BY c DESC, l ASC, r ASC LIMIT 1)"
-        )
-        ctes.append(
-            f"s{r + 1} AS MATERIALIZED (SELECT word, w, trim(replace(' ' || seq || ' ',"
-            f" ' ' || (SELECT l FROM b{r}) || ' ' || (SELECT r FROM b{r}) || ' ',"
-            f" ' ' || (SELECT l FROM b{r}) || (SELECT r FROM b{r}) || ' ')) AS seq"
-            f" FROM s{r})"
-        )
-    ctes.append(
-        f"tok AS (SELECT word, len(string_split(seq, ' ')) AS word_tokens"
-        f" FROM s{n})"
-    )
-    ctes.append(
-        "dw AS (SELECT doc_id, word, COUNT(*) AS n_occ FROM"
-        " (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)"
-        " GROUP BY doc_id, word)"
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + "\nSELECT doc_id, CAST(SUM(n_occ) AS BIGINT) AS n_words,"
-        " CAST(SUM(n_occ * word_tokens) AS BIGINT) AS n_tokens"
-        " FROM dw JOIN tok USING (word) GROUP BY doc_id"
-    )
-
-
-_SEQUENCE_PACKING_SQL = """
-WITH t AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-  FROM documents
-),
-c AS (
-  SELECT doc_id, n_tokens,
-    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-      AS start_pos
-  FROM t
-)
-SELECT doc_id, n_tokens, start_pos,
-  CAST(floor(start_pos / 64) AS BIGINT) AS first_chunk,
-  CAST(floor((start_pos + n_tokens - 1) / 64) AS BIGINT) AS last_chunk,
-  CAST(floor((start_pos + n_tokens - 1) / 64)
-    - floor(start_pos / 64) + 1 AS BIGINT) AS n_chunks
-FROM c
 """
 
 
@@ -4226,23 +3898,6 @@ SELECT doc_id, n_chars, n_tokens, n_pieces,
 FROM ratios
 """
 
-_EMB_BRUTE_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id % 50 = 0
-),
-s AS (
-  SELECT query_id, e.vec_id,
-         list_cosine_similarity(qv, e.embedding::DOUBLE[]) AS cosine
-  FROM q, embeddings e
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM s
-)
-SELECT query_id, vec_id, floor(cosine*10000 + 0.5)/10000 AS cosine, rank
-FROM r WHERE rank <= 10
-"""
-
 _HEV = ("SELECT ts, value, event_type, CAST(user_id % 5 AS VARCHAR) AS user_band, "
         "CAST(user_id % 10 AS VARCHAR) AS user_bucket FROM events")
 
@@ -4580,7 +4235,6 @@ def oracle_sql() -> dict[str, str]:
         "text_stats": _TEXT_STATS_SQL,
         "repetition_ratios": _REPETITION_SQL,
         "quality_filter": _QUALITY_FILTER_SQL,
-        "vocabulary": _VOCAB_SQL,
         "stratified_sample": _stratified_sample_oracle_sql(),
         "curation_pipeline": _curation_pipeline_oracle_sql(),
         "pii_redaction": _pii_redaction_oracle_sql(),
@@ -4595,21 +4249,11 @@ def oracle_sql() -> dict[str, str]:
         "dataset_card": _DATASET_CARD_SQL,
         "shard_manifest": _SHARD_MANIFEST_SQL,
         "top_words_per_lang": _TOP_WORDS_PER_LANG_SQL,
-        "bpe_merges": _bpe_merges_oracle_sql(),
-        "bpe_tokenize": _bpe_tokenize_oracle_sql(),
-        "sequence_packing": _SEQUENCE_PACKING_SQL,
         "mixture_weights": _MIXTURE_WEIGHTS_SQL,
         "mixture_weights_k1": _MIXTURE_WEIGHTS_K1_SQL,
         "mixture_weights_k3": _MIXTURE_WEIGHTS_K3_SQL,
         "blocklist_filter": _BLOCKLIST_FILTER_SQL,
         "value_percentiles": _VALUE_PERCENTILES_SQL,
-        "embedding_topk_brute": _EMB_BRUTE_SQL,
-        # at the driver operating point the LSH candidate set covers
-        # every true neighbor, so exact top-k SQL is the oracle
-        "embedding_topk_lsh": _EMB_BRUTE_SQL,
-        "embedding_topk_ivf": _EMB_BRUTE_SQL,
-        # LSH blocking must find exactly the corpus-wide exact pair set
-        "embedding_near_duplicates": _EMB_NEAR_DUP_SQL,
         "length_histogram": """
 WITH keyed AS (
   SELECT lang AS key,

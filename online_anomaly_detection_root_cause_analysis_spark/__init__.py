@@ -17,7 +17,7 @@ Layout
 - ``functions``   vectorized pandas/Arrow UDFs + JVM-side column builders
 - ``sources``     deterministic pages generator, batch/stream readers
 - ``operators``   windowed aggregation, offset baseline, detectors, RCA
-                  contributor finders, dedup/similarity/text-analysis ops
+                  contributor finders, dedup/text-analysis ops
 - ``detection``   the threshold detector pipeline
 - ``streaming``   stateful streaming stages, exactly-once sink, listener
 """

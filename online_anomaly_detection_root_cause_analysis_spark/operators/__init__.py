@@ -1,7 +1,7 @@
 """Windowed aggregation, baselines, detectors and RCA contributor
-finders. The text-curation operators (`dedup`, `similarity`,
-`textstats`) are not re-exported: import them by module, so the
-AD/RCA path never loads them."""
+finders. The text-curation operators (`dedup`, `textstats`) are not
+re-exported: import them by module, so the AD/RCA path never loads
+them."""
 
 from .windows import (
     dimension_breakdown,

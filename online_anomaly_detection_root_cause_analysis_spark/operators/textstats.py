@@ -208,334 +208,6 @@ def gopher_quality_filter(
     )
 
 
-def corpus_vocabulary(
-    docs: DataFrame,
-    top_k: int = 100,
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus-wide word frequencies, top-k — the vocabulary-building
-    stage of a tokenizer/training pipeline, and the canonical
-    word-count shape at 100 TB: explode -> partial (map-side) count ->
-    one shuffle on the word -> global TakeOrdered of k rows (Spark
-    turns orderBy+limit into a per-partition top-k + tiny driver
-    merge — no full sort materializes). Ties break deterministically
-    by (count desc, word asc)."""
-    words = F.explode(F.split(F.col(text_col), " ")).alias("word")
-    counts = docs.select(words).groupBy("word").agg(F.count("*").alias("n"))
-    top = counts.orderBy(F.desc("n"), F.asc("word")).limit(top_k)
-    from pyspark.sql import Window as W
-
-    rank = W.orderBy(F.desc("n"), F.asc("word"))
-    return top.select(
-        F.row_number().over(rank).alias("rank"), "word", F.col("n").alias("n")
-    )
-
-
-def bpe_merges(
-    docs: DataFrame,
-    n_merges: int = 5,
-    text_col: str = "text",
-    max_driver_vocab: int = 1_000_000,
-) -> DataFrame:
-    """Tokenizer-vocabulary induction — the first `n_merges` BPE merge
-    rules (Sennrich et al. 2016) learned from the corpus, the training
-    half of the tokenizer every LLM pipeline ships.
-
-    Spark-first shape: the corpus collapses to the DISTINCT-WORD vocab
-    with frequencies (one shuffle — pair statistics are identical on
-    weighted types vs raw occurrences, and the vocab is orders of
-    magnitude smaller than a 100-TB corpus, exactly how reference BPE
-    trainers work: SentencePiece/HF trainers count words distributed
-    and run the merge loop on ONE node). This mirrors that exactly:
-    if the vocab fits `max_driver_vocab` (checked via limit(cap+1),
-    never an unbounded collect) the merge loop runs driver-side in
-    pure Python — byte-identical semantics, zero per-round job
-    overhead (16 rounds of Spark scheduling on a kilobyte vocab cost
-    ~20 s at sf0.1; the driver loop costs milliseconds). Over the cap
-    — web-scale tail vocabs with no frequency floor — it falls to the
-    distributed round loop: ONE pair-count shuffle with map-side
-    partials per round, a single-ROW argmax collect, a map-side
-    replace, vocab re-persisted per round to truncate lineage. Both
-    paths are parity-tested against each other.
-
-    Merge application is SINGLE-PASS left-to-right non-overlapping
-    string replacement of ` L R ` in the space-joined symbol string —
-    verified byte-identical between Spark's replace, Python's
-    str.replace, and DuckDB's (all resume scanning after each
-    replacement). For SELF-OVERLAPPING pairs (L == R, e.g.
-    `a a a a a`) this differs from canonical greedy BPE in where the
-    unpaired symbol lands ([aa a aa] vs [aa aa a]) — same merge
-    count, shifted adjacency for later rounds; a documented
-    determinism-over-canonicality choice. Ties break
-    (count desc, left asc, right asc) — Python tuple comparison and
-    Spark's UTF8 binary string order agree (UTF-8 byte order equals
-    code-point order).
-
-    Returns the merge table: (rank, left, right, merged, pair_count)."""
-    spark = docs.sparkSession
-    schema = "rank long, left string, right string, merged string, pair_count long"
-    word_freq = (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("w"))
-    )
-    head = word_freq.limit(max_driver_vocab + 1).collect()
-    if len(head) <= max_driver_vocab:
-        merges = _bpe_merge_loop_driver(
-            [(r["word"], int(r["w"])) for r in head], n_merges
-        )
-    else:
-        merges = _bpe_merge_loop_distributed(word_freq, n_merges)
-    return spark.createDataFrame(merges, schema)
-
-
-def _bpe_merge_loop_driver(
-    vocab: list[tuple[str, int]], n_merges: int
-) -> list[tuple[int, str, str, str, int]]:
-    """Driver-side merge loop over a bounded (word, freq) vocab.
-    Must stay byte-identical to the distributed loop: same padded
-    single-pass ` L R ` -> ` LR ` replacement, same
-    (count desc, left asc, right asc) argmax."""
-    seqs = [(list(word), w) for word, w in vocab]
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        counts: dict[tuple[str, str], int] = {}
-        for syms, w in seqs:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + w
-        if not counts:
-            break
-        (l, r), c = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((rank, l, r, l + r, c))
-        old, new = f" {l} {r} ", f" {l}{r} "
-        # Split on ' ' ONLY: symbols may contain '\n'/'\t' (words come
-        # from split-on-single-space), and no-arg str.split() would
-        # silently drop them, diverging from the distributed loop and
-        # the DuckDB oracle from round 2 onward. The padded string
-        # always starts/ends with exactly one space (old and new both
-        # carry their own padding), so [1:-1] strips it exactly.
-        seqs = [
-            (
-                (" " + " ".join(syms) + " ").replace(old, new)[1:-1].split(" ")
-                if len(syms) >= 2
-                else syms,
-                w,
-            )
-            for syms, w in seqs
-        ]
-    return merges
-
-
-def _bpe_merge_loop_distributed(word_freq: DataFrame, n_merges: int):
-    """The over-cap fallback: per round one pair-count shuffle over
-    the persisted vocab, a 1-row argmax collect, a map-side replace;
-    vocab re-persisted per round to truncate lineage. Coalesce(1)
-    because sequential rounds on a small-per-partition vocab pay
-    stage overhead per task otherwise (corpus-sized work is the ONE
-    word-count shuffle upstream, untouched)."""
-    vocab = (
-        word_freq.select(
-            "w", F.concat_ws(" ", F.split(F.col("word"), "")).alias("seq")
-        )
-        .coalesce(1)
-        .persist()
-    )
-    prev = None
-
-    merges = []
-    for rank in range(1, n_merges + 1):
-        syms = F.split(F.col("seq"), " ")
-        pair_structs = F.transform(
-            F.sequence(F.lit(1), F.size(syms) - 1),
-            lambda i: F.struct(
-                F.element_at(syms, i).alias("l"),
-                F.element_at(syms, i + F.lit(1)).alias("r"),
-            ),
-        )
-        best = (
-            vocab.filter(F.size(syms) >= 2)
-            .select("w", F.explode(pair_structs).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("w").alias("c"))
-            .orderBy(F.desc("c"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        # the argmax job just materialized `vocab`'s cache; the frame
-        # it was derived from can now be released
-        if prev is not None:
-            prev.unpersist()
-        l, r, c = best[0]["l"], best[0]["r"], best[0]["c"]
-        merges.append((rank, l, r, l + r, int(c)))
-        stepped = vocab.select(
-            "w",
-            F.trim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("seq"), F.lit(" ")),
-                    F.lit(f" {l} {r} "),
-                    F.lit(f" {l}{r} "),
-                )
-            ).alias("seq"),
-        ).persist()
-        prev = vocab
-        vocab = stepped
-    if prev is not None:
-        prev.unpersist()
-    vocab.unpersist()
-    return merges
-
-
-def bpe_tokenize(
-    docs: DataFrame,
-    n_merges: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The APPLY half of the tokenizer: run the `bpe_merges`-induced
-    rules over the corpus and report per-document token counts —
-    the fertility statistic (tokens vs words) every LLM data pipeline
-    computes to budget training FLOPs and context length.
-
-    Scale shape mirrors the trainer's distinct-word trick: the merge
-    rules are applied ONCE to the distinct-word vocab (a bounded,
-    vocab-sized map pass — chained JVM `replace` per rule, identical
-    single-pass semantics to induction), then per-word token counts
-    join back to the corpus's exploded (doc, word) frequencies on the
-    word key — one explode shuffle + one join + one doc agg, all
-    corpus-proportional work in plain Catalyst operators. The rule
-    table itself is n_merges rows (bounded driver traffic, same
-    argument as induction's per-round argmax).
-
-    Returns (doc_id, n_words, n_tokens), n_tokens = sum over word
-    occurrences of the word's post-merge symbol count."""
-    rules = [
-        (r["left"], r["right"])
-        for r in bpe_merges(docs, n_merges=n_merges, text_col=text_col)
-        .orderBy("rank")
-        .collect()
-    ]
-    doc_words = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("word"),
-        )
-        .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("n_occ"))
-    )
-    seq = F.concat_ws(" ", F.split(F.col("word"), ""))
-    for l, r in rules:
-        seq = F.trim(
-            F.replace(
-                F.concat(F.lit(" "), seq, F.lit(" ")),
-                F.lit(f" {l} {r} "),
-                F.lit(f" {l}{r} "),
-            )
-        )
-    word_tokens = (
-        doc_words.select("word")
-        .distinct()
-        .select("word", F.size(F.split(seq, " ")).alias("word_tokens"))
-    )
-    return (
-        doc_words.join(word_tokens, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_occ").cast("long").alias("n_words"),
-            F.sum(F.col("n_occ") * F.col("word_tokens"))
-            .cast("long")
-            .alias("n_tokens"),
-        )
-    )
-
-
-def sequence_packing(
-    docs: DataFrame,
-    ctx_len: int = 64,
-    n_shards: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """GPT-style concat-and-chunk sequence packing: documents are
-    concatenated in deterministic doc_id order into one token stream
-    and sliced into fixed ctx_len context windows; per document,
-    report its stream offset, which chunks it lands in, and how many
-    chunk boundaries it straddles — the stats a pre-training pipeline
-    needs to budget sequence counts and boundary-crossing loss.
-
-    Scale shape — a DISTRIBUTED prefix sum, not a global window: a
-    bare `Window.orderBy(id)` funnels the whole corpus through one
-    task. Instead (1) rows are sharded into n_shards contiguous
-    doc_id ranges (bounds from a 2-scalar min/max agg — the only
-    driver traffic), (2) per-shard cumulative sums run in parallel
-    (window PARTITIONED by shard, ordered by doc_id), (3) the shard
-    totals — n_shards rows — get their own cumsum on one tiny
-    partition and broadcast-join back as offsets. The single-task
-    window touches n_shards rows, never the corpus; everything else
-    is map-side codegen column math. Token = whitespace word (the
-    split(" ") convention shared with `bpe_tokenize`; an empty text
-    counts 1, so every doc spans >= 1 chunk and last_chunk is total).
-
-    Returns (doc_id, n_tokens, start_pos, first_chunk, last_chunk,
-    n_chunks) with first/last = floor(start/ctx), floor((start +
-    n_tokens - 1)/ctx)."""
-    from pyspark.sql import Window
-
-    lo, hi = docs.agg(
-        F.min(F.col(id_col)), F.max(F.col(id_col))
-    ).first()
-    span = max(int(hi) - int(lo) + 1, 1)
-    shard = F.floor(
-        (F.col("doc_id") - F.lit(int(lo))) * n_shards / F.lit(span)
-    ).cast("long")
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
-    ).select("doc_id", "n_tokens", shard.alias("shard"))
-    in_shard = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    local = toks.withColumn(
-        "local_start", F.coalesce(F.sum("n_tokens").over(in_shard), F.lit(0))
-    )
-    shard_offsets = (
-        toks.groupBy("shard")
-        .agg(F.sum("n_tokens").alias("shard_total"))
-        .withColumn(
-            "shard_offset",
-            F.coalesce(
-                F.sum("shard_total").over(
-                    Window.orderBy("shard").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("shard", "shard_offset")
-    )
-    start = F.col("local_start") + F.col("shard_offset")
-    return (
-        local.join(F.broadcast(shard_offsets), "shard")
-        .select(
-            "doc_id",
-            "n_tokens",
-            start.alias("start_pos"),
-            F.floor(start / ctx_len).cast("long").alias("first_chunk"),
-            F.floor((start + F.col("n_tokens") - 1) / ctx_len)
-            .cast("long")
-            .alias("last_chunk"),
-        )
-        .withColumn(
-            "n_chunks", (F.col("last_chunk") - F.col("first_chunk") + 1)
-        )
-    )
-
-
 def mixture_weights(
     docs: DataFrame,
     temperature: float = 0.7,
@@ -619,7 +291,7 @@ def top_words_per_key(
     k: int = 10,
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-key heavy hitters — `corpus_vocabulary` generalized to one
+    """Per-key heavy hitters — corpus word frequencies ranked to one
     top-k PER GROUP (per-language stopword lists, per-domain boiler
     terms): explode -> (key, word) count with map-side partials (one
     shuffle) -> rank row_number((count desc, word asc)) <= k.
@@ -1046,8 +718,7 @@ def streaming_decontaminate(
     explode to gram level and then recover a doc-level verdict without
     a stateful aggregation (state + latency for what is logically a
     row-local check). Instead the benchmark gram set — bounded by
-    EVAL-SET token count (MBs even when the corpus is 100 TB; same
-    bounded-collect justification as the IVF centroid sample) — is
+    EVAL-SET token count (MBs even when the corpus is 100 TB) — is
     collected ONCE before the stream starts, shipped via
     sc.broadcast, and the per-document check runs as ONE vectorized
     Arrow pandas UDF doing set-membership with per-row early exit.

@@ -578,6 +578,9 @@ def make_tail_fn(config: TailConfig, with_key: bool = False):
     StreamingTail in the state store — with_key=True emits the key as
     `tail_key` so N independent detectors (multi-key tails, VERDICT
     r2 #4) share one streaming query."""
+    # compared pickled: a functools.partial parent_value_fn equals only
+    # itself, so `==` would fail every restored tail that carries one
+    config_blob = pickle.dumps(config)
 
     def fn(key, pdf_iter, state) -> Iterator[pd.DataFrame]:
         if state.exists:
@@ -589,6 +592,12 @@ def make_tail_fn(config: TailConfig, with_key: bool = False):
                     "query from a new checkpoint."
                 )
             tail = pickle.loads(bytes(blob))
+            if pickle.dumps(tail.config) != config_blob:
+                raise RuntimeError(
+                    f"tail state for key {key!r} was built with {tail.config}; "
+                    f"this query runs {config}. Restart the detect query from "
+                    "a new checkpoint."
+                )
         else:
             tail = StreamingTail(config)
         out_rows: list[dict[str, Any]] = []

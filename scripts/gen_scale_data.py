@@ -1,5 +1,5 @@
 """Regenerate an sf1.0-scale measurement dataset statistically matched
-to the driver's shape (50k documents, 20k embeddings, 1M events; same
+to the driver's shape (50k documents, 1M events; same
 schemas, vocab, length and value distributions as /root/testdata/sf0.1).
 
 The driver's own sf1.0 directory is NOT retained between rounds, so
@@ -9,7 +9,7 @@ BENCH/bench_local_r9_sf1.json or the driver artifacts. Seeded and
 deterministic. Small TPC-H side tables are copied from sf0.1 verbatim
 (no declared query reads them; the sweep registers them in DuckDB).
 
-Usage: python scripts/gen_scale_data.py /tmp/sfx1.0 [--docs 50000 --vecs 20000 --events 1000000]
+Usage: python scripts/gen_scale_data.py /tmp/sfx1.0 [--docs 50000 --events 1000000]
 """
 
 from __future__ import annotations
@@ -60,19 +60,6 @@ def gen_documents(out_dir: str, n_docs: int, rng: np.random.Generator) -> None:
     pq.write_table(tbl, f"{out_dir}/documents.parquet")
 
 
-def gen_embeddings(out_dir: str, n_vecs: int, rng: np.random.Generator) -> None:
-    v = rng.standard_normal((n_vecs, 64)).astype(np.float32)
-    v /= np.linalg.norm(v, axis=1, keepdims=True)
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(np.arange(n_vecs), pa.int64()),
-            "embedding": pa.array(list(v), pa.list_(pa.float32())),
-            "label": pa.array(rng.integers(0, 10, size=n_vecs), pa.int32()),
-        }
-    )
-    pq.write_table(tbl, f"{out_dir}/embeddings.parquet")
-
-
 def gen_events(out_dir: str, n_events: int, rng: np.random.Generator) -> None:
     src = pq.read_table(f"{SRC}/events.parquet", columns=["value"]).to_pandas()
     vals = rng.choice(src.value.values, size=n_events, replace=True)
@@ -101,7 +88,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("out_dir")
     ap.add_argument("--docs", type=int, default=50_000)
-    ap.add_argument("--vecs", type=int, default=20_000)
     ap.add_argument("--events", type=int, default=1_000_000)
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args()
@@ -109,11 +95,10 @@ def main() -> None:
     os.makedirs(args.out_dir, exist_ok=True)
     rng = np.random.default_rng(args.seed)
     gen_documents(args.out_dir, args.docs, rng)
-    gen_embeddings(args.out_dir, args.vecs, rng)
     gen_events(args.out_dir, args.events, rng)
     for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]:
         shutil.copy(f"{SRC}/{t}.parquet", f"{args.out_dir}/{t}.parquet")
-    print(f"generated {args.out_dir}: docs={args.docs} vecs={args.vecs} events={args.events}")
+    print(f"generated {args.out_dir}: docs={args.docs} events={args.events}")
 
 
 if __name__ == "__main__":

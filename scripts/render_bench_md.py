@@ -371,7 +371,7 @@ plan LOSES. {skew['finding']}
         parts.append(
             f"""### ANN recall-vs-cost curves: the gate operating points, from data (VERDICT r7 #7)
 
-`scripts/ann_recall_bench.py` at {ann['sf_dir']}
+`scripts/ann_recall_bench.py` (since deleted with the ANN queries) at {ann['sf_dir']}
 ({ann['n_vectors']:,} vectors, {ann['n_queries']} queries, k=10,
 exact brute force {ann['brute_force_sec']:.1f} s as ground truth,
 median of {ann['reps']} runs per cell, one JVM).
@@ -398,8 +398,9 @@ nprobe == n_centroids — this corpus is ISOTROPIC (uniform random
 vectors: true neighbors spread across cells), exactly why the driver
 gate pins nprobe=16 as a partition-completeness check rather than
 gating partial-probe recall; on clustered real-embedding corpora the
-curve knees far earlier (the monotone-knob property is unit-gated in
-tests/test_dedup_similarity.py::test_ivf_*).
+curve knees far earlier (the monotone-knob property was unit-gated in
+tests/test_dedup_similarity.py::test_ivf_* until the ANN queries were
+deleted).
 """
         )
     ab = _load(os.path.join(REPO, "BENCH", "curation_ab_r8.json"))

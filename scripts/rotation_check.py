@@ -49,6 +49,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "online_anomaly_detection_root_cause_analysis_spark"
 ENTRY = "__spark_entry__.py"
 WINDOW = 50
+# line ends as the parser splits them (\r\n, lone \r, \n), kept on the line
+_LINE_END = re.compile(r"(?<=\n)|(?<=\r)(?!\n)")
 
 
 def _git(*args: str) -> str:
@@ -109,8 +111,8 @@ class ModuleIndex:
 
     def __init__(self, relpath: str, source: str):
         self.relpath = relpath
-        self.source = source
         self.tree = ast.parse(source)
+        self.lines = [line.encode() for line in _LINE_END.split(source) if line]
         self.defs: dict[str, ast.stmt] = {}
         # bound name -> (module relpath, original name) for package
         # ImportFrom at module level
@@ -148,7 +150,16 @@ class ModuleIndex:
                 into[alias.asname or alias.name] = (mod, alias.name)
 
     def seg(self, node: ast.AST) -> str:
-        return ast.get_source_segment(self.source, node) or ""
+        """`ast.get_source_segment` over the lines split once: it
+        re-splits the whole source on every call, which dominated the
+        run."""
+        lines = self.lines[node.lineno - 1 : node.end_lineno]
+        if len(lines) == 1:
+            return lines[0][node.col_offset : node.end_col_offset].decode()
+        return b"".join(
+            [lines[0][node.col_offset :], *lines[1:-1],
+             lines[-1][: node.end_col_offset]]
+        ).decode()
 
 
 def _closure(

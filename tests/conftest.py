@@ -28,8 +28,7 @@ def duck():
 
 def register_views(con, sf_dir: str) -> None:
     tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
+        "region nation customer supplier part orders lineitem events documents"
     ).split()
     for t in tables:
         path = Path(sf_dir) / f"{t}.parquet"

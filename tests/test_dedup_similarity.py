@@ -14,10 +14,6 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-    brute_force_topk,
-    lsh_topk,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -171,249 +167,6 @@ def test_simhash_finds_exact_dups(spark, corpus):
     }
     found = sum(1 for pair in exact if pair in sh and sh[pair] == 0)
     assert found == len(exact)
-
-
-def test_lsh_topk_recall_vs_brute_force(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute = brute_force_topk(emb, queries, k=10).collect()
-    ann = lsh_topk(emb, queries, k=10, bits=6, tables=8, multiprobe=2).collect()
-    brute_set = {(r.query_id, r.vec_id) for r in brute}
-    ann_set = {(r.query_id, r.vec_id) for r in ann}
-    recall = len(brute_set & ann_set) / len(brute_set)
-    # 8 tables x 6 bits + 2 probes on 64-dim near-orthogonal noise:
-    # weak top-10 cosines (~0.4) are the hard case for hyperplane LSH
-    assert recall >= 0.5, f"ANN recall {recall:.2f}"
-    # self-match sanity: every query's top hit is itself at cosine 1
-    top = {r.query_id: r.vec_id for r in brute if r.rank == 1}
-    assert all(q == v for q, v in top.items())
-
-
-def test_embedding_near_duplicates_coverage(spark):
-    """Embedding-cosine near-dup: the LSH-blocked pair set must equal
-    the exact corpus-wide pair set on the planted-dup corpus (the
-    driver-gate precondition, deterministic because hyperplanes are
-    seeded), and every planted exact/near pair must be present."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    corpus = entry_mod._emb_corpus(spark, SF_DIR).cache()
-    got = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in embedding_near_duplicates(corpus, threshold=0.9).collect()
-    }
-    # exact O(n^2) truth via the brute-force scorer on the same corpus
-    a = corpus.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("_va"))
-    b = corpus.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("_vb"))
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        cosine_udf,
-    )
-
-    exact = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cosine_udf(F.col("_va"), F.col("_vb")).alias("cosine"))
-        .filter(F.col("cosine") >= 0.9)
-        .collect()
-    }
-    assert exact, "corpus should contain planted duplicate pairs"
-    assert set(got) == set(exact)
-    # planted pairs behave as designed: exact copies at cosine ~1,
-    # near copies (rotated admixture) at ~0.99
-    base_ids = {r.vec_id for r in corpus.filter(F.col("vec_id") < 1_000_000).collect()}
-    for vid in base_ids:
-        if vid % 20 == 0:
-            assert (vid, vid + 1_000_000) in got
-            assert got[(vid, vid + 1_000_000)] > 0.999
-        if vid % 10 == 0:
-            assert (vid, vid + 2_000_000) in got
-            assert 0.97 < got[(vid, vid + 2_000_000)] < 1.0
-    corpus.unpersist()
-
-
-def test_embedding_topk_lsh_operating_point_covers_brute(spark):
-    """ADVICE r2: the driver gates embedding_topk_lsh against exact
-    brute-force SQL on a measured recall-saturation claim. Hyperplanes
-    are seeded, so coverage is deterministic per corpus — assert the
-    PRECONDITION directly: at the driver operating point (bits=5,
-    tables=16, multiprobe=5) the ANN result equals brute force
-    pair-for-pair."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute = {(r.query_id, r.vec_id, r.rank) for r in brute_force_topk(emb, queries, k=10).collect()}
-    ann = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in lsh_topk(emb, queries, k=10, bits=5, tables=16, multiprobe=5).collect()
-    }
-    assert ann == brute
-
-
-def test_ivf_topk_exhaustive_probe_equals_brute(spark):
-    """Driver-gate precondition (mirror of the LSH one): at
-    nprobe == n_centroids the probed cells cover the corpus iff cell
-    assignment partitions it — result must equal brute force
-    pair-for-pair."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute = {(r.query_id, r.vec_id, r.rank) for r in brute_force_topk(emb, queries, k=10).collect()}
-    ann = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in ivf_topk(emb, queries, k=10, n_centroids=16, nprobe=16).collect()
-    }
-    assert ann == brute
-
-
-def test_ivf_partitioned_index_prunes_and_matches(spark, tmp_path):
-    """r8: the scale path ivf_topk's docstring promises, made real —
-    write_ivf_index stores the corpus hive-partitioned by cell;
-    ivf_topk_from_index pushes the probe cells into the scan as a
-    literal partition filter. Asserts (a) planning-time pruning:
-    inputFiles() of the probe result lists ONLY probed-cell
-    directories, (b) bit-for-bit parity with the in-memory ivf_topk
-    at the same centroids/nprobe, (c) the centroid sidecar
-    round-trips."""
-    import re as _re
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_from_index,
-        read_ivf_centroids,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    path = str(tmp_path / "ivf")
-    cents = write_ivf_index(emb, path, n_centroids=16)
-    assert read_ivf_centroids(spark, path) == cents
-
-    out = ivf_topk_from_index(spark, path, queries, k=10, nprobe=3)
-    # planning-time pruning: the FileScan's PartitionFilters carries a
-    # literal INSET of exactly the probe-cell union (inputFiles() is
-    # no witness — it lists the whole relation pre-pruning)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = _re.search(r"PartitionFilters: \[cell#\d+ INSET ([\d, ]+)", plan)
-    assert m, plan[:2000]
-    cells_scanned = {int(x) for x in m.group(1).split(",") if x.strip()}
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        _ivf_cell_udfs,
-    )
-
-    _, probes_udf = _ivf_cell_udfs(cents, 3)
-    expected = {
-        int(c)
-        for r in queries.select(
-            F.explode(
-                probes_udf(F.col("query_vec").cast("array<double>"))
-            ).alias("cell")
-        ).collect()
-        for c in [r.cell]
-    }
-    assert cells_scanned == expected
-    assert len(cells_scanned) < 16  # non-probed cells never scanned
-
-    mem = {
-        (r.query_id, r.vec_id, round(r.cosine, 12), r.rank)
-        for r in ivf_topk(
-            emb, queries, k=10, n_centroids=16, nprobe=3, centroids=cents
-        ).collect()
-    }
-    idx = {
-        (r.query_id, r.vec_id, round(r.cosine, 12), r.rank)
-        for r in out.collect()
-    }
-    assert idx == mem
-
-
-def test_ivf_recall_knob_and_candidate_reduction(spark):
-    """The ANN half of the IVF gate: partial probing really prunes the
-    candidate set (~nprobe/n_centroids of the corpus is scored) and
-    recall rises monotonically with nprobe. Everything is seeded, so
-    the measured points are deterministic for this corpus."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        _ivf_cell_udfs,
-        ivf_topk,
-        train_ivf_centroids,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute = {(r.query_id, r.vec_id, r.rank) for r in brute_force_topk(emb, queries, k=10).collect()}
-
-    cents = train_ivf_centroids(emb, n_centroids=16)
-    n = emb.count()
-    n_q = queries.count()
-    # candidate-set size: corpus rows joined per (query, probed cell)
-    cell_udf, probes_udf = _ivf_cell_udfs(cents, 4)
-    e = emb.select("vec_id", cell_udf(F.col("embedding").cast("array<double>")).alias("cell"))
-    q = queries.select(
-        "query_id",
-        F.explode(probes_udf(F.col("query_vec").cast("array<double>"))).alias("cell"),
-    )
-    scored_rows = e.join(q, "cell").count()
-    frac = scored_rows / (n * n_q)
-    assert frac < 0.5, f"nprobe 4/16 must prune; scored fraction {frac:.2f}"
-
-    recalls = []
-    for nprobe in (2, 8, 16):
-        ann = {
-            (r.query_id, r.vec_id, r.rank)
-            for r in ivf_topk(
-                emb, queries, k=10, n_centroids=16, nprobe=nprobe, centroids=cents
-            ).collect()
-        }
-        recalls.append(len(ann & brute) / len(brute))
-    assert recalls[0] < recalls[-1]
-    assert recalls == sorted(recalls), f"recall must be monotone in nprobe: {recalls}"
-    assert recalls[-1] == 1.0
-
-
-def test_ivf_exact_duplicate_always_found(spark):
-    """Planted-structure property: an exact copy hashes to the SAME
-    cell as its original (identical vector, identical argmax), so the
-    cosine-1.0 duplicate of a query is found even at nprobe=1."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        ivf_topk,
-    )
-
-    corpus = entry_mod._emb_corpus(spark, SF_DIR)  # includes +1M exact copies
-    queries = corpus.filter(
-        (F.col("vec_id") % 20 == 0) & (F.col("vec_id") < 1_000_000)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    got = ivf_topk(corpus, queries, k=2, n_centroids=16, nprobe=1).collect()
-    by_q: dict = {}
-    for r in got:
-        by_q.setdefault(r.query_id, set()).add(r.vec_id)
-    for qid, ids in by_q.items():
-        assert qid + 1_000_000 in ids, f"exact copy of {qid} not found at nprobe=1"
-
-
-def test_ivf_centroids_deterministic(spark):
-    """Seeded sample + seeded init + index-tie argmax: two trainings
-    on the same corpus produce identical centroid matrices."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    c1 = train_ivf_centroids(emb, n_centroids=8, seed=13)
-    c2 = train_ivf_centroids(emb.repartition(7), n_centroids=8, seed=13)
-    assert c1 == c2
 
 
 def test_repetition_ratios_and_quality_filter(spark):
@@ -667,159 +420,6 @@ def test_line_dedup_constructed_corpus(spark):
     assert out[2] == (2, 1, sha("gamma"), 5)
     assert out[3] == (1, 0, sha(""), 0)
     assert out[4] == (3, 3, sha("delta\ndelta\nepsilon"), 19)
-
-
-def test_bpe_merges_constructed_corpus(spark):
-    """Pins every BPE-merge semantic on a corpus tiny enough to trace
-    by hand: weighted pair counts (distinct-word vocab x frequency),
-    the (count desc, left, right) tiebreak, the documented SINGLE-PASS
-    self-overlap behavior ('a a a a' -> 'aa a a', leaving an (a,a)
-    pair that wins round 2 again before (aa,aa) merges in round 3),
-    and early termination when no pairs remain (4 rules from
-    n_merges=5)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bpe_merges,
-    )
-
-    docs = spark.createDataFrame([(1, "aaaa aaaa ab")], ["doc_id", "text"])
-    rows = [tuple(r) for r in bpe_merges(docs, n_merges=5).collect()]
-    assert rows == [
-        (1, "a", "a", "aa", 6),
-        (2, "a", "a", "aa", 2),
-        (3, "aa", "aa", "aaaa", 2),
-        (4, "a", "b", "ab", 1),
-    ]
-
-
-def test_bpe_merges_driver_gate_reaches_recursive_merges(spark):
-    """The driver gate's operating point (16 merges over the sf0.001
-    fixture corpus) must exercise the interesting BPE case: at least
-    one learned rule whose left or right side is itself a PRIOR merge
-    product (r5 VERDICT #5 — a 5-merge run never got there). Also
-    asserts the merge chain is well-formed: every multi-char side
-    appears as an earlier rule's merged symbol."""
-    import __spark_entry__ as entrymod
-
-    rows = entrymod.queries()["bpe_merges"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert len(rows) == 16
-    produced = set()
-    recursive = 0
-    for r in sorted(rows, key=lambda r: r["rank"]):
-        for side in (r["left"], r["right"]):
-            if len(side) > 1:
-                recursive += 1
-                assert side in produced, (r["rank"], side)
-        produced.add(r["merged"])
-    assert recursive >= 1, "no merge consumed a prior merge product"
-
-
-def test_bpe_tokenize_constructed_corpus(spark):
-    """Pins the APPLY half on a hand-traceable corpus. Rules learned
-    from {'aaaa aaaa ab', 'ba aaa'} with n_merges=5 are a+a=aa(8),
-    aa+a=aaa(3), aaa+a=aaaa(2), a+b=ab(1), b+a=ba(1) — every word
-    collapses to ONE token; at n_merges=2 only [aa, aaa] exist, so
-    'aaaa' keeps the single-pass residue 'aaa a' (2 tokens) and
-    'ab'/'ba' stay char-level."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bpe_tokenize,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "aaaa aaaa ab"), (2, "ba aaa")], ["doc_id", "text"]
-    )
-    out = {r["doc_id"]: (r["n_words"], r["n_tokens"]) for r in
-           bpe_tokenize(docs, n_merges=5).collect()}
-    assert out[1] == (3, 3)
-    assert out[2] == (2, 2)
-    out2 = {r["doc_id"]: (r["n_words"], r["n_tokens"]) for r in
-            bpe_tokenize(docs, n_merges=2).collect()}
-    # rules [aa, aaa]: aaaa->'aaa a'(2) x2, ab->'a b'(2); ba->2, aaa->1
-    assert out2[1] == (3, 6)
-    assert out2[2] == (2, 3)
-
-
-def test_bpe_tokenize_compresses_fixture_corpus(spark):
-    """Fertility sanity at the driver operating point: applying 16
-    merges must strictly reduce token count below the char count
-    (merges fired) while n_tokens >= n_words always (a word is >= 1
-    token)."""
-    from pyspark.sql import functions as F
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bpe_tokenize,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = bpe_tokenize(docs, n_merges=16)
-    chars = docs.select(
-        F.col("doc_id"),
-        F.length(F.regexp_replace(F.col("text"), " ", "")).alias("n_chars"),
-    )
-    j = out.join(chars, "doc_id").agg(
-        F.sum("n_tokens").alias("tok"),
-        F.sum("n_chars").alias("ch"),
-        F.sum("n_words").alias("w"),
-        F.min(F.col("n_tokens") >= F.col("n_words")).alias("ge_words"),
-    ).first()
-    assert j["tok"] < j["ch"], "no merge reduced the char-level count"
-    assert j["ge_words"] is True
-
-
-def test_sequence_packing_constructed_and_shard_invariant(spark):
-    """Hand-traceable pack layout at ctx_len=4 over word counts
-    [3, 2, 4, 1] concatenated in doc_id order (stream length 10 ->
-    chunks 0..2), plus THE distributed-prefix-sum property: the
-    result is identical at every shard count, including n_shards
-    far above the row count."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        sequence_packing,
-    )
-
-    docs = spark.createDataFrame(
-        [(10, "a b c"), (11, "d e"), (12, "f g h i"), (13, "j")],
-        ["doc_id", "text"],
-    )
-    expect = {
-        # doc: (n_tokens, start, first, last, n_chunks)
-        10: (3, 0, 0, 0, 1),
-        11: (2, 3, 0, 1, 2),
-        12: (4, 5, 1, 2, 2),
-        13: (1, 9, 2, 2, 1),
-    }
-    for n_shards in (1, 3, 64):
-        got = {
-            r["doc_id"]: (
-                r["n_tokens"], r["start_pos"], r["first_chunk"],
-                r["last_chunk"], r["n_chunks"],
-            )
-            for r in sequence_packing(
-                docs, ctx_len=4, n_shards=n_shards
-            ).collect()
-        }
-        assert got == expect, n_shards
-
-
-def test_sequence_packing_fixture_stream_is_gapless(spark):
-    """On the fixture corpus the per-doc spans must tile the token
-    stream exactly: sorted by doc_id, each start_pos equals the
-    previous start_pos + n_tokens, and the last chunk index equals
-    floor((total - 1) / ctx)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        sequence_packing,
-    )
-
-    out = sequence_packing(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-        ctx_len=64,
-    )
-    rows = sorted(out.collect(), key=lambda r: r["doc_id"])
-    pos = 0
-    for r in rows:
-        assert r["start_pos"] == pos, r
-        assert r["n_chunks"] == r["last_chunk"] - r["first_chunk"] + 1
-        pos += r["n_tokens"]
-    assert rows[-1]["last_chunk"] == (pos - 1) // 64
 
 
 def test_bigram_surprisal_separates_scrambled_from_fluent(spark):
@@ -1265,49 +865,6 @@ def test_shard_manifest_checksum_catches_loss_and_dup(spark):
     x1 = {r.shard: r.ids_xor for r in m1.values()}
     assert {r.shard: r.ids_xor for r in dropped} != x1
     assert {r.shard: r.ids_xor for r in duped} != x1
-
-
-def test_bpe_driver_and_distributed_loops_agree(spark):
-    """The driver-side merge loop (vocab under max_driver_vocab) and
-    the distributed round loop (forced via max_driver_vocab=0) must
-    produce the IDENTICAL merge table — including on a vocab with a
-    self-overlapping pair (l == r), where single-pass replacement
-    placement is the subtle case, and on the real fixture corpus."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bpe_merges,
-    )
-
-    tricky = spark.createDataFrame(
-        [(1, "aaaaa aaaa banana bananas cabana"),
-         (2, "banana aaaaa abc abcabc"),
-         (3, "x yz yz x abcabc banana")],
-        "doc_id long, text string",
-    )
-    fast = [tuple(r) for r in bpe_merges(tricky, n_merges=10).orderBy("rank").collect()]
-    slow = [tuple(r) for r in
-            bpe_merges(tricky, n_merges=10, max_driver_vocab=0).orderBy("rank").collect()]
-    assert fast == slow and len(fast) == 10
-
-    # Words are split on ' ' ONLY, so they can contain '\n'/'\t' as
-    # symbols. A no-arg str.split() in the driver loop would silently
-    # drop them after round 1 (regression guard for the r6 ADVICE
-    # finding); both loops must keep them and stay byte-identical.
-    wsy = spark.createDataFrame(
-        [(1, "ab\ncd ab\ncd ab\ncd ab\tcd ab\tcd plain"),
-         (2, "ab\ncd ab\tcd \n\n x\ny x\ny")],
-        "doc_id long, text string",
-    )
-    fast = [tuple(r) for r in bpe_merges(wsy, n_merges=6).orderBy("rank").collect()]
-    slow = [tuple(r) for r in
-            bpe_merges(wsy, n_merges=6, max_driver_vocab=0).orderBy("rank").collect()]
-    assert fast == slow and len(fast) == 6
-    assert any("\n" in l or "\n" in r for _, l, r, _, _ in fast)
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fast = [tuple(r) for r in bpe_merges(docs, n_merges=8).orderBy("rank").collect()]
-    slow = [tuple(r) for r in
-            bpe_merges(docs, n_merges=8, max_driver_vocab=0).orderBy("rank").collect()]
-    assert fast == slow and len(fast) == 8
 
 
 def test_duplicate_spans_matches_bruteforce_on_random_corpora(spark):

@@ -155,17 +155,6 @@ def test_hierarchical_cooc_stays_jvm_side(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_embedding_near_dup_no_cartesian(spark):
-    """The embedding near-dup pair generation must be bucket-blocked:
-    no cartesian/nested-loop pair expansion anywhere in the plan (the
-    only joins are the equi-join on (table_id, bucket) with the
-    vec_id inequality as a post-condition)."""
-    df = e.q_embedding_near_duplicates(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan  # pandas UDFs only (Arrow)
-
-
 def test_near_duplicates_candidates_not_force_broadcast(spark):
     """VERDICT r2 #3: the candidate side of near_duplicates carries NO
     mandatory broadcast hint — at tested scales AQE still picks a
@@ -296,15 +285,14 @@ def test_r4_queries_plan_shape(spark):
 def test_r5_queries_plan_shape(spark):
     """Plan hygiene for the round-5 queries: the text-pipeline
     operators are pure JVM column plans (no Python node in any form);
-    repetition/vocabulary show partial+final aggregation (map-side
-    combine before their one shuffle); quality filter, sampling, and
+    repetition shows partial+final aggregation (map-side combine
+    before its one shuffle); quality filter, sampling, and
     PII redaction are pure map-side (no Exchange at all); the pairs
     gate's dominant-value filter is pushed into a WindowGroupLimit
     (top-1 pruned map-side BEFORE the shuffle)."""
     for q in (
         e.q_repetition_ratios,
         e.q_quality_filter,
-        e.q_vocabulary,
         e.q_stratified_sample,
         e.q_curation_pipeline,
         e.q_pii_redaction,
@@ -316,10 +304,6 @@ def test_r5_queries_plan_shape(spark):
 
     rep = explain_str(e.q_repetition_ratios(spark, SF_DIR))
     assert rep.count("HashAggregate") >= 2  # partial + final gram counts
-
-    voc = explain_str(e.q_vocabulary(spark, SF_DIR))
-    assert voc.count("HashAggregate") >= 2
-    assert "TakeOrderedAndProject" in voc or "WindowGroupLimit" in voc
 
     for q in (e.q_quality_filter, e.q_stratified_sample, e.q_pii_redaction):
         plan = explain_str(q(spark, SF_DIR))

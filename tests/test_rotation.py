@@ -36,10 +36,11 @@ def test_fingerprints_track_function_closure():
     """The fingerprint must cover the operator a query actually calls
     (not just the q_ wrapper): queries reaching dimension_breakdown
     share its closure, and distinct queries get distinct prints."""
+    import __spark_entry__
     import rotation_check
 
     fps = rotation_check.fingerprints(None)
-    assert fps is not None and len(fps) >= 60
+    assert fps is not None and set(fps) == set(__spark_entry__.queries())
     assert fps["mixture_weights"] != fps["mixture_weights_k1"]
     # the oracle SQL participates: same engine path, different SQL
     assert fps["mixture_weights_k1"] != fps["mixture_weights_k3"]

@@ -350,9 +350,9 @@ def test_tail_fn_joins_arrow_batches_of_one_group():
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_tail_fn_rejects_state_of_another_version():
-    """State pickled under another PICKLE_VERSION is not loaded: the
-    tail fails with the version in the message."""
+def _restore_tail(stored: TailConfig, running: TailConfig, version_step: int = 0) -> None:
+    """Runs make_tail_fn(running) over a fake GroupState that holds
+    `stored`'s tail pickled under PICKLE_VERSION + version_step."""
     import pickle
 
     import pandas as pd
@@ -362,12 +362,46 @@ def test_tail_fn_rejects_state_of_another_version():
         make_tail_fn,
     )
 
-    config = TailConfig(mode="threshold", min_value=0, max_value=50)
     state = _FakeGroupState()
-    state.update((PICKLE_VERSION + 1, pickle.dumps(StreamingTail(config))))
-    fn = make_tail_fn(config)
+    state.update((PICKLE_VERSION + version_step, pickle.dumps(StreamingTail(stored))))
+    list(make_tail_fn(running)((0,), iter([pd.DataFrame()]), state))
+
+
+def test_tail_fn_rejects_state_of_another_version():
+    """State pickled under another PICKLE_VERSION is not loaded: the
+    tail fails with the version in the message."""
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        PICKLE_VERSION,
+    )
+
+    config = TailConfig(mode="threshold", min_value=0, max_value=50)
     with pytest.raises(RuntimeError, match=f"version {PICKLE_VERSION + 1}"):
-        list(fn((0,), iter([pd.DataFrame()]), state))
+        _restore_tail(config, config, version_step=1)
+
+
+def test_tail_fn_rejects_state_of_another_tail_config():
+    """A restart with a new threshold does not silently keep the stored
+    tail's config: the tail fails and names the key. An equal config
+    restores, also when its parent_value_fn is a functools.partial
+    (which equals only itself)."""
+    from functools import partial
+
+    from online_anomaly_detection_root_cause_analysis_spark.config import (
+        modulo_parent_value,
+    )
+
+    running = TailConfig(mode="threshold", min_value=0, max_value=50)
+    with pytest.raises(RuntimeError, match=r"key \(0,\) was built with .*max_value=60"):
+        _restore_tail(TailConfig(mode="threshold", min_value=0, max_value=60), running)
+    _restore_tail(TailConfig(mode="threshold", min_value=0, max_value=50), running)
+
+    def hierarchical() -> TailConfig:
+        return TailConfig(
+            rca_mode="hierarchical", parent_of={"user_bucket": "user_band"},
+            parent_value_fn=partial(modulo_parent_value, 5),
+        )
+
+    _restore_tail(hierarchical(), hierarchical())
 
 
 _DETECTOR_SPEC = EWFeatureSpec(
