@@ -53,12 +53,10 @@ def _run_suite_once(cpus: int, sf_dir: str) -> dict:
     counts: dict[str, int] = {}
     # warm the JVM + parquet footer cache once with a trivial action
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    # execution order is SORTED BY NAME, independent of the registry's
-    # rotation schedule (r7 VERDICT #4): registry order changes every
-    # round to rotate the driver's 50-row correctness window, and cold
-    # JIT/page-cache effects make a query's first position worth 1-3 s
-    # — a frozen order keeps per-query timings comparable round over
-    # round
+    # execution order is SORTED BY NAME, independent of registry
+    # order: cold JIT/page-cache effects make a query's first position
+    # worth 1-3 s, so a fixed order keeps per-query timings comparable
+    # when entries are added, removed or regrouped
     for name, fn in sorted(entry_mod.queries().items()):
         if name in EXCLUDED:
             continue

@@ -208,119 +208,6 @@ def gopher_quality_filter(
     )
 
 
-def mixture_weights(
-    docs: DataFrame,
-    temperature: float = 0.7,
-    key_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """Temperature-scaled mixture reweighting over a grouping key —
-    the multilingual sampling scheme of mBERT/XLM-R (q_l ~ p_l^(1/T),
-    T<1 upweights low-resource languages): from per-language token
-    mass p_l, compute the target sampling distribution q_l and the
-    per-document sampling-rate multiplier w_l = q_l / p_l a mixing
-    stage would feed into `deterministic_stratified_sample`.
-
-    Scale shape: one partial-agg groupBy on the key produces a
-    languages-sized table; the normalizing sums run as windows over
-    those few rows (single tiny partition by construction — bounded
-    by key cardinality, never corpus rows). Zero driver traffic.
-    Ratios are floor-rounded at 1e-6 in engine and oracle alike.
-
-    ENGINE-PORTABLE exact path (r6 ADVICE): when 1/T is an integer k
-    (T=0.5 -> k=2, an XLM-R-ablation operating point), q_l ~ n_l^k is
-    computed from exact BIGINT numerators and denominators — integer
-    window sums (order-independent) and a SINGLE IEEE division per
-    output — so the pre-rounded doubles are bit-identical across
-    Spark and DuckDB with no libm pow and no float accumulation.
-    (A transcendental pow(p, 1/0.7) is two different libm
-    implementations; a 1-ulp disagreement at the 1e-6 floor boundary
-    flips a hash gate — the same reason BPE/surprisal/DSIR use
-    integer-exact math.) BIGINT bound: n_l^k and n_l^(k-1)*sum(n_l)
-    must fit 2^63 — holds for k=2 up to ~3e9 tokens/lang; beyond that
-    (or non-integer 1/T) the general float-pow path applies, which
-    is for mixing-rate REPORTING, not hash gates.
-
-    Returns (lang, n_docs, n_tokens, p_data, p_sample, sample_weight)
-    sorted-stable by construction (deterministic per-key floats)."""
-    from pyspark.sql import Window
-
-    per_key = docs.groupBy(F.col(key_col).alias("lang")).agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.size(F.split(F.col(text_col), " ")))
-        .cast("long")
-        .alias("n_tokens"),
-    )
-    everything = Window.partitionBy()
-    s1 = F.sum("n_tokens").over(everything)
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
-    inv = 1.0 / temperature
-    k_exact = int(round(inv))
-    if abs(inv - k_exact) < 1e-9 and k_exact >= 1:
-        # num_km1 = n^(k-1), num = n^k — both exact BIGINT products.
-        # w = q/p = (n^k/sk)/(n/s1) = n^(k-1)*s1/sk, so the weight
-        # numerator is num_km1*s1 (r7 ADVICE: the old n*s1/sk form was
-        # only correct at k=2 — T=1.0 returned n_tokens instead of 1.0
-        # and k>=3 was off by n^(k-2)).
-        num_km1 = F.lit(1).cast("long")
-        for _ in range(k_exact - 1):
-            num_km1 = num_km1 * F.col("n_tokens")
-        num = num_km1 * F.col("n_tokens")
-        sk = F.sum(num).over(everything)
-        p = F.col("n_tokens").cast("double") / s1.cast("double")
-        q = num.cast("double") / sk.cast("double")
-        wgt = (num_km1 * s1).cast("double") / sk.cast("double")
-    else:
-        p = F.col("n_tokens") / s1
-        q_raw = F.pow(p, inv)
-        q = q_raw / F.sum(q_raw).over(everything)
-        wgt = q / p
-    return per_key.select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        r6(p).alias("p_data"),
-        r6(q).alias("p_sample"),
-        r6(wgt).alias("sample_weight"),
-    )
-
-
-def top_words_per_key(
-    docs: DataFrame,
-    key_col: str = "lang",
-    k: int = 10,
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-key heavy hitters — corpus word frequencies ranked to one
-    top-k PER GROUP (per-language stopword lists, per-domain boiler
-    terms): explode -> (key, word) count with map-side partials (one
-    shuffle) -> rank row_number((count desc, word asc)) <= k.
-
-    At scale the rank-filter must NOT materialize a full per-key sort:
-    Spark 3.5+ turns rank-limit filters into WindowGroupLimit, which
-    prunes to the per-partition top-k BEFORE the window shuffle —
-    plan-asserted in tests. Ties break deterministically so two
-    engines (and two runs) agree."""
-    from pyspark.sql import Window as W
-
-    counts = (
-        docs.select(
-            F.col(key_col).alias("key"),
-            F.explode(F.split(F.col(text_col), " ")).alias("word"),
-        )
-        .groupBy("key", "word")
-        .agg(F.count("*").alias("n"))
-    )
-    rank = F.row_number().over(
-        W.partitionBy("key").orderBy(F.desc("n"), F.asc("word"))
-    )
-    return (
-        counts.withColumn("rank", rank)
-        .filter(F.col("rank") <= k)
-        .select("key", F.col("rank").cast("long").alias("rank"), "word", "n")
-    )
-
-
 def sample_keep_cols(
     rates: dict[str, float],
     default_rate: float = 0.0,
@@ -366,124 +253,6 @@ def deterministic_stratified_sample(
             keep_below.alias("keep_below"),
         )
         .filter(F.col("sample_bucket") < F.col("keep_below"))
-    )
-
-
-def unigram_surprisal(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Unigram-LM surprisal scoring — the perplexity-style quality
-    signal of CCNet/RefinedWeb-class pipelines (docs made of rare
-    words score high, word-salad of corpus-common tokens scores low),
-    self-trained on the corpus itself.
-
-    Scored in exact INTEGER bits so two engines agree bit-for-bit:
-    per-word surprisal = floor(log2(N)) - floor(log2(count(word))),
-    where floor(log2(x)) = length(bin(x)) - 1 — a pure string-length
-    identity with no float transcendentals (java.lang.Math.log and
-    libm disagree in the last ulp, which a floor() then amplifies; a
-    production scorer would use float ln and NOT hash-gate it — the
-    ranking is the same, the resolution coarser).
-
-    100-TB shape: one explode; vocab = groupBy(word) with map-side
-    partial counts (shuffle 1, the word-count canonical plan); scoring
-    join re-shuffles words against the vocab on the word key (co-
-    partitioned with shuffle 1, no skew beyond natural Zipf — AQE
-    skew-join handles the head words); per-doc rollup is shuffle 2 on
-    doc_id. The corpus-total N is a one-row aggregate cross-joined
-    back (broadcast of a scalar). The vocab is corpus-sized, NOT
-    collected or broadcast — at web scale it doesn't fit one executor,
-    so the shuffle join is the honest plan."""
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("word"),
-    )
-    vocab = words.groupBy("word").agg(F.count("*").alias("wc"))
-    floor_log2_wc = (F.length(F.bin(F.col("wc"))) - 1).cast("long")
-    per_doc = (
-        words.join(vocab, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum(floor_log2_wc).alias("sum_wc_bits"),
-        )
-    )
-    total = vocab.agg(F.sum("wc").alias("total_words"))
-    floor_log2_n = (F.length(F.bin(F.col("total_words"))) - 1).cast("long")
-    return per_doc.join(F.broadcast(total)).select(
-        "doc_id",
-        F.col("n_words").cast("long").alias("n_words"),
-        (F.col("n_words") * floor_log2_n - F.col("sum_wc_bits"))
-        .cast("long")
-        .alias("surprisal_bits"),
-    )
-
-
-def bigram_surprisal(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Bigram-LM surprisal scoring — `unigram_surprisal`'s
-    context-aware sibling (KenLM-style n-gram scoring, one order up):
-    per-bigram surprisal = -log2 P(w2|w1) with the MLE
-    P(w2|w1) = c(w1,w2) / c(w1·) where c(w1·) is w1's BIGRAM-PREFIX
-    count (the LM-correct denominator: sum of c(w1,*), which differs
-    from the unigram count by final-token occurrences). Docs whose
-    word PAIRS are corpus-rare score high even when every individual
-    word is common — the signal that separates scrambled common words
-    from fluent text, which the unigram scorer cannot see.
-
-    Same exact-INTEGER-bits discipline as unigram_surprisal:
-    per-bigram bits = floor(log2(c(w1·))) - floor(log2(c(w1,w2))),
-    floor(log2(x)) = length(bin(x)) - 1 — no float transcendentals,
-    bit-identical across engines. Docs with < 2 tokens score 0 bits
-    over 0 bigrams (emitted, n_bigrams=0 — the LM has nothing to say).
-
-    100-TB shape: bigrams are built EXPRESSION-side (F.transform over
-    the token array — no posexplode self-join); the bigram table =
-    groupBy(w1, w2) with map-side partials (shuffle 1); prefix counts
-    roll up from it (tiny second agg on w1); scoring re-joins doc
-    bigrams against both tables on their keys (AQE skew-join covers
-    the Zipf head) and the per-doc rollup is a shuffle on doc_id.
-    Nothing is collected; both model tables stay distributed."""
-    toks = F.split(F.col(text_col), " ")
-    big = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.struct(
-            F.element_at(toks, i).alias("w1"),
-            F.element_at(toks, i + F.lit(1)).alias("w2"),
-        ),
-    )
-    doc_bigrams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.when(F.size(toks) >= 2, big).otherwise(F.array())).alias("bg"),
-    ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    c2 = doc_bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
-    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    bits = (
-        (F.length(F.bin(F.col("c1"))) - 1) - (F.length(F.bin(F.col("c2"))) - 1)
-    ).cast("long")
-    scored = (
-        doc_bigrams.join(c2, ["w1", "w2"]).join(c1, "w1")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_bigrams"),
-            F.sum(bits).cast("long").alias("surprisal_bits"),
-        )
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce(F.col("surprisal_bits"), F.lit(0))
-            .cast("long")
-            .alias("surprisal_bits"),
-        )
     )
 
 
@@ -626,78 +395,6 @@ def contamination_report(
         F.coalesce(F.col("n_leaked_grams"), F.lit(0))
         .cast("long")
         .alias("n_leaked_grams"),
-    )
-
-
-def perplexity_bucketed_sample(
-    docs: DataFrame,
-    rates: tuple = (0.9, 0.5, 0.1),
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """CCNet-style perplexity-bucketed data mixing: score every doc
-    with the self-trained unigram LM (`unigram_surprisal`, exact
-    integer bits), split each language into len(rates) equal-count
-    buckets by bits-per-word (bucket 0 = most predictable / lowest
-    surprisal), and keep a deterministic hash-sampled fraction
-    rates[bucket] of each bucket — CCNet's head/middle/tail mixture,
-    reproducible under retries (no rand()).
-
-    Bucket assignment is row_number-based over the total order
-    (bits_per_word, doc_id) — deterministic and engine-portable, where
-    ntile/percent_rank tie semantics are not; bits_per_word is an IEEE
-    division of two exact integers, identical in both engines. One
-    window shuffle on the language key on top of surprisal's two
-    shuffles; the sample gate is map-side."""
-    from ..functions.text import sha60_col
-
-    s = unigram_surprisal(docs, text_col=text_col, id_col=id_col)
-    base = docs.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang"))
-    j = base.join(s, "doc_id").withColumn(
-        "bits_per_word", F.col("surprisal_bits") / F.col("n_words")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("lang").orderBy("bits_per_word", "doc_id")
-    nb = len(rates)
-    ranked = j.select(
-        "doc_id",
-        "lang",
-        "bits_per_word",
-        F.row_number().over(w).alias("_rn"),
-        F.count("*").over(W.partitionBy("lang")).alias("_cnt"),
-    )
-    # exact integer floor-division (num - num%cnt)/cnt — matches the
-    # oracle's `//` by construction, no float-division edge cases
-    num = (F.col("_rn") - F.lit(1)) * F.lit(nb)
-    ranked = ranked.withColumn(
-        "bucket",
-        ((num - F.pmod(num, F.col("_cnt"))) / F.col("_cnt")).cast("int"),
-    )
-    keep_below = None
-    for i, r in enumerate(rates):
-        expr = F.lit(int(r * 10000))
-        keep_below = (
-            F.when(F.col("bucket") == i, expr)
-            if keep_below is None
-            else keep_below.when(F.col("bucket") == i, expr)
-        )
-    gated = ranked.select(
-        "doc_id",
-        "lang",
-        "bucket",
-        (
-            F.pmod(
-                sha60_col(F.concat(F.lit("ppl-"), F.col("doc_id").cast("string"))),
-                F.lit(10000),
-            )
-        ).alias("sample_bucket"),
-        keep_below.cast("long").alias("keep_below"),
-    )
-    return gated.filter(F.col("sample_bucket") < F.col("keep_below")).select(
-        "doc_id", "lang", F.col("bucket").cast("long").alias("bucket"),
-        F.col("sample_bucket").cast("long").alias("sample_bucket"), "keep_below",
     )
 
 
@@ -1164,205 +861,6 @@ def length_histogram(
             F.sum("n_tokens").over(w).cast("double")
             / F.sum("n_tokens").over(wall).cast("double")
         ).alias("cum_token_share"),
-    )
-
-
-def linear_quality_score(
-    docs: DataFrame,
-    weights: DataFrame | None = None,
-    vocab_mod: int = 2001,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """fastText-style LINEAR quality classifier scoring — the
-    model-based quality gate of CCNet/LLaMA-style pipelines (a linear
-    text classifier over hashed bag-of-words features, Joulin et al.
-    2017), complementing the rule-based `gopher_quality_filter`.
-
-    Deployment shape: per-word integer weights come either from a
-    broadcast weight TABLE (`weights`: word, weight — how a trained
-    model ships) or, when omitted, from the hashing trick directly
-    (Weinberger et al. 2009): weight(word) = (sha60(word) mod
-    `vocab_mod`) - vocab_mod//2, a deterministic surrogate standing in
-    for trained values with the same plan shape and value
-    distribution. Either way the doc score is
-    logit_sum = SUM(weight) — an exact BIGINT sum (order-free, no
-    float accumulation) — and logit = logit_sum / n_words, a single
-    IEEE division of exact integers, so the result is bit-identical
-    across engines with no transcendentals (the sigmoid is monotone,
-    so keep = logit_sum >= 0 is an INTEGER comparison — the
-    classification decision never touches floats at all).
-
-    Scale shape — the two branches deliberately differ:
-    - hashing-trick branch: ZERO-shuffle pure column math. The weight
-      of every token and the doc's logit_sum are a single
-      F.transform + F.aggregate expression over the split array — no
-      explode, no groupBy, no join; the whole operator is scan +
-      project, runs map-side at any corpus size, and is legal inside
-      a streaming micro-batch as a row-local pre-filter;
-    - weight-table branch: explode -> broadcast weight join ->
-      per-doc agg (one shuffle with map-side partials) — the shape a
-      trained ~1e6-row vocabulary actually ships in.
-    Both produce identical exact integers (parity-tested), so the
-    hash gate covers either plan. Returns
-    (doc_id, n_words, logit_sum, logit, keep)."""
-    from ..functions.text import sha60_col
-
-    half = vocab_mod // 2
-    if weights is not None:
-        words = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("word"),
-        )
-        ww = words.join(
-            F.broadcast(weights.select("word", F.col("weight").cast("long"))),
-            "word",
-            "left",
-        ).select("doc_id", F.coalesce(F.col("weight"), F.lit(0)).alias("w"))
-        agg = ww.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("w").cast("long").alias("logit_sum"),
-        )
-    else:
-        toks = F.split(F.col(text_col), " ")
-        wsum = F.aggregate(
-            F.transform(
-                toks,
-                lambda w: F.pmod(sha60_col(w), F.lit(vocab_mod)) - half,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        agg = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(toks).cast("long").alias("n_words"),
-            wsum.alias("logit_sum"),
-        )
-    return agg.select(
-        "doc_id",
-        "n_words",
-        "logit_sum",
-        (F.col("logit_sum").cast("double") / F.col("n_words").cast("double")).alias(
-            "logit"
-        ),
-        (F.col("logit_sum") >= 0).alias("keep"),
-    )
-
-
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    n_buckets: int = 1024,
-    k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """DSIR-style data selection (Xie et al., "Data Selection for
-    Language Models via Importance Resampling", NeurIPS'23): score
-    every raw-pool document by the log-likelihood ratio of a hashed
-    bag-of-words generative model trained on the TARGET domain vs one
-    trained on the raw pool, and keep the top-k — the stage that tilts
-    a web-scale corpus toward a target distribution (Wikipedia, a
-    benchmark domain, a language) without handwritten rules.
-
-    Model: words hash into `n_buckets` buckets (sha60 — deterministic
-    across engines and retries); p(bucket) is Laplace-smoothed
-    (count+1)/(total+B). Scores are QUANTIZED to integer bits exactly
-    like unigram_surprisal: per-word score = floor(log2(tc+1)) -
-    floor(log2(rc+1)) plus the constant normalizer bits, with
-    floor(log2(x)) = length(bin(x))-1 — no float transcendentals, so
-    the DuckDB oracle replays weights bit-for-bit (a production run
-    would use float ln; the quantization coarsens resolution, not the
-    plan). Ties at the cut break by doc_id ascending: fully
-    deterministic output.
-
-    100-TB shape (r9): the raw pool is tokenized+hashed ONCE into
-    per-doc bucket counts (the one corpus-proportional shuffle, keyed
-    (doc_id, bucket)); the target pays one explode+groupBy whose
-    final key space is `n_buckets` (partial agg collapses map-side);
-    the model rollup and normalizer totals are B-row table work (a
-    whole-frame window sum over the full-outer bucket join — no extra
-    corpus pass); the scoring table is B rows — broadcast, so scoring
-    is map-side over the bucket counts; top-k is TakeOrdered
-    (per-partition heads, no global sort). The target corpus may be
-    big or small — nothing here collects it."""
-    from ..functions.text import sha60_col
-
-    def word_buckets(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("word"),
-        ).select(
-            "doc_id",
-            F.pmod(
-                sha60_col(F.concat(F.lit("w-"), F.col("word"))),
-                F.lit(n_buckets),
-            )
-            .cast("long")
-            .alias("bucket"),
-        )
-
-    rw = word_buckets(raw)
-    tw = word_buckets(target)
-    # r9: ONE hashing pass over the raw pool (it used to be hashed
-    # twice — once for the bucket model, once for scoring): per-doc
-    # bucket occurrence counts `dbc` are the shared intermediate, and
-    # both consumers (the model's rc rollup and the per-doc scorer)
-    # sit on dbc's (doc_id, bucket) exchange; rc = sum(n_occ) and the
-    # occurrence-weighted score sums are exactly the old per-row
-    # aggregates. sha60 per word is the oracle-pinned cost, so
-    # halving the passes halves it.
-    dbc = rw.groupBy("doc_id", "bucket").agg(F.count("*").alias("n_occ"))
-    tc = tw.groupBy("bucket").agg(F.count("*").alias("tc"))
-    rc = dbc.groupBy("bucket").agg(F.sum("n_occ").alias("rc"))
-
-    def bits(c):
-        return (F.length(F.bin(c)) - 1).cast("long")
-
-    # r9 (guide §2.4): the normalizer totals used to be two MORE full
-    # corpus explode passes (count(*) over rw/tw); they are exactly
-    # sum(rc)/sum(tc), computed here as whole-frame window sums over
-    # the B-row FULL-OUTER bucket join (full outer so target buckets
-    # absent from the raw pool still count toward tt), then the score
-    # rows — rc-present buckets only, as before — carry c_bits along.
-    # Corpus passes drop from 5 to the DSIR minimum of 3 (train x2,
-    # score x1); the window runs on B rows in one partition, free.
-    from pyspark.sql import Window as W
-
-    w_all = W.partitionBy()
-    joined = rc.join(tc, "bucket", "full").select(
-        "bucket",
-        "rc",
-        "tc",
-        (F.sum(F.coalesce(F.col("rc"), F.lit(0))).over(w_all) + n_buckets).alias("tr"),
-        (F.sum(F.coalesce(F.col("tc"), F.lit(0))).over(w_all) + n_buckets).alias("tt"),
-    )
-    score = joined.filter(F.col("rc").isNotNull()).select(
-        "bucket",
-        (
-            bits(F.coalesce(F.col("tc"), F.lit(0)) + 1) - bits(F.col("rc") + 1)
-        ).alias("score_bits"),
-        (bits(F.col("tr")) - bits(F.col("tt"))).alias("c_bits"),
-    )
-    per_doc = (
-        dbc.join(F.broadcast(score), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_occ").alias("n_words"),
-            F.sum(F.col("n_occ") * F.col("score_bits")).alias("sum_bits"),
-            F.max("c_bits").alias("c_bits"),
-        )
-    )
-    return (
-        per_doc.select(
-            "doc_id",
-            F.col("n_words").cast("long").alias("n_words"),
-            (F.col("sum_bits") + F.col("n_words") * F.col("c_bits"))
-            .cast("long")
-            .alias("weight_bits"),
-        )
-        .orderBy(F.col("weight_bits").desc(), F.col("doc_id"))
-        .limit(k)
     )
 
 

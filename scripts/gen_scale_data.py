@@ -6,8 +6,7 @@ The driver's own sf1.0 directory is NOT retained between rounds, so
 absolute numbers on this data are only comparable to other runs on the
 SAME generated directory (self-relative A/Bs) — never to
 BENCH/bench_local_r9_sf1.json or the driver artifacts. Seeded and
-deterministic. Small TPC-H side tables are copied from sf0.1 verbatim
-(no declared query reads them; the sweep registers them in DuckDB).
+deterministic.
 
 Usage: python scripts/gen_scale_data.py /tmp/sfx1.0 [--docs 50000 --events 1000000]
 """
@@ -16,7 +15,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import shutil
 
 import numpy as np
 import pyarrow as pa
@@ -96,8 +94,6 @@ def main() -> None:
     rng = np.random.default_rng(args.seed)
     gen_documents(args.out_dir, args.docs, rng)
     gen_events(args.out_dir, args.events, rng)
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]:
-        shutil.copy(f"{SRC}/{t}.parquet", f"{args.out_dir}/{t}.parquet")
     print(f"generated {args.out_dir}: docs={args.docs} events={args.events}")
 
 

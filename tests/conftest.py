@@ -27,10 +27,7 @@ def duck():
 
 
 def register_views(con, sf_dir: str) -> None:
-    tables = (
-        "region nation customer supplier part orders lineitem events documents"
-    ).split()
-    for t in tables:
+    for t in ("events", "documents"):
         path = Path(sf_dir) / f"{t}.parquet"
         if path.exists():
             con.execute(

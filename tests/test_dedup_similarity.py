@@ -422,110 +422,6 @@ def test_line_dedup_constructed_corpus(spark):
     assert out[4] == (3, 3, sha("delta\ndelta\nepsilon"), 19)
 
 
-def test_bigram_surprisal_separates_scrambled_from_fluent(spark):
-    """The context signal unigram scoring cannot see: a scrambled
-    permutation of corpus-common words must out-surprise the fluent
-    ordering those words usually appear in (same unigram counts!),
-    and a 1-token doc scores (0 bigrams, 0 bits)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        bigram_surprisal,
-        unigram_surprisal,
-    )
-
-    fluent = "the cat sat on the mat"
-    docs = spark.createDataFrame(
-        [(i, fluent) for i in range(8)]
-        + [(100, "mat the on sat cat the"),  # same words, scrambled
-           (101, "solo")],
-        "doc_id long, text string",
-    )
-    bg = {r.doc_id: r for r in bigram_surprisal(docs).collect()}
-    assert bg[101].n_bigrams == 0 and bg[101].surprisal_bits == 0
-    assert bg[0].n_bigrams == 5 and bg[100].n_bigrams == 5
-    assert bg[100].surprisal_bits > bg[0].surprisal_bits
-    # unigram scoring is blind to the scramble (identical word bags)
-    ug = {r.doc_id: r for r in unigram_surprisal(docs).collect()}
-    assert ug[100].surprisal_bits == ug[0].surprisal_bits
-
-
-def test_linear_quality_score_weight_table_and_hash(spark):
-    """The broadcast weight-table branch scores exactly SUM(weight)
-    (unknown words weight 0), keep flips on the integer sign, and the
-    hashing-trick branch is deterministic across calls."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        linear_quality_score,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.plans.checks import (
-        explain_str,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "good good bad"), (2, "bad bad good"), (3, "mystery words only")],
-        "doc_id long, text string",
-    )
-    weights = spark.createDataFrame(
-        [("good", 5), ("bad", -4)], "word string, weight long"
-    )
-    out = {
-        r.doc_id: r for r in linear_quality_score(docs, weights=weights).collect()
-    }
-    assert (out[1].logit_sum, out[1].keep) == (6, True)    # 5+5-4
-    assert (out[2].logit_sum, out[2].keep) == (-3, False)  # -4-4+5
-    assert (out[3].logit_sum, out[3].keep) == (0, True)    # unknowns -> 0
-    assert out[1].n_words == 3 and abs(out[1].logit - 2.0) < 1e-12
-
-    h1 = sorted(map(tuple, linear_quality_score(docs).collect()))
-    h2 = sorted(map(tuple, linear_quality_score(docs).collect()))
-    assert h1 == h2
-    plan = explain_str(linear_quality_score(docs, weights=weights))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the hashing-trick branch is ZERO-shuffle pure column math:
-    # scan + project only — no Exchange, no aggregate, no Python.
-    # On a hash-weight table equal to the hashing trick, the two
-    # branches must agree exactly (integer parity across plans).
-    hplan = explain_str(linear_quality_score(docs))
-    for node in ("Exchange", "HashAggregate", "BatchEvalPython", "ArrowEvalPython"):
-        assert node not in hplan, node
-    from online_anomaly_detection_root_cause_analysis_spark.functions.text import (
-        sha60_col,
-    )
-
-    vocab = docs.select(
-        F.explode(F.split("text", " ")).alias("word")
-    ).distinct().select(
-        "word", (F.pmod(sha60_col(F.col("word")), F.lit(2001)) - 1000).alias("weight")
-    )
-    via_table = sorted(
-        map(tuple, linear_quality_score(docs, weights=vocab).collect())
-    )
-    assert via_table == h1
-
-
-def test_mixture_weights_upweights_low_resource(spark):
-    """Two langs with 9:1 token mass at T=0.5: q ~ p^2 would
-    DOWNweight the minority (T>1 flattens, T<1 sharpens — the
-    mBERT convention is alpha = 1/T in [0,1], so pass T=2.0 for
-    alpha=0.5), weights stay a probability distribution, and the
-    identity q/p holds per row."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        mixture_weights,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "w " * 8 + "w", "en") for i in range(9)]
-        + [(9, "w " * 8 + "w", "xh")],
-        ["doc_id", "text", "lang"],
-    )
-    out = {r["lang"]: r for r in mixture_weights(docs, temperature=2.0).collect()}
-    assert out["en"]["n_tokens"] == 81 and out["xh"]["n_tokens"] == 9
-    assert abs(out["en"]["p_data"] - 0.9) < 1e-6
-    # alpha=0.5: q_en = sqrt(.9)/(sqrt(.9)+sqrt(.1)) ~= 0.75
-    assert abs(out["en"]["p_sample"] - 0.75) < 0.01
-    assert out["xh"]["p_sample"] > out["xh"]["p_data"]
-    assert out["xh"]["sample_weight"] > 1.0 > out["en"]["sample_weight"]
-    assert abs(sum(r["p_sample"] for r in out.values()) - 1.0) < 1e-5
-
-
 def test_candidate_table_verify_and_star_match_in_query_clusters(spark):
     """The two ways to cluster near-dups agree (r6 VERDICT #8): LSH
     candidates verified in-query (`near_duplicates`) and clustered by
@@ -569,82 +465,6 @@ def test_candidate_table_verify_and_star_match_in_query_clusters(spark):
     lone = verify_candidate_pairs(docs, no_pairs, n=3, threshold=0.3)
     kept3 = kept(near_dup_clusters_star(lone.select("doc_a", "doc_b"), all_docs=docs))
     assert kept3 == {r.doc_id for r in docs.collect()}
-
-
-def test_mixture_weights_exact_integer_path(spark):
-    """T=0.5 (1/T = 2, integer) must take the BIGINT-exact path: q ~
-    n_tokens^2 with all three outputs single IEEE divisions of exact
-    integers — checked against closed-form values, the q/p identity,
-    and agreement with the general float-pow path (T=0.5-1e-7 forces
-    it past the integer-detection guard) to within the 1e-6 quantum."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        mixture_weights,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "w " * 8 + "w", "en") for i in range(9)]
-        + [(9, "w " * 8 + "w", "xh")],
-        ["doc_id", "text", "lang"],
-    )
-    out = {r["lang"]: r for r in mixture_weights(docs, temperature=0.5).collect()}
-    # p_en = 81/90 = .9; q_en = 81^2/(81^2+9^2) = 6561/6642
-    q_en = 6561 / 6642
-    assert abs(out["en"]["p_sample"] - round(q_en, 6)) < 1e-9
-    assert abs(out["en"]["sample_weight"] - round(q_en / 0.9, 6)) < 1e-5
-    # sharpening: T<1 upweights the MAJORITY under q ~ p^(1/T)
-    assert out["en"]["p_sample"] > out["en"]["p_data"]
-    flo = {
-        r["lang"]: r
-        for r in mixture_weights(docs, temperature=0.5 - 1e-7).collect()
-    }
-    for lang in out:
-        for c in ("p_data", "p_sample", "sample_weight"):
-            assert abs(out[lang][c] - flo[lang][c]) <= 2e-6, (lang, c)
-
-
-def test_mixture_weights_exact_path_k1_k3_k4(spark):
-    """r7 ADVICE: the exact-integer path hardcoded the k=2 weight
-    formula n*s1/sk. Closed forms at k=1 (T=1.0: identity — q==p,
-    weight==1.0 exactly, NOT n_tokens), k=3 (T=1/3: w = n^2*s1/s3)
-    and k=4 (T=0.25: w = n^3*s1/s4), plus agreement with the general
-    float-pow path nudged off the integer-detection guard."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        mixture_weights,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "w " * 8 + "w", "en") for i in range(9)]
-        + [(9, "w " * 8 + "w", "xh")],
-        ["doc_id", "text", "lang"],
-    )  # n_en=81, n_xh=9, s1=90
-
-    k1 = {r["lang"]: r for r in mixture_weights(docs, temperature=1.0).collect()}
-    for lang in ("en", "xh"):
-        assert k1[lang]["p_sample"] == k1[lang]["p_data"], lang
-        assert k1[lang]["sample_weight"] == 1.0, lang  # was n_tokens pre-fix
-
-    k3 = {
-        r["lang"]: r
-        for r in mixture_weights(docs, temperature=1.0 / 3.0).collect()
-    }
-    s3 = 81**3 + 9**3
-    assert abs(k3["en"]["p_sample"] - round(81**3 / s3, 6)) < 1e-9
-    assert abs(k3["en"]["sample_weight"] - round(81**2 * 90 / s3, 6)) < 1e-9
-    assert abs(k3["xh"]["sample_weight"] - round(9**2 * 90 / s3, 6)) < 1e-9
-
-    k4 = {r["lang"]: r for r in mixture_weights(docs, temperature=0.25).collect()}
-    s4 = 81**4 + 9**4
-    assert abs(k4["en"]["sample_weight"] - round(81**3 * 90 / s4, 6)) < 1e-9
-    assert abs(k4["xh"]["sample_weight"] - round(9**3 * 90 / s4, 6)) < 1e-9
-
-    for temp, exact in ((1.0, k1), (1.0 / 3.0, k3), (0.25, k4)):
-        flo = {
-            r["lang"]: r
-            for r in mixture_weights(docs, temperature=temp * (1 + 1e-7)).collect()
-        }
-        for lang in exact:
-            for c in ("p_data", "p_sample", "sample_weight"):
-                assert abs(exact[lang][c] - flo[lang][c]) <= 2e-6, (temp, lang, c)
 
 
 def test_near_dup_clusters_star_parity(spark):
@@ -770,35 +590,6 @@ def test_duplicate_spans_constructed(spark):
     assert out[4] == (10, 1, 9, 9, 0.9)
     assert out[5] == (10, 1, 9, 9, 0.9)
     assert out[6] == (3, 0, 0, 0, 0.0)
-
-
-def test_dsir_select_prefers_target_like_docs(spark):
-    """DSIR must rank the raw doc written in the target domain's
-    vocabulary above one written off-domain, and the cut must break
-    weight ties deterministically by doc_id."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        dsir_select,
-    )
-
-    target = spark.createDataFrame(
-        [(100, "alpha beta alpha beta gamma alpha beta"),
-         (101, "beta alpha beta gamma beta alpha")],
-        "doc_id long, text string",
-    )
-    raw = spark.createDataFrame(
-        [(1, "alpha beta alpha gamma beta alpha"),   # on-domain
-         (2, "xray yankee zulu quebec victor whisky"),  # off-domain
-         (3, "alpha xray beta zulu gamma quebec")],  # mixed
-        "doc_id long, text string",
-    )
-    out = dsir_select(raw, target, n_buckets=64, k=3).collect()
-    ranked = [r.doc_id for r in out]
-    w = {r.doc_id: r.weight_bits for r in out}
-    assert w[1] > w[3] > w[2]
-    assert ranked == sorted(w, key=lambda d: (-w[d], d))
-
-    top1 = dsir_select(raw, target, n_buckets=64, k=1).collect()
-    assert [r.doc_id for r in top1] == [1]
 
 
 def test_dataset_card_constructed(spark):

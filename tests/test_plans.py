@@ -340,32 +340,6 @@ def test_url_host_stats_stays_jvm_with_partial_agg(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_unigram_surprisal_plan_and_exact_bits(spark):
-    """Surprisal stays JVM-side with map-side partial counts; the
-    corpus-total N joins back as a broadcast scalar, never a shuffle.
-    Also pins the exact integer-bit math on a constructed corpus:
-    N=6 -> floor_log2=2; 'a' (count 5, 2 bits), 'b' (count 1, 0 bits);
-    all-common doc scores 0, the rare-word doc scores 2."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.textstats import (
-        unigram_surprisal,
-    )
-
-    df = e.q_unigram_surprisal(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert plan.count("HashAggregate") >= 4  # vocab + rollup, partial+final each
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-
-    docs = spark.createDataFrame(
-        [(1, "a a a a"), (2, "a b")], ["doc_id", "text"]
-    )
-    out = {r["doc_id"]: (r["n_words"], r["surprisal_bits"])
-           for r in unigram_surprisal(docs).collect()}
-    assert out[1] == (4, 0)
-    assert out[2] == (2, 2)
-
-
 def test_line_dedup_stays_jvm_partial_agg(spark):
     """Line-level dedup is pure JVM: posexplode + df count with
     map-side partials, line-key-co-partitioned filter join, one doc_id
@@ -376,17 +350,6 @@ def test_line_dedup_stays_jvm_partial_agg(spark):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "Window" not in plan  # reassembly must not be a window sort
-    assert plan.count("HashAggregate") >= 2
-
-
-def test_top_words_per_lang_window_group_limit(spark):
-    """The per-key top-k rank filter must compile to WindowGroupLimit
-    (per-partition top-k pruned before the window shuffle) with
-    map-side partial counts feeding it, all JVM."""
-    df = e.q_top_words_per_lang(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "WindowGroupLimit" in plan
-    assert "BatchEvalPython" not in plan
     assert plan.count("HashAggregate") >= 2
 
 
@@ -436,20 +399,6 @@ def test_duplicate_spans_plan_shape(spark):
 
     shuffles = re.findall(r"^\(\d+\) Exchange$", plan, re.MULTILINE)
     assert len(shuffles) == 2, plan
-
-
-def test_dsir_select_plan_shape(spark):
-    """DSIR scoring is map-side: the B-row score table (which since
-    r9 carries the scalar normalizer as a column, collapsing the old
-    second broadcast join) broadcasts, the top-k cut is TakeOrdered
-    (per-partition heads, no global sort), and nothing is Python."""
-    plan = explain_str(e.q_dsir_select(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "TakeOrderedAndProject" in plan
-    import re
-
-    assert len(re.findall(r"^\(\d+\) BroadcastExchange$", plan, re.MULTILINE)) >= 1
 
 
 def test_incremental_near_dups_plan_shape(spark):
