@@ -11,6 +11,7 @@ aggregates rounded to 4 decimals on both sides).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,9 +20,7 @@ from online_anomaly_detection_root_cause_analysis_spark.config import (
     DimensionSpec,
     EngineConfig,
     events_config,
-)
-from online_anomaly_detection_root_cause_analysis_spark.operators.contributors import (
-    hierarchical_contributors,
+    modulo_parent_value,
 )
 from online_anomaly_detection_root_cause_analysis_spark.operators.dedup import (
     MERSENNE_P,
@@ -41,13 +40,8 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.textstats impo
     document_text_stats,
 )
 from online_anomaly_detection_root_cause_analysis_spark.operators.baseline import (
-    breakdown_with_baseline,
     with_offset_baseline,
     with_offset_baseline_old,
-)
-from online_anomaly_detection_root_cause_analysis_spark.operators.contributors import (
-    simple_contributors,
-    summary_report,
 )
 from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
     dimension_breakdown,
@@ -58,6 +52,14 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.windows import
 )
 from online_anomaly_detection_root_cause_analysis_spark.sources.records import (
     build_event_records,
+)
+from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
+    long_form_window_aggs,
+)
+from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+    TOTAL_DIM,
+    TailConfig,
+    make_batch_tail,
 )
 
 SIZE_S = 300
@@ -125,27 +127,62 @@ def q_offset_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _alerts_df(spark: SparkSession, sf_dir: str):
-    records = _events(spark, sf_dir)
-    totals = sliding_window_totals(records, SIZE_S, SLIDE_S)
-    wb = with_offset_baseline(totals, BASELINE_N)
-    # data-relative thresholds (2x / 0.2x the mean window total) so the
-    # same query is meaningful at every scale factor
-    avg_current = totals.agg(F.avg("current").alias("_avg"))
-    wb2 = wb.crossJoin(F.broadcast(avg_current))
-    alerts = wb2.filter(
-        (F.col("current") > 2 * F.col("_avg")) | (F.col("current") < 0.2 * F.col("_avg"))
-    ).drop("_avg")
-    return records, totals, wb, alerts
+def _threshold_tail(
+    records: DataFrame, cfg: EngineConfig, with_hierarchy: bool = False,
+    **rca,
+) -> DataFrame:
+    """Threshold detection + RCA through the streaming tail
+    (StreamingTail, replayed by make_batch_tail) over 300 s / 60 s
+    sliding windows. The bounds are data-relative (0.2x / 2x the mean
+    window total) so the same query is meaningful at every scale
+    factor; `rca` holds the TailConfig RCA fields."""
+    aggs = long_form_window_aggs(
+        records, cfg, SIZE_S, SLIDE_S, None, with_hierarchy=with_hierarchy
+    )
+    avg = (
+        aggs.filter(F.col("dim_name") == TOTAL_DIM)
+        .agg(F.avg("dim_sum"))
+        .first()[0]
+    )
+    tail = TailConfig(
+        mode="threshold", min_value=0.2 * avg, max_value=2 * avg,
+        baseline_n=BASELINE_N, summary_size=SUMMARY_SIZE, **rca,
+    )
+    return make_batch_tail(aggs, tail)
+
+
+def _contributor_cols() -> list:
+    return [
+        _r4("current_value").alias("current_value"),
+        _r4("baseline_value").alias("baseline_value"),
+        _r4("cost").alias("cost"),
+        "value_change_pct",
+        "contribution_change_pct",
+        "contribution_to_overall_change_pct",
+        F.col("rank").cast("long").alias("rank"),
+    ]
+
+
+def _hierarchical_rows(out: DataFrame) -> DataFrame:
+    return out.filter(F.col("row_type") == "rca").select(
+        "window_start_epoch",
+        F.col("dim_group").alias("dimension_group"),
+        "dim_name",
+        "dim_value",
+        F.col("dim_level").cast("long").alias("dim_level"),
+        *_contributor_cols(),
+    )
 
 
 def q_threshold_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, _, _, alerts = _alerts_df(spark, sf_dir)
-    return alerts.select(
-        _epoch().alias("window_start_epoch"),
+    out = _threshold_tail(_events(spark, sf_dir), events_config())
+    return out.filter(F.col("row_type") == "alert").select(
+        "window_start_epoch",
         _r4("current").alias("current"),
         _r4("baseline").alias("baseline"),
-        "records_in_baseline_offset",
+        F.col("records_in_baseline_offset").cast("long").alias(
+            "records_in_baseline_offset"
+        ),
     )
 
 
@@ -178,23 +215,9 @@ def q_dimension_breakdown_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simple_contributors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    records, totals, wb, alerts_raw = _alerts_df(spark, sf_dir)
-    # deterministic anomaly id = the window epoch
-    alerts = alerts_raw.withColumn("anomaly_id", _epoch().cast("string"))
-    bd = dimension_breakdown(records, events_config(), SIZE_S, SLIDE_S)
-    bdw = breakdown_with_baseline(bd, wb, BASELINE_N, targets=alerts)
-    rca = simple_contributors(alerts, bdw, SUMMARY_SIZE)
-    return rca.select(
-        _epoch().alias("window_start_epoch"),
-        "dim_name",
-        "dim_value",
-        _r4("current_value").alias("current_value"),
-        _r4("baseline_value").alias("baseline_value"),
-        _r4("cost").alias("cost"),
-        "value_change_pct",
-        "contribution_change_pct",
-        "contribution_to_overall_change_pct",
-        F.col("rank").cast("long").alias("rank"),
+    out = _threshold_tail(_events(spark, sf_dir), events_config(), rca_mode="simple")
+    return out.filter(F.col("row_type") == "rca").select(
+        "window_start_epoch", "dim_name", "dim_value", *_contributor_cols()
     )
 
 
@@ -225,19 +248,6 @@ def q_window_sum_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r4("current").alias("current"),
         "start_timestamp",
         "n_records",
-    )
-
-
-def q_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R6 SummaryReport (empty stub in the reference pointing at
-    ThirdEye's cube SummaryResponse; rebuilt r4): per-anomaly rollup of
-    the ranked simple-contributor rows into one report row."""
-    return summary_report(q_simple_contributors(spark, sf_dir)).select(
-        "window_start_epoch",
-        "n_contributors",
-        "report",
-        _r4("total_cost").alias("total_cost"),
-        _r4("max_cost").alias("max_cost"),
     )
 
 
@@ -917,44 +927,14 @@ def q_hierarchical_contributors(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 5).cast("string").alias("user_band"),
         (F.col("user_id") % 10).cast("string").alias("user_bucket"),
     )
-    cfg = hier_events_config()
-    totals = sliding_window_totals(records, SIZE_S, SLIDE_S)
-    wb = with_offset_baseline(totals, BASELINE_N)
-    avg_current = totals.agg(F.avg("current").alias("_avg"))
-    alerts = (
-        wb.crossJoin(F.broadcast(avg_current))
-        .filter(
-            (F.col("current") > 2 * F.col("_avg"))
-            | (F.col("current") < 0.2 * F.col("_avg"))
-        )
-        .drop("_avg")
-        .withColumn("anomaly_id", _epoch().cast("string"))
-    )
-    bd = dimension_breakdown(records, cfg, SIZE_S, SLIDE_S)
-    bdw = breakdown_with_baseline(bd, wb, BASELINE_N, targets=alerts)
-    rca = hierarchical_contributors(
-        alerts,
-        bdw,
+    out = _threshold_tail(
+        records,
+        hier_events_config(),
+        rca_mode="hierarchical",
         parent_of={"user_bucket": "user_band"},
-        parent_value_exprs={
-            "user_bucket": (F.col("dim_value").cast("int") % 5).cast("string")
-        },
-        summary_size=SUMMARY_SIZE,
+        parent_value_fn=partial(modulo_parent_value, 5),
     )
-    return rca.select(
-        _epoch().alias("window_start_epoch"),
-        "dimension_group",
-        "dim_name",
-        "dim_value",
-        F.col("dim_level").cast("long").alias("dim_level"),
-        _r4("current_value").alias("current_value"),
-        _r4("baseline_value").alias("baseline_value"),
-        _r4("cost").alias("cost"),
-        "value_change_pct",
-        "contribution_change_pct",
-        "contribution_to_overall_change_pct",
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _hierarchical_rows(out)
 
 
 # ------------------- hierarchical RCA with a DATA-DEPENDENT hierarchy
@@ -980,12 +960,9 @@ def q_hierarchical_contributors_cooc(spark: SparkSession, sf_dir: str) -> DataFr
     user_seg = 'vip' if user_id % 97 == 0 else 'std': NOT derivable
     from the bucket value, and varying per (window, bucket) under the
     deterministic max-conflict rule (a bucket is 'vip' in exactly the
-    windows where a vip user hit it). Parent values are resolved by the
-    per-window co-occurrence join (hierarchy_cooccurrence)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        hierarchy_cooccurrence,
-    )
-
+    windows where a vip user hit it). Parent values ride the window
+    aggregation (long_form_window_aggs(with_hierarchy=True)) and the
+    tail resolves them per window (hierarchy_from_data=True)."""
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     records = df.select(
         F.col("ts"),
@@ -996,43 +973,15 @@ def q_hierarchical_contributors_cooc(spark: SparkSession, sf_dir: str) -> DataFr
         .alias("user_seg"),
         (F.col("user_id") % 10).cast("string").alias("user_bucket"),
     )
-    cfg = hier_cooc_events_config()
-    totals = sliding_window_totals(records, SIZE_S, SLIDE_S)
-    wb = with_offset_baseline(totals, BASELINE_N)
-    avg_current = totals.agg(F.avg("current").alias("_avg"))
-    alerts = (
-        wb.crossJoin(F.broadcast(avg_current))
-        .filter(
-            (F.col("current") > 2 * F.col("_avg"))
-            | (F.col("current") < 0.2 * F.col("_avg"))
-        )
-        .drop("_avg")
-        .withColumn("anomaly_id", _epoch().cast("string"))
-    )
-    bd = dimension_breakdown(records, cfg, SIZE_S, SLIDE_S)
-    bdw = breakdown_with_baseline(bd, wb, BASELINE_N, targets=alerts)
-    pairs = hierarchy_cooccurrence(records, cfg, SIZE_S, SLIDE_S)
-    rca = hierarchical_contributors(
-        alerts,
-        bdw,
+    out = _threshold_tail(
+        records,
+        hier_cooc_events_config(),
+        with_hierarchy=True,
+        rca_mode="hierarchical",
         parent_of={"user_bucket": "user_seg"},
-        parent_pairs=pairs,
-        summary_size=SUMMARY_SIZE,
+        hierarchy_from_data=True,
     )
-    return rca.select(
-        _epoch().alias("window_start_epoch"),
-        "dimension_group",
-        "dim_name",
-        "dim_value",
-        F.col("dim_level").cast("long").alias("dim_level"),
-        _r4("current_value").alias("current_value"),
-        _r4("baseline_value").alias("baseline_value"),
-        _r4("cost").alias("cost"),
-        "value_change_pct",
-        "contribution_change_pct",
-        "contribution_to_overall_change_pct",
-        F.col("rank").cast("long").alias("rank"),
-    )
+    return _hierarchical_rows(out)
 
 
 # ------------------------------------------------ EWMA z-score detector
@@ -1044,14 +993,6 @@ def q_zscore_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-step quantization of mean/var (algorithms/ewma.py) is what
     makes the DuckDB recursive-CTE oracle reproduce the sequence
     bit-for-bit."""
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
-    )
-
     records = _events(spark, sf_dir)
     # 1800s tumbling windows: the oracle replays the EWMA recursion as
     # a recursive CTE whose working-table join is quadratic in window
@@ -1119,14 +1060,6 @@ def q_zscore_alerts_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     the post-aggregation stage). Oracle: the zscore recursive CTE
     partitioned by key. Parity with N separate single-key runs is
     additionally pytest-gated (tests/test_streaming.py)."""
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
-    )
-
     records = _events(spark, sf_dir)
     aggs = _q6_aggs(
         long_form_window_aggs(records, events_config(), 1800, None, key="event_type")
@@ -1252,13 +1185,6 @@ def q_macrobase_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
       first `warmup` rows all carry window warmup's epoch and score."""
     from online_anomaly_detection_root_cause_analysis_spark.algorithms.ewfeature import (
         EWFeatureSpec,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
     )
 
     records = _events(spark, sf_dir)
@@ -1396,13 +1322,6 @@ def q_macrobase_alerts_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures exactly this tail at 8 keys."""
     from online_anomaly_detection_root_cause_analysis_spark.algorithms.ewfeature import (
         EWFeatureSpec,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
     )
 
     records = _events(spark, sf_dir)
@@ -1586,13 +1505,6 @@ def q_macrobase_summaries_single(
     from online_anomaly_detection_root_cause_analysis_spark.sources.records import (
         build_typed_records,
     )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
-    )
 
     cfg = events_config_single()
     records = build_typed_records(
@@ -1701,14 +1613,6 @@ def q_hstrees_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the workspace-bounds profile a production stream would configure
     from history; here the batch gate computes it in both engines
     identically)."""
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
-    )
-
     cfg = events_config_single()
     records = build_typed_records_events_single(spark, sf_dir, cfg)
     aggs = _q6_aggs(long_form_window_aggs(records, cfg, _MBS_WINDOW_S, None))
@@ -1756,14 +1660,6 @@ def q_hstrees_alerts_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the hstrees CTE chain with every window function and block
     index partitioned by key. Keys with fewer than hs_window+1 windows
     emit nothing (their first reference block never completes)."""
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
-    )
-
     cfg = events_config_single()
     records = build_typed_records_events_single(spark, sf_dir, cfg)
     aggs = _q6_aggs(
@@ -1953,13 +1849,6 @@ def q_macrobase_summaries_multiattr(spark: SparkSession, sf_dir: str) -> DataFra
     from online_anomaly_detection_root_cause_analysis_spark.algorithms.summarizer import (
         SummarizerSpec,
     )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
-    )
 
     records = _events(spark, sf_dir)
     aggs = _q6_aggs(
@@ -2055,13 +1944,6 @@ def q_macrobase_summaries_pairs(
     )
     from online_anomaly_detection_root_cause_analysis_spark.algorithms.summarizer import (
         SummarizerSpec,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
-        long_form_window_aggs,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        TailConfig,
-        make_batch_tail,
     )
 
     from online_anomaly_detection_root_cause_analysis_spark.sources.records import (
@@ -2578,7 +2460,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simple_contributors": q_simple_contributors,
         "hierarchical_contributors": q_hierarchical_contributors,
         "hierarchical_contributors_cooc": q_hierarchical_contributors_cooc,
-        "summary_report": q_summary_report,
         "macrobase_summaries": q_macrobase_summaries,
         "macrobase_summaries_decayed": q_macrobase_summaries_decayed,
         "macrobase_summaries_single": q_macrobase_summaries_single,
@@ -3700,7 +3581,7 @@ alerts AS (
 ),
 cpairs AS (
   -- per-window co-occurrence child->parent value map, max-conflict
-  -- rule (engine twin: operators/windows.py::hierarchy_cooccurrence)
+  -- rule (engine twin: long_form_window_aggs(with_hierarchy=True))
   SELECT ws, user_bucket AS dim_value, max(user_seg) AS parent_value
   FROM ({_CLF}) GROUP BY 1, 2
 ),
@@ -3840,15 +3721,6 @@ def oracle_sql() -> dict[str, str]:
                    min(CAST(floor(epoch(ts)) AS BIGINT)) AS start_timestamp,
                    count(*) AS n_records
             FROM events GROUP BY 1
-        """,
-        "summary_report": f"""
-            SELECT window_start_epoch,
-                   count(*) AS n_contributors,
-                   string_agg(dim_name || '=' || dim_value, ' > ' ORDER BY rank) AS report,
-                   floor(sum(cost)*10000 + 0.5)/10000 AS total_cost,
-                   floor(max(cost)*10000 + 0.5)/10000 AS max_cost
-            FROM ({_SIMPLE_CONTRIBUTORS_SQL})
-            GROUP BY 1
         """,
         "threshold_alerts": f"""
             WITH wb AS ({_WB}), stats AS (SELECT avg(current) AS avgc FROM ({_TOT}))

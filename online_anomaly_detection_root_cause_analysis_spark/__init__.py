@@ -16,10 +16,10 @@ Layout
                   AMC, FP-growth, risk ratio) — no Spark imports
 - ``functions``   vectorized pandas/Arrow UDFs + JVM-side column builders
 - ``sources``     deterministic pages generator, batch/stream readers
-- ``operators``   windowed aggregation, offset baseline, detectors, RCA
-                  contributor finders, dedup/text-analysis ops
-- ``detection``   the threshold detector pipeline
-- ``streaming``   stateful streaming stages, exactly-once sink, listener
+- ``operators``   batch windowed aggregation, offset baseline,
+                  dedup/text-analysis ops
+- ``streaming``   stateful streaming stages (the tail runs every detector
+                  and RCA finder), exactly-once sink, listener
 """
 
 __version__ = "0.1.0"

@@ -1,7 +1,13 @@
-"""ThirdEye contributor stats + simple/hierarchical costs, pure-Python
-form (used by the streaming tail where breakdowns live in operator
-state; the batch path uses the column-math twins in
-operators/contributors.py).
+"""ThirdEye contributor stats + simple/hierarchical costs: the engine's
+one implementation of the simple and hierarchical contributor finders.
+The streaming tail (streaming/state.py::StreamingTail) runs them on
+its per-window breakdowns, in the streaming job and in every batch
+RCA query (make_batch_tail); the DuckDB oracles check them there.
+
+NaN policy: the reference's zero-denominator stats are Double.NaN,
+which poisons the cost and then fails its `cost > 0` filter; the same
+happens here, and the tail emits a surviving row's NaN percentages as
+NULL, as the oracles do.
 
 Ports: Stats.scala:8-75, SimpleContributorsCost.scala:14-22,
 SimpleContributorsFinder.scala:44-76,
@@ -47,11 +53,10 @@ def _jround4(x: float) -> float:
 
 
 def _q6(x: float) -> float:
-    """6dp input quantization — identical to _jround6 in
-    operators/contributors.py. Both the batch column form and these
-    python twins quantize every cost/ratio input the same way, or
-    near-zero cost signs flip between the paths (and vs the DuckDB
-    oracle)."""
+    """6dp input quantization, floor(x*1e6+0.5)/1e6 as in the DuckDB
+    oracles: every cost/ratio input is quantized the same way on both
+    sides, or near-zero cost signs flip between the engine and the
+    oracle."""
     return _jscale(x, 1000000.0)
 
 
@@ -91,8 +96,7 @@ def contribution_to_overall_change_percentage(
     # that summary with a dominating cost. That output is degenerate
     # garbage (an artifact of Math.round saturation), so by default
     # this port returns NaN and the row is dropped by the cost > 0
-    # filter, matching the engine's NULL policy
-    # (operators/contributors.py stats_cols).
+    # filter (module docstring, NaN policy).
     #
     # strict_parity=True replicates the reference bit-for-bit instead
     # (ADVICE r3): ±Inf -> the Long.Max/Min saturation constants, and
@@ -143,8 +147,7 @@ def simple_contributor_summaries(
     return out[:summary_size]
 
 
-# ------------------------- hierarchical (balanced) cost, python twin
-# of operators/contributors.py::hierarchical_contributors
+# ------------------------------------- hierarchical (balanced) cost
 
 
 def _sdiv(a: float, b: float) -> float:

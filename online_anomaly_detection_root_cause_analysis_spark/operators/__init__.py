@@ -1,7 +1,8 @@
-"""Windowed aggregation, baselines, detectors and RCA contributor
-finders. The text-curation operators (`dedup`, `textstats`) are not
-re-exported: import them by module, so the AD/RCA path never loads
-them."""
+"""Windowed aggregation and baselines for the batch queries. Threshold
+detection and RCA run only in the streaming tail
+(streaming/state.py::StreamingTail). The text-curation operators
+(`dedup`, `textstats`) are not re-exported: import them by module, so
+the AD/RCA path never loads them."""
 
 from .windows import (
     dimension_breakdown,
@@ -9,18 +10,12 @@ from .windows import (
     sliding_window_totals,
     tumbling_window_totals,
 )
-from .baseline import breakdown_with_baseline, with_offset_baseline
-from .threshold import threshold_alerts
-from .contributors import simple_contributors, hierarchical_contributors
+from .baseline import with_offset_baseline
 
 __all__ = [
-    "breakdown_with_baseline",
     "dimension_breakdown",
-    "hierarchical_contributors",
     "session_window_agg",
-    "simple_contributors",
     "sliding_window_totals",
-    "threshold_alerts",
     "tumbling_window_totals",
     "with_offset_baseline",
 ]

@@ -4,26 +4,20 @@ The reference computes this with a count-window of the last n window
 aggregates (`countWindowAll(n, 1)`, ThresholdDetector.scala:34) fed to
 OffsetBaselineAggregator.scala:10-64: newest aggregate = `current`,
 baseline = mean of the earlier ones in the buffer (NaN -> NULL here
-when the buffer has no history), and the per-dimension baseline =
-summed trailing breakdowns divided by the *number of trailing
-windows* (not dimension occurrences — OffsetBaselineAggregator
-.scala:41), so dims absent from some trailing windows are diluted.
+when the buffer has no history).
 
-Batch plan, Spark-first:
-- totals: `row_number` over window_start gives each emitted
-  (non-empty) window its arrival index — exactly the reference's
-  count-window ordering under its ascending-timestamp contract — then
-  `avg/count OVER (ROWS BETWEEN n-1 PRECEDING AND 1 PRECEDING)`. This
-  ordering window runs on one task but carries ~1 row per slide
-  (pre-aggregated), the same deliberate serialization point as the
-  reference's parallelism-1 count window (SURVEY.md §7.3).
-- breakdown: no per-dimension ordering window. Each breakdown row
-  (window i, dim, sum) is exploded to the n-1 future window indexes it
-  backs, then grouped — fully distributed, and it naturally produces
-  rows for dimensions present only in the baseline (the finders need
-  the keyset union, SimpleContributorsFinder.scala:51-53).
+Batch plan, Spark-first: `row_number` over window_start gives each
+emitted (non-empty) window its arrival index — exactly the reference's
+count-window ordering under its ascending-timestamp contract — then
+`avg/count OVER (ROWS BETWEEN n-1 PRECEDING AND 1 PRECEDING)`. This
+ordering window runs on one task but carries ~1 row per slide
+(pre-aggregated), the same deliberate serialization point as the
+reference's parallelism-1 count window (SURVEY.md §7.3).
 
-The streaming form is the aIPWS deque in streaming/state.py.
+The per-dimension baseline (summed trailing breakdowns divided by the
+number of trailing windows, OffsetBaselineAggregator.scala:41) lives
+only in the streaming tail's deque, streaming/state.py, which every
+RCA query runs.
 """
 
 from __future__ import annotations
@@ -88,67 +82,4 @@ def with_offset_baseline_old(window_totals: DataFrame, n: int = 10) -> DataFrame
         .withColumn("records_in_baseline_offset", (F.col("_cnt") - 1).cast("int"))
         .withColumn("current_old", F.col("_first"))
         .drop("_first", "_cnt")
-    )
-
-
-def breakdown_with_baseline(
-    breakdown: DataFrame, totals_with_idx: DataFrame, n: int = 10,
-    targets: DataFrame | None = None,
-) -> DataFrame:
-    """Long-form rows (window, dim) -> (dim_current, dim_baseline),
-    including dims present only in the trailing baseline (dim_current
-    0) or only in the current window (dim_baseline 0 when history
-    exists, NULL when the offset buffer is empty — the reference emits
-    an empty baseline map then).
-
-    `targets` (optional, a DataFrame with a window_idx column, e.g.
-    the alert windows) prunes the computation to just those target
-    windows *before* the n-1x explode and the shuffle — the RCA path
-    only ever consumes alert windows, so this is a pure win (40x fewer
-    grid rows at 2.4% alert rate) with identical per-window results."""
-    idx = totals_with_idx.select(
-        "window_start", "window_idx", "records_in_baseline_offset"
-    )
-    b = breakdown.join(F.broadcast(idx).drop("records_in_baseline_offset"), "window_start")
-
-    dim_cols = ["dim_name", "dim_value", "dim_group", "dim_level"]
-
-    current = b.select(
-        F.col("window_idx").alias("target_idx"), *dim_cols,
-        F.col("dim_sum").alias("dim_current"),
-    )
-
-    future = b.select(
-        F.explode(
-            F.sequence(F.col("window_idx") + 1, F.col("window_idx") + (n - 1))
-        ).alias("target_idx"),
-        *dim_cols,
-        "dim_sum",
-    )
-
-    if targets is not None:
-        t = targets.select(F.col("window_idx").alias("target_idx")).distinct()
-        current = current.join(F.broadcast(t), "target_idx", "left_semi")
-        future = future.join(F.broadcast(t), "target_idx", "left_semi")
-    trailing = future.groupBy("target_idx", *dim_cols).agg(
-        F.sum("dim_sum").alias("_trailing_sum")
-    )
-
-    joined = current.join(trailing, ["target_idx", *dim_cols], "full_outer")
-
-    # attach window metadata; inner join drops phantom future indexes
-    out = joined.join(
-        F.broadcast(idx), joined.target_idx == idx.window_idx, "inner"
-    )
-    return out.select(
-        "window_start",
-        "window_idx",
-        *dim_cols,
-        F.coalesce(F.col("dim_current"), F.lit(0.0)).alias("dim_current"),
-        F.when(
-            F.col("records_in_baseline_offset") > 0,
-            F.coalesce(F.col("_trailing_sum"), F.lit(0.0))
-            / F.col("records_in_baseline_offset"),
-        ).alias("dim_baseline"),
-        "records_in_baseline_offset",
     )

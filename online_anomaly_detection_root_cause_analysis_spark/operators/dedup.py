@@ -1072,8 +1072,8 @@ def near_dup_clusters(
     # re-reads the edges, and without materialization each round would
     # re-execute the whole upstream LSH+verify pipeline (measured 76 s
     # -> ~8 s at sf0.001). The same reasoning does NOT apply to the
-    # one-pass queries (see hierarchical_contributors' rejected-cache
-    # note): persist pays only when a frame is consumed by MANY jobs.
+    # one-pass queries: persist pays only when a frame is consumed by
+    # MANY jobs.
     #
     # r9 second pass: materialize the DIRECTED edges first (one narrow
     # persist + count), THEN build the symmetric closure from the

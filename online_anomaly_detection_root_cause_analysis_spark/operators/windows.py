@@ -281,62 +281,6 @@ def dimension_breakdown(
     )
 
 
-def hierarchy_cooccurrence(
-    records: DataFrame,
-    cfg: EngineConfig,
-    size_s: int = 300,
-    slide_s: int | None = 60,
-    ts: str = "ts",
-) -> DataFrame:
-    """Per-window data-dependent child->parent value pairs
-    (window_start, dim_name, dim_value, parent_name, parent_value).
-
-    The reference builds the child->parent Dimension map from each
-    record's OWN field values (DimensionHierarchiesBuilder.scala:9-16;
-    e.g. ca_city's parent ca_county is a separate record field,
-    application.conf:12-31) — the parent value need not be derivable
-    from the child value. This operator rebuilds that as a per-window
-    co-occurrence aggregation: for every configured (child, parent)
-    dimension pair, the parent value observed alongside each child
-    value within the window.
-
-    Deterministic deviation: when a child value co-occurs with several
-    parent values inside one window the reference keeps whichever
-    record's map merged last (Scala map ++, order-dependent under
-    parallelism); here the MAX parent value wins — deterministic and
-    SQL-mirrorable.
-
-    Scale shape: same single shuffle pattern as dimension_breakdown,
-    keyed (window, child name, child value) — pairs are a strict
-    subset of the breakdown keys, so this adds no new skew surface."""
-    pairs = cfg.hierarchy_pairs()
-    if not pairs:
-        raise ValueError("config declares no child->parent dimension pairs")
-    stack_expr = "stack({}, {}) as (dim_name, dim_value, _pv)".format(
-        len(pairs),
-        ", ".join(
-            f"'{c}', cast(`{c}` as string), cast(`{p}` as string)"
-            for c, p in pairs
-        ),
-    )
-    parent_name_map = F.create_map(
-        *[x for c, p in pairs for x in (F.lit(c), F.lit(p))]
-    )
-    w = _window_col(ts, size_s, slide_s)
-    return (
-        records.select(w.alias("w"), F.expr(stack_expr))
-        .groupBy("w", "dim_name", "dim_value")
-        .agg(F.max("_pv").alias("parent_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "dim_name",
-            "dim_value",
-            parent_name_map[F.col("dim_name")].alias("parent_name"),
-            "parent_value",
-        )
-    )
-
-
 def session_window_agg(
     records: DataFrame,
     key: str,

@@ -64,21 +64,14 @@ def typed_dimension_cols(cfg: EngineConfig) -> dict[str, "F.Column"]:
     }
 
 
-def build_typed_records(
-    df: DataFrame, cfg: EngineConfig, ts_pattern: str | None = None
-) -> DataFrame:
+def build_typed_records(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Config-generic record building: project (ts, value, dims...)
     purely from EngineConfig — the analog of the reference's
     config-driven InputRecord construction (InputRecordStreamBuilder
-    .scala:33-41). ts_pattern parses a string timestamp field (the
-    reference's fixed ISO pattern, InputRecord.scala:14-18); omit it
-    when the source column is already a timestamp."""
-    ts_col = F.col(cfg.timestamp_field)
-    if ts_pattern is not None:
-        ts_col = F.to_timestamp(ts_col, ts_pattern)
+    .scala:33-41). The timestamp field must already be a timestamp."""
     dims = typed_dimension_cols(cfg)
     return df.select(
-        ts_col.alias("ts"),
+        F.col(cfg.timestamp_field).alias("ts"),
         F.col(cfg.value_field).cast("double").alias("value"),
         *[c.alias(name) for name, c in dims.items()],
     )

@@ -159,7 +159,7 @@ def long_form_window_aggs(
     aggs = [F.sum("_value").alias("dim_sum"), F.count(F.lit(1)).alias("dim_count")]
     if with_hierarchy:
         # deterministic conflict rule: max co-occurring parent value
-        # (operators/windows.py::hierarchy_cooccurrence has the twin)
+        # (the hierarchical_contributors_cooc oracle's cpairs mirror it)
         aggs.append(F.max("_pv").alias("parent_value"))
     group_cols = [w.alias("w"), "dim_name", "dim_value"]
     if key is not None:

@@ -36,7 +36,12 @@ import pandas as pd
 from ..algorithms.ewfeature import EWFeatureSpec, EWFeatureTransform
 from ..algorithms.ewma import EWMAZScore
 from ..algorithms.ewpercentile import EWAppxPercentileAuxiliary
-from ..algorithms.models import AggregatedRecordsWBaseline, AnomalyEvent, Dimension
+from ..algorithms.models import (
+    AggregatedRecordsWBaseline,
+    AnomalyEvent,
+    Dimension,
+    DimensionSummary,
+)
 from ..algorithms.stats import (
     hierarchical_contributor_summaries,
     simple_contributor_summaries,
@@ -103,8 +108,8 @@ class TailConfig:
     # the parent is an independent record field
     # (DimensionHierarchiesBuilder.scala:9-16). Window-scoped: children
     # absent from the anomalous window have no pair and fall back to
-    # the ratio-1 rule, matching the batch column form's
-    # parent_pairs join.
+    # the ratio-1 rule, as the hierarchical_contributors_cooc oracle
+    # does.
     hierarchy_from_data: bool = False
 
     def __post_init__(self) -> None:
@@ -135,7 +140,9 @@ def tail_output_schema(with_key: bool = False) -> str:
         "ratio_to_inliers double, n_dims int, summary_id long, "
         "dim_group string, dim_level int, "
         "dim_name string, dim_value string, cost double, "
-        "current_value double, baseline_value double"
+        "current_value double, baseline_value double, "
+        "value_change_pct double, contribution_change_pct double, "
+        "contribution_to_overall_change_pct double, rank int"
     )
     return f"tail_key string, {base}" if with_key else base
 
@@ -146,11 +153,46 @@ _OUT_COLUMNS = [
     "num_records", "ratio_to_inliers", "n_dims", "summary_id",
     "dim_group", "dim_level",
     "dim_name", "dim_value", "cost", "current_value", "baseline_value",
+    "value_change_pct", "contribution_change_pct",
+    "contribution_to_overall_change_pct", "rank",
 ]
 
 
 def _empty_row() -> dict[str, Any]:
     return {c: None for c in _OUT_COLUMNS}
+
+
+def _null_nan(x: float) -> float | None:
+    # a zero-denominator percentage is NaN in algorithms/stats.py; the
+    # rca rows carry it as NULL, like the DuckDB oracles
+    return None if math.isnan(x) else x
+
+
+def _summary_row(
+    seq: int, window_start: int, rec: AggregatedRecordsWBaseline,
+    s: DimensionSummary, rank: int, n_dims: int,
+) -> dict[str, Any]:
+    """One contributor of a simple/hierarchical finder as an rca row;
+    `rank` is its 1-based position in the finder's (-cost, name,
+    value) order."""
+    row = _empty_row()
+    row.update(
+        row_type="rca", seq=seq, window_start_epoch=window_start,
+        current=rec.current,
+        baseline=None if math.isnan(rec.baseline) else rec.baseline,
+        n_dims=n_dims,
+        dim_group=s.dimension.group, dim_level=s.dimension.level,
+        dim_name=s.dimension.name, dim_value=s.dimension.value,
+        cost=s.cost, current_value=s.current_value,
+        baseline_value=s.baseline_value,
+        value_change_pct=_null_nan(s.value_change_percentage),
+        contribution_change_pct=_null_nan(s.contribution_change_percentage),
+        contribution_to_overall_change_pct=_null_nan(
+            s.contribution_to_overall_change_percentage
+        ),
+        rank=rank,
+    )
+    return row
 
 
 @dataclass
@@ -252,7 +294,6 @@ class StreamingTail:
     def _rca_rows_simple(
         self, window_start: int, rec: AggregatedRecordsWBaseline
     ) -> list[dict[str, Any]]:
-        rows = []
         summaries = simple_contributor_summaries(
             rec.current_dimensions_breakdown,
             rec.baseline_dimensions_breakdown,
@@ -260,20 +301,10 @@ class StreamingTail:
             0.0 if math.isnan(rec.baseline) else rec.baseline,
             self.config.summary_size,
         )
-        for s in summaries:
-            row = _empty_row()
-            row.update(
-                row_type="rca", seq=self.seq, window_start_epoch=window_start,
-                current=rec.current,
-                baseline=None if math.isnan(rec.baseline) else rec.baseline,
-                n_dims=len(summaries),
-                dim_group=s.dimension.group, dim_level=s.dimension.level,
-                dim_name=s.dimension.name, dim_value=s.dimension.value,
-                cost=s.cost, current_value=s.current_value,
-                baseline_value=s.baseline_value,
-            )
-            rows.append(row)
-        return rows
+        return [
+            _summary_row(self.seq, window_start, rec, s, rank, len(summaries))
+            for rank, s in enumerate(summaries, 1)
+        ]
 
     def _hierarchy(self, dims) -> dict[Dimension, Dimension]:
         """Child -> parent Dimension map (twin of
@@ -301,7 +332,7 @@ class StreamingTail:
     ) -> list[dict[str, Any]]:
         """One RCAResult per dimension group (keyByDimensionGroup,
         HierarchicalContributorsFinder.scala:150-177), flattened to
-        long-form rows."""
+        long-form rows; `rank` restarts at 1 in each group."""
         rows: list[dict[str, Any]] = []
         groups = sorted(
             {d.group for d in rec.current_dimensions_breakdown}
@@ -325,19 +356,10 @@ class StreamingTail:
                 cur, base, rec.current, baseline_total, hier,
                 self.config.summary_size,
             )
-            for s in summaries:
-                row = _empty_row()
-                row.update(
-                    row_type="rca", seq=self.seq, window_start_epoch=window_start,
-                    current=rec.current,
-                    baseline=None if math.isnan(rec.baseline) else rec.baseline,
-                    n_dims=len(summaries),
-                    dim_group=group, dim_level=s.dimension.level,
-                    dim_name=s.dimension.name, dim_value=s.dimension.value,
-                    cost=s.cost, current_value=s.current_value,
-                    baseline_value=s.baseline_value,
-                )
-                rows.append(row)
+            rows.extend(
+                _summary_row(self.seq, window_start, rec, s, rank, len(summaries))
+                for rank, s in enumerate(summaries, 1)
+            )
         return rows
 
     def _summarizer_rows(
@@ -522,6 +544,8 @@ _OUT_DTYPES = {
     "dim_group": "object", "dim_level": "float64",
     "dim_name": "object", "dim_value": "object", "cost": "float64",
     "current_value": "float64", "baseline_value": "float64",
+    "value_change_pct": "float64", "contribution_change_pct": "float64",
+    "contribution_to_overall_change_pct": "float64", "rank": "float64",
 }
 
 

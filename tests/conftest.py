@@ -6,8 +6,6 @@ import pytest
 REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO_ROOT))
 
-TESTDATA = Path("/root/testdata")
-
 
 @pytest.fixture(scope="session")
 def spark():

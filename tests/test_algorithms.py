@@ -279,8 +279,8 @@ class TestStreamingFPGrowth:
 class TestHierarchicalImportance:
     """dimension_importance (the reference's per-level top-k fold,
     HierarchicalContributorsFinder.scala:184-198) must equal the global
-    top-k over all levels — the equivalence the batch column form's
-    single row_number rank relies on (operators/contributors.py)."""
+    top-k over all levels — the equivalence the hierarchical DuckDB
+    oracles' single row_number rank relies on."""
 
     def test_fold_equals_global_topk_property(self):
         import random
@@ -401,43 +401,6 @@ class TestCtocSaturationParity:
         assert hierarchy == {}  # NaN parent_value never becomes a key
         for dim in breakdown:
             assert isinstance(dim.value, str)
-
-    def test_stats_cols_column_path_matches_scalar(self, spark):
-        """The Spark column implementation of the strict-parity ctoc
-        saturation agrees with the scalar reference replay on every
-        branch (pos/neg/0-0 saturation, normal path, NULL path)."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from online_anomaly_detection_root_cause_analysis_spark.algorithms.stats import (
-            contribution_to_overall_change_percentage as ctoc_scalar,
-        )
-        from online_anomaly_detection_root_cause_analysis_spark.operators.contributors import (
-            stats_cols,
-        )
-
-        cases = [
-            (10.0, 20.0, 150.0, 100.0),  # normal
-            (20.0, 10.0, 100.0, 100.0),  # equal totals, current > baseline
-            (10.0, 20.0, 100.0, 100.0),  # equal totals, current < baseline
-            (10.0, 10.0, 100.0, 100.0),  # equal totals, equal values
-            (1.0, 2.0, 100.0, 0.0),      # zero baseline_total
-        ]
-        df = spark.createDataFrame(
-            pd.DataFrame(cases, columns=["cur", "base", "ct", "bt"])
-        )
-        out = df.select(
-            stats_cols(
-                F.col("cur"), F.col("base"), F.col("ct"), F.col("bt"),
-                strict_parity=True,
-            )["contribution_to_overall_change_pct"].alias("ctoc")
-        ).collect()
-        for row, (cur, base, ct, bt) in zip(out, cases):
-            want = ctoc_scalar(base, cur, bt, ct, strict_parity=True)
-            if math.isnan(want):
-                assert row.ctoc is None
-            else:
-                assert row.ctoc == want
 
 
 class TestHalfSpaceTrees:

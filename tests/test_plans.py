@@ -93,12 +93,6 @@ def test_salt_varies_within_constant_value_hot_key(spark):
     )
 
 
-def test_rca_joins_broadcast_alerts(spark):
-    df = e.q_simple_contributors(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 def test_pages_metric_path_never_reads_html(spark, tmp_path):
     from online_anomaly_detection_root_cause_analysis_spark.config import (
         web_pages_config,
@@ -142,17 +136,6 @@ def test_text_features_stay_jvm_side(spark):
         plan = explain_str(q(spark, SF_DIR))
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
-
-
-def test_hierarchical_cooc_stays_jvm_side(spark):
-    """The data-dependent hierarchy path is pure column math + joins —
-    the co-occurrence pairs must not drag anything into Python, and the
-    small alert set still broadcasts."""
-    df = e.q_hierarchical_contributors_cooc(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def test_near_duplicates_candidates_not_force_broadcast(spark):
@@ -232,39 +215,13 @@ def test_deprecated_aggregator_ports(spark):
     assert out[600.0].n_records == 1 and out[600.0].current == 8.0
 
 
-def test_summary_report_rollup(spark):
-    """R6 SummaryReport rollup: rank-ordered report string, numeric
-    roll-ups stay numeric (no float rendering in the string)."""
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.contributors import (
-        summary_report,
-    )
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "window_start_epoch": [1, 1, 1, 2],
-                "dim_name": ["a", "b", "c", "a"],
-                "dim_value": ["x", "y", "z", "q"],
-                "cost": [5.0, 3.0, 1.0, 2.0],
-                "rank": [1, 2, 3, 1],
-            }
-        )
-    )
-    out = {r.window_start_epoch: r for r in summary_report(df).collect()}
-    assert out[1].report == "a=x > b=y > c=z"
-    assert out[1].n_contributors == 3
-    assert out[1].total_cost == 9.0 and out[1].max_cost == 5.0
-    assert out[2].report == "a=q"
-
-
 def test_r4_queries_plan_shape(spark):
     """Plan hygiene for the round-4 queries: the deprecated-aggregator
-    ports and the report rollup are pure JVM column plans (no Python
-    in any form); the old baseline runs ONE ordering window; the
-    summarizer gate's only Python is the single fused tail."""
-    for q in (e.q_offset_baseline_old, e.q_window_sum_simple, e.q_summary_report):
+    ports are pure JVM column plans (no Python in any form); the old
+    baseline runs ONE ordering window; the summarizer gate's and the
+    threshold/contributor queries' only Python is the single fused
+    tail."""
+    for q in (e.q_offset_baseline_old, e.q_window_sum_simple):
         plan = explain_str(q(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, q.__name__
         assert "ArrowEvalPython" not in plan, q.__name__
@@ -274,12 +231,19 @@ def test_r4_queries_plan_shape(spark):
     simple = explain_str(e.q_window_sum_simple(spark, SF_DIR))
     assert simple.count("HashAggregate") >= 2  # partial + final
 
-    mbs = explain_str(e.q_macrobase_summaries_single(spark, SF_DIR))
     # the fused tail is the ONLY Python crossing (formatted explain
     # lists each node twice: tree + detail section)
-    assert "FlatMapGroupsInPandas" in mbs
-    assert mbs.count("FlatMapGroupsInPandas (") == 1
-    assert "BatchEvalPython" not in mbs and "ArrowEvalPython" not in mbs
+    for q in (
+        e.q_macrobase_summaries_single,
+        e.q_threshold_alerts,
+        e.q_simple_contributors,
+        e.q_hierarchical_contributors,
+        e.q_hierarchical_contributors_cooc,
+    ):
+        plan = explain_str(q(spark, SF_DIR))
+        assert plan.count("FlatMapGroupsInPandas (") == 1, q.__name__
+        assert "BatchEvalPython" not in plan, q.__name__
+        assert "ArrowEvalPython" not in plan, q.__name__
 
 
 def test_r5_queries_plan_shape(spark):

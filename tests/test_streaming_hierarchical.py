@@ -1,36 +1,23 @@
 """Streaming hierarchical RCA (VERDICT r1 next-steps #3): the
 reference streaming job dispatches hierarchical | simple | macrobase
 RCA (jobs/MainJob.scala:86-110); TailConfig(rca_mode="hierarchical")
-is the streaming-tail twin of the batch column form
-operators/contributors.py::hierarchical_contributors.
+runs the hierarchical finder in the streaming tail.
 
 Two gates:
 1. streaming applyInPandasWithState output == pure-Python replay of
    the same finalized windows (mirror of test_streaming_macrobase);
-2. batch replay of the tail == the oracle-verified batch column form
-   on the events table (same alerts, same ranked dimensions, costs
-   within float tolerance — the column form quantizes stat inputs to
-   6dp, the tail computes on raw doubles).
+2. the batch replay of the same tail (make_batch_tail) is what the
+   hierarchical_contributors(_cooc) queries run, so their DuckDB
+   oracles (tests/test_oracle_parity.py) check the tail directly.
 """
-
-from functools import partial
 
 from pyspark.sql import functions as F
 
 from online_anomaly_detection_root_cause_analysis_spark.config import (
-    modulo_parent_value,
     web_pages_config,
     web_pages_parent_value,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.baseline import (
-    breakdown_with_baseline,
-    with_offset_baseline,
-)
-from online_anomaly_detection_root_cause_analysis_spark.operators.contributors import (
-    hierarchical_contributors,
-)
 from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-    dimension_breakdown,
     sliding_window_totals,
 )
 from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
@@ -48,7 +35,6 @@ from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
 from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
     StreamingTail,
     TailConfig,
-    make_batch_tail,
     rows_to_windows,
 )
 
@@ -130,88 +116,16 @@ def test_streaming_hierarchical_matches_replay(spark, tmp_path):
     assert got == want
 
 
-def test_batch_tail_matches_column_form(spark):
-    """Python twin vs the (DuckDB-oracle-verified) batch column form,
-    over the sf0.001 events table with the user_bucket -> user_band
-    hierarchy."""
-    sf_dir = "/root/testdata/sf0.001"
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    records = df.select(
-        F.col("ts"),
-        F.col("value").cast("double").alias("value"),
-        F.col("event_type"),
-        (F.col("user_id") % 5).cast("string").alias("user_band"),
-        (F.col("user_id") % 10).cast("string").alias("user_bucket"),
-    )
-    import __spark_entry__ as entrymod
-
-    cfg = entrymod.hier_events_config()
-    totals = sliding_window_totals(records, 300, 60)
-    wb = with_offset_baseline(totals, 10)
-    avg = totals.agg(F.avg("current")).collect()[0][0]
-
-    # batch column form with the same absolute thresholds
-    alerts = (
-        wb.filter((F.col("current") > 2 * avg) | (F.col("current") < 0.2 * avg))
-        .withColumn("anomaly_id", F.unix_timestamp("window_start").cast("string"))
-    )
-    bd = dimension_breakdown(records, cfg, 300, 60)
-    bdw = breakdown_with_baseline(bd, wb, 10, targets=alerts)
-    batch = hierarchical_contributors(
-        alerts,
-        bdw,
-        parent_of={"user_bucket": "user_band"},
-        parent_value_exprs={
-            "user_bucket": (F.col("dim_value").cast("int") % 5).cast("string")
-        },
-        summary_size=5,
-    ).collect()
-
-    tail_cfg = TailConfig(
-        mode="threshold",
-        rca_mode="hierarchical",
-        min_value=0.2 * avg,
-        max_value=2 * avg,
-        parent_of={"user_bucket": "user_band"},
-        parent_value_fn=partial(modulo_parent_value, 5),
-        summary_size=5,
-    )
-    aggs = long_form_window_aggs(records, cfg, 300, 60)
-    tail_out = make_batch_tail(aggs, tail_cfg)
-    tail_rca = tail_out.filter(F.col("row_type") == "rca").collect()
-
-    got = {
-        (r.window_start_epoch, r.dim_group, r.dim_name, r.dim_value): r.cost
-        for r in tail_rca
-    }
-    want = {
-        (
-            int(r.window_start.timestamp()),
-            r.dimension_group,
-            r.dim_name,
-            r.dim_value,
-        ): r.cost
-        for r in batch
-    }
-    assert set(got) == set(want)
-    for k, cost in want.items():
-        assert abs(got[k] - cost) <= max(1e-6, 1e-6 * abs(cost)), (k, got[k], cost)
-
-
 def test_hierarchy_cooccurrence_conflict_rule(spark):
-    """The deterministic max-conflict rule, in both resolution paths:
-    when a child value co-occurs with several parent values inside one
-    window, the MAX parent wins — in hierarchy_cooccurrence (batch
-    pairs) and in long_form_window_aggs(with_hierarchy=True) (the
-    streaming carry), identically; and the mapping is window-scoped."""
+    """The deterministic max-conflict rule of the streaming carry: when
+    a child value co-occurs with several parent values inside one
+    window, the MAX parent wins in long_form_window_aggs(
+    with_hierarchy=True); and the mapping is window-scoped."""
     import pandas as pd
 
     from online_anomaly_detection_root_cause_analysis_spark.config import (
         DimensionSpec,
         EngineConfig,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        hierarchy_cooccurrence,
     )
 
     cfg = EngineConfig(
@@ -235,97 +149,12 @@ def test_hierarchy_cooccurrence_conflict_rule(spark):
     records = spark.createDataFrame(
         pd.DataFrame(rows, columns=["ts", "value", "child_dim", "parent_dim"])
     )
-    pairs = {
-        (int(r.window_start.timestamp()) % 3600, r.dim_value): r.parent_value
-        for r in hierarchy_cooccurrence(records, cfg, 300, None).collect()
-    }
-    assert pairs == {(0, "c1"): "pz", (0, "c2"): "pm", (300, "c1"): "pb"}
-
     aggs = long_form_window_aggs(records, cfg, 300, None, with_hierarchy=True)
     carried = {
         (r.window_start_epoch % 3600, r.dim_value): r.parent_value
         for r in aggs.filter(F.col("dim_name") == "child_dim").collect()
     }
-    assert carried == pairs
-
-
-def test_batch_tail_cooc_matches_column_form(spark):
-    """Data-dependent hierarchy parity (VERDICT r2 #2): the tail with
-    hierarchy_from_data=True (parent values carried on the aggregate
-    rows by long_form_window_aggs(with_hierarchy=True)) must rank the
-    same dimensions at the same costs as the oracle-verified batch
-    column form joining hierarchy_cooccurrence pairs. Parent user_seg
-    ('vip' iff user_id % 97 == 0) is NOT derivable from the
-    user_bucket value."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        hierarchy_cooccurrence,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    records = df.select(
-        F.col("ts"),
-        F.col("value").cast("double").alias("value"),
-        F.col("event_type"),
-        F.when(F.col("user_id") % 97 == 0, F.lit("vip"))
-        .otherwise(F.lit("std"))
-        .alias("user_seg"),
-        (F.col("user_id") % 10).cast("string").alias("user_bucket"),
-    )
-    import __spark_entry__ as entrymod
-
-    cfg = entrymod.hier_cooc_events_config()
-    totals = sliding_window_totals(records, 300, 60)
-    wb = with_offset_baseline(totals, 10)
-    avg = totals.agg(F.avg("current")).collect()[0][0]
-
-    alerts = (
-        wb.filter((F.col("current") > 2 * avg) | (F.col("current") < 0.2 * avg))
-        .withColumn("anomaly_id", F.unix_timestamp("window_start").cast("string"))
-    )
-    bd = dimension_breakdown(records, cfg, 300, 60)
-    bdw = breakdown_with_baseline(bd, wb, 10, targets=alerts)
-    pairs = hierarchy_cooccurrence(records, cfg, 300, 60)
-    batch = hierarchical_contributors(
-        alerts,
-        bdw,
-        parent_of={"user_bucket": "user_seg"},
-        parent_pairs=pairs,
-        summary_size=5,
-    ).collect()
-
-    tail_cfg = TailConfig(
-        mode="threshold",
-        rca_mode="hierarchical",
-        min_value=0.2 * avg,
-        max_value=2 * avg,
-        parent_of={"user_bucket": "user_seg"},
-        hierarchy_from_data=True,
-        summary_size=5,
-    )
-    aggs = long_form_window_aggs(records, cfg, 300, 60, with_hierarchy=True)
-    tail_rca = (
-        make_batch_tail(aggs, tail_cfg).filter(F.col("row_type") == "rca").collect()
-    )
-
-    got = {
-        (r.window_start_epoch, r.dim_group, r.dim_name, r.dim_value): r.cost
-        for r in tail_rca
-    }
-    want = {
-        (
-            int(r.window_start.timestamp()),
-            r.dimension_group,
-            r.dim_name,
-            r.dim_value,
-        ): r.cost
-        for r in batch
-    }
-    assert set(got) == set(want)
-    # the hierarchy must have actually influenced level-2 rows
-    assert any(k[2] == "user_bucket" for k in want)
-    for k, cost in want.items():
-        assert abs(got[k] - cost) <= max(1e-6, 1e-6 * abs(cost)), (k, got[k], cost)
+    assert carried == {(0, "c1"): "pz", (0, "c2"): "pm", (300, "c1"): "pb"}
 
 
 def test_streaming_hierarchy_from_data_matches_fn_and_replay(spark, tmp_path):

@@ -146,3 +146,81 @@ def test_rca_mode_defaults_match_reference_pairings():
         )
     )
     assert t.rca == "macrobase"
+
+
+def _window(a: dict, b: dict) -> tuple[float, dict]:
+    """(window total, breakdown) over two level-1 dimensions, `a` in
+    group g1 and `b` in group g2; each group sums to the total."""
+    from online_anomaly_detection_root_cause_analysis_spark.algorithms.models import (
+        Dimension,
+    )
+
+    bd = {Dimension("a", v, "g1", 1): x for v, x in a.items()}
+    bd.update({Dimension("b", v, "g2", 1): x for v, x in b.items()})
+    return sum(a.values()), bd
+
+
+# three quiet windows, then two above max_value=100; a=z first appears
+# in window 180, so it has no baseline there
+_RANKED_WINDOWS = [
+    _window({"x": 20.0, "y": 20.0}, {"p": 20.0, "q": 20.0}),
+    _window({"x": 20.0, "y": 20.0}, {"p": 20.0, "q": 20.0}),
+    _window({"x": 20.0, "y": 20.0}, {"p": 20.0, "q": 20.0}),
+    _window({"x": 60.0, "y": 30.0, "z": 60.0}, {"p": 100.0, "q": 50.0}),
+    _window({"x": 30.0, "y": 90.0, "z": 30.0}, {"p": 50.0, "q": 100.0}),
+]
+_FINDER_COLS = (
+    "value_change_pct", "contribution_change_pct",
+    "contribution_to_overall_change_pct", "rank",
+)
+
+
+def _threshold_rows(**rca) -> tuple[list, list]:
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        StreamingTail,
+    )
+
+    tail = StreamingTail(TailConfig(mode="threshold", max_value=100.0, **rca))
+    rows = []
+    for i, (current, bd) in enumerate(_RANKED_WINDOWS):
+        rows.extend(tail.process_window(i * 60, current, 1, bd))
+    alerts = [r for r in rows if r["row_type"] == "alert"]
+    assert [r["window_start_epoch"] for r in alerts] == [180, 240]
+    for r in alerts:
+        assert all(r[c] is None for c in _FINDER_COLS), r
+    return alerts, [r for r in rows if r["row_type"] == "rca"]
+
+
+def _ranked_by(rows: list, key) -> dict:
+    """Group rows by `key`; within each group `rank` must run 1..n in
+    the finder's (-cost, name, value) order."""
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault(key(r), []).append(r)
+    for k, grp in groups.items():
+        by_rank = sorted(grp, key=lambda r: r["rank"])
+        assert [r["rank"] for r in by_rank] == list(range(1, len(grp) + 1)), k
+        assert by_rank == sorted(
+            grp, key=lambda r: (-r["cost"], r["dim_name"], r["dim_value"])
+        ), k
+    return groups
+
+
+def test_contributor_rows_carry_change_pcts_and_rank():
+    """The tail's simple/hierarchical rca rows carry the finder's three
+    change percentages (NULL, never NaN, on a zero denominator) and the
+    1-based rank; alert rows leave all four NULL."""
+    _, simple = _threshold_rows(rca_mode="simple")
+    per_window = _ranked_by(simple, lambda r: r["window_start_epoch"])
+    assert sorted(per_window) == [180, 240]
+    assert all(len(grp) >= 2 for grp in per_window.values())
+    new_dim = next(r for r in per_window[180] if r["dim_value"] == "z")
+    assert new_dim["value_change_pct"] is None  # baseline 0: no ratio
+    assert new_dim["contribution_change_pct"] == 40.0
+    assert new_dim["contribution_to_overall_change_pct"] == 54.5455
+    assert new_dim["rank"] == 1
+
+    _, hier = _threshold_rows(rca_mode="hierarchical")
+    per_group = _ranked_by(hier, lambda r: (r["window_start_epoch"], r["dim_group"]))
+    assert {g for _, g in per_group} == {"g1", "g2"}
+    assert max(len(grp) for grp in per_group.values()) >= 2
