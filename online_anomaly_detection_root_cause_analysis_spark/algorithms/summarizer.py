@@ -26,7 +26,6 @@ not wall-clock `now()` (SURVEY.md §7.4.1).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from math import isinf
 
 from .amc import AmortizedMaintenanceCounter
 from .encoder import IntegerEncoder

@@ -124,7 +124,7 @@ def web_pages_parent_value(child_name: str, child_value: str) -> str:
     """Parent dimension value derived from the child's, for the web
     pages hierarchy (tld <- domain <- host). Twin of the column
     derivations in functions/text.py::url_dimension_cols; module-level
-    so TailConfig stays picklable in the state store.
+    so TailConfig stays picklable in the tail-state snapshot.
 
     Divergence note (ADVICE r2): the column form derives url_tld from
     the HOST (substring_index(host, '.', -1)), so for a single-label

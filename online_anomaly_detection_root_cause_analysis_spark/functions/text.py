@@ -1,44 +1,36 @@
-"""Text feature extraction: vectorized pandas/Arrow UDFs + JVM column
-builders.
+"""Text feature extraction: JVM column builders.
 
 The graft's analog of the reference's record-building stage
 (utils/dimension/DimensionsBuilder.scala:10-44 + the upstream TPC-DS
 cube view dsdgen/dw/web_sales_cube_nonull.sql): instead of projecting
 Kafka JSON into typed dimensions, we derive metric + dimensions from
-web-page rows. Everything that built-in `pyspark.sql.functions` can
-express stays JVM-side (whole-stage codegen) — including language-ID
-(marker counting) and fingerprinting (sha60) since round 2; only
-html->text extraction remains a pandas UDF (Arrow batches — never
-per-row Python UDFs, per BASELINE.json input_hint).
+web-page rows. Every builder here is built-in `pyspark.sql.functions`
+(whole-stage codegen, no Python worker): html->text extraction,
+language-ID (marker counting) and fingerprinting (sha60).
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
-
-_TAG_RE = re.compile(rb"<[^>]*>")
 
 # deliberately small English-ish stopword list for quality scoring
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 
 
-@pandas_udf(T.StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """html binary -> visible text. Deterministic (pure function of the
-    bytes), so extraction is byte-identical per url — the per-row
-    invariant from BASELINE.json input_hint. Tag stripping is done on
-    bytes before a single utf-8 decode."""
-    return html.map(
-        lambda b: _TAG_RE.sub(b"", bytes(b)).decode("utf-8", errors="replace")
-        if b is not None
-        else None
-    )
+def extract_text(html: Column) -> Column:
+    """html binary -> visible text: tags (`<[^>]*>`) stripped on the
+    bytes, then one UTF-8 decode with U+FFFD for invalid bytes — the
+    same string as `re.sub(rb"<[^>]*>", b"", b).decode("utf-8",
+    "replace")`. ISO-8859-1 maps each byte to one char and back, so
+    the regex runs on bytes; the cast to string keeps the bytes as
+    they are, and `make_valid_utf8` does the decode's replacement.
+    Deterministic (a pure function of the bytes), so extraction is
+    byte-identical per url — the per-row invariant from BASELINE.json
+    input_hint."""
+    latin1 = F.decode(html, "ISO-8859-1")
+    stripped = F.encode(F.regexp_replace(latin1, "<[^>]*>", ""), "ISO-8859-1")
+    return F.make_valid_utf8(stripped.cast("string"))
 
 
 def url_host_col(url: Column) -> Column:

@@ -16,7 +16,6 @@ from ..functions.text import (
     content_fingerprint_col,
     language_id_col,
     quality_score_cols,
-    token_count_col,
 )
 
 

@@ -3,10 +3,10 @@
 Analog of InputRecordStreamBuilder.scala:28-41 + DimensionsBuilder
 .scala:10-44: project the raw source into (ts, value, dim...) columns
 declared by EngineConfig. Works identically on batch and streaming
-DataFrames — all expressions are JVM-side except html->text
-extraction (pandas UDF), and that stage is skipped when `text` is
-already materialized (column pruning then never touches `html`,
-SURVEY.md §4.1: the single biggest I/O lever at web scale).
+DataFrames. Every expression is JVM-side, html->text extraction
+included, so no record meets a Python worker. Extraction is skipped
+when `text` is already materialized (column pruning then never touches
+`html`, SURVEY.md §4.1: the single biggest I/O lever at web scale).
 """
 
 from __future__ import annotations
@@ -24,9 +24,10 @@ def build_page_records(
     """pages(url, warc_ts, html, text, lang) -> records with metric
     `text_len` (extracted-text byte length) + configured dimensions.
 
-    use_extracted_text=True forces the html->extract_text pandas-UDF
-    path (byte-identity invariant); default reads the materialized
-    `text` column so the binary column is pruned at scan time.
+    use_extracted_text=True derives the text from `html` with the JVM
+    `extract_text` (byte-identity invariant); default reads the
+    materialized `text` column so the binary column is pruned at scan
+    time.
     """
     text_col = extract_text(F.col("html")) if use_extracted_text else F.col("text")
     url_dims = url_dimension_cols(F.col("url"))

@@ -18,37 +18,48 @@ distributed-aggregation -> serial-detector shape:
 
 2. **detect** (serial tail): file-stream over `aggs/`
    (maxFilesPerTrigger=1, i.e. one upstream commit per trigger) ->
-   single-key applyInPandasWithState(StreamingTail) -> foreachBatch
-   idempotent sink: one `toArrow()` per batch, split by `row_type`
-   into `alerts/` + `rca/`.
+   foreachBatch on the driver: one `toArrow()` per batch, split by
+   `tail_key`, each key's windows through its `StreamingTail`
+   (`state.py::run_tail_batch`), the output split by `row_type` into
+   `alerts/` + `rca/`, then a snapshot of the tails into
+   `tail_state/` (`state.py::TailSnapshots`). The query itself is
+   stateless: no state store, no shuffle and no Python worker; its
+   checkpoint holds only the file-source and offset logs. This is the
+   reference's chaining of the parallelism-1 tail with its sink, whose
+   state is snapshotted in the same epoch as the sink's output
+   (Carbone et al., VLDB 2017).
 
 Both queries checkpoint independently; kill + restart resumes from the
 WALs and the idempotent sinks dedupe replayed commits (tests:
 tests/test_streaming.py::test_checkpoint_resume,
-::test_replayed_batches_are_skipped). A replayed batch still runs: each
-sink collects the batch before it skips the commit, because a stateful
-batch commits its state store only when its plan executes, and Spark
-fails the query when a batch leaves it uncommitted.
+::test_replayed_batches_are_skipped). A replayed aggregate batch still
+runs: its sink collects the batch before it skips the commit, because
+a stateful batch commits its state store only when its plan executes,
+and Spark fails the query when a batch leaves it uncommitted. A
+replayed detect batch starts from the snapshot before it, so its
+recomputed rows equal the committed ones, and it adopts its own
+snapshot if that was written. The tail snapshot is written after the
+`rca/` commit: a crash between the two replays the batch from the
+previous snapshot.
 
-**One state partition per query.** The post-shuffle stage of each
-query (state store, then aggregation or applyInPandasWithState) feeds
-one driver-side collect per trigger, of a few thousand aggregate or
-alert rows. A stateful query fixes its state-store partition count
-from `spark.sql.shuffle.partitions` at first start; at the session's
-nproc partitions, every trigger loaded and committed nproc state-store
-versions, and that fixed cost outweighed any parallelism over so few
-rows (state commits took 2.3-4.9x longer than at one partition). Both
-queries therefore start with `spark.sql.shuffle.partitions=1`
-(`_one_state_partition`); the query clones the session at `start()`,
-so the session itself keeps its value for batch work. The 1 is not an
-option: a sink that collects each batch into one file, as the detect
-query's commit atomicity needs, has no use for more. The map side
-(scan, extraction, partial aggregation) keeps its parallelism across
-input splits. On restart Spark restores the partition count from the
-checkpoint's offset log, so a checkpoint first written at N partitions
-resumes at N.
-Keyed tails (`key=...`) therefore run their detectors one after another
-in one task; the batch replay `make_batch_tail(key_col=...)` is the
+**One state partition for the aggregate query.** Its post-shuffle
+stage (state store, then aggregation) feeds one driver-side collect
+per trigger, of a few thousand aggregate rows. A stateful query fixes
+its state-store partition count from `spark.sql.shuffle.partitions` at
+first start; at the session's nproc partitions, every trigger loaded
+and committed nproc state-store versions, and that fixed cost
+outweighed any parallelism over so few rows (state commits took
+2.3-4.9x longer than at one partition). The query therefore starts
+with `spark.sql.shuffle.partitions=1` (`_one_state_partition`); the
+query clones the session at `start()`, so the session itself keeps its
+value for batch work. The 1 is not an option: a sink that collects
+each batch into one file, as the detect query's commit atomicity
+needs, has no use for more. The map side (scan, extraction, partial
+aggregation) keeps its parallelism across input splits. On restart
+Spark restores the partition count from the checkpoint's offset log,
+so a checkpoint first written at N partitions resumes at N.
+Keyed tails (`key=...`) run their detectors one after another on the
+driver; the batch replay `make_batch_tail(key_col=...)` is the
 parallel form.
 """
 
@@ -64,7 +75,7 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from .sink import write_batch_idempotent
-from .state import TOTAL_DIM, TailConfig, make_tail_fn, tail_output_schema
+from .state import TOTAL_DIM, TailConfig, TailSnapshots, run_tail_batch
 
 
 @contextmanager
@@ -229,6 +240,10 @@ class StreamingJob:
     def rca_dir(self) -> str:
         return os.path.join(self.work_dir, "rca")
 
+    @property
+    def tail_state_dir(self) -> str:
+        return os.path.join(self.work_dir, "tail_state")
+
     def _ckpt(self, name: str) -> str:
         return os.path.join(self.work_dir, "checkpoints", name)
 
@@ -278,36 +293,27 @@ class StreamingJob:
             .option("latestFirst", "false")
             .parquet(self.aggs_dir)
         )
-        keyed = self.key is not None
-        fn = make_tail_fn(self.tail, with_key=keyed)
-        grouped = (
-            stream.groupBy("tail_key")
-            if keyed
-            else stream.withColumn("_k", F.lit(0)).groupBy("_k")
-        )
-        out = grouped.applyInPandasWithState(
-            fn,
-            outputStructType=tail_output_schema(with_key=keyed),
-            stateStructType="version int, blob binary",
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+        # on the driver, before the query starts: a snapshot of another
+        # state version or tail config fails here
+        snapshots = TailSnapshots(self.tail_state_dir, self.tail)
+        config, keyed = self.tail, self.key is not None
         alerts_dir, rca_dir = self.alerts_dir, self.rca_dir
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            table = batch_df.toArrow()
+            tails = snapshots.tails_before(batch_id)
+            table = run_tail_batch(batch_df.toArrow(), tails, config, keyed)
             row_type = table["row_type"]
             rows = table.drop_columns(["row_type"])
             for kind, out_dir in (("alert", alerts_dir), ("rca", rca_dir)):
                 write_batch_idempotent(
                     rows.filter(pc.equal(row_type, kind)), batch_id, out_dir
                 )
+            snapshots.commit(batch_id, tails)
 
-        with _one_state_partition(spark):
-            return (
-                out.writeStream.outputMode("append")
-                .foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt("detect"))
-                .queryName("detect")
-                .start()
-            )
+        return (
+            stream.writeStream.outputMode("append")
+            .foreachBatch(sink)
+            .option("checkpointLocation", self._ckpt("detect"))
+            .queryName("detect")
+            .start()
+        )

@@ -1,22 +1,24 @@
 """The serial streaming tail: offset baseline + detector + RCA as one
-stateful operator.
+state machine, run on the driver by the detect query's sink.
 
 The reference chains countWindowAll -> OffsetBaselineAggregator ->
 (threshold filter | EWFeatureTransform -> EWAppxPercentileAuxiliary)
 -> RCA, all at parallelism 1 (SURVEY.md §3.1 step 4). Here the whole
-single-key tail is FUSED into one `applyInPandasWithState` operator:
-it consumes finalized per-window aggregate rows (the distributed
-heavy lifting happens upstream), maintains the count-window deque
-(W4), the MacroBase scorer/classifier/summarizer or the threshold
-rule, and emits alert + RCA rows. Fusing avoids Spark's multiple-
-stateful-operator chaining restrictions and keeps exactly one tiny
-state blob.
+single-key tail is FUSED into one `StreamingTail`: it consumes
+finalized per-window aggregate rows (the distributed heavy lifting
+happens upstream), maintains the count-window deque (W4), the
+MacroBase scorer/classifier/summarizer or the threshold rule, and
+emits alert + RCA rows. The detect sink (`job.py`) hands each batch
+to `run_tail_batch`, one tail per key, without a Python worker or a
+state store.
 
-State is a pickled `StreamingTail` in a single BINARY state column —
+State is the pickled {tail key: StreamingTail} dict, snapshotted
+after every detect batch into `tail_state/` (`TailSnapshots`) —
 versioned via PICKLE_VERSION for checkpoint-compatible evolution
-(SURVEY.md §7.3). The reference's un-checkpointed warm-up fields bug
-(EWFeatureTransform.scala:31-32) is fixed by construction: everything
-lives in the pickle.
+(SURVEY.md §7.3) and stamped with the pickled TailConfig, both
+checked on the driver before the query starts. The reference's
+un-checkpointed warm-up fields bug (EWFeatureTransform.scala:31-32) is
+fixed by construction: everything lives in the pickle.
 
 Input contract: rows (window_start_epoch, dim_name, dim_value,
 dim_group, dim_level, dim_sum, dim_count); per-window totals ride
@@ -27,11 +29,14 @@ one micro-batch (commit-atomic upstream, see job.py), in any order.
 from __future__ import annotations
 
 import math
+import os
 import pickle
 from dataclasses import dataclass, field
 from typing import Any, Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..algorithms.ewfeature import EWFeatureSpec, EWFeatureTransform
 from ..algorithms.ewma import EWMAZScore
@@ -132,30 +137,40 @@ class TailConfig:
         return self.rca_mode or ("macrobase" if self.mode == "macrobase" else "simple")
 
 
-def tail_output_schema(with_key: bool = False) -> str:
-    base = (
-        "row_type string, seq long, window_start_epoch long, current double, "
-        "baseline double, records_in_baseline_offset int, is_outlier boolean, "
-        "score double, support double, num_records double, "
-        "ratio_to_inliers double, n_dims int, summary_id long, "
-        "dim_group string, dim_level int, "
-        "dim_name string, dim_value string, cost double, "
-        "current_value double, baseline_value double, "
-        "value_change_pct double, contribution_change_pct double, "
-        "contribution_to_overall_change_pct double, rank int"
-    )
-    return f"tail_key string, {base}" if with_key else base
-
-
-_OUT_COLUMNS = [
-    "row_type", "seq", "window_start_epoch", "current", "baseline",
-    "records_in_baseline_offset", "is_outlier", "score", "support",
-    "num_records", "ratio_to_inliers", "n_dims", "summary_id",
-    "dim_group", "dim_level",
-    "dim_name", "dim_value", "cost", "current_value", "baseline_value",
-    "value_change_pct", "contribution_change_pct",
-    "contribution_to_overall_change_pct", "rank",
+# the tail's output columns and their Spark SQL types: the DDL string
+# of `tail_output_schema` and the Arrow schema of the detect sink's
+# tables both come from this one list
+_OUT_FIELDS = [
+    ("row_type", "string"), ("seq", "long"), ("window_start_epoch", "long"),
+    ("current", "double"), ("baseline", "double"),
+    ("records_in_baseline_offset", "int"), ("is_outlier", "boolean"),
+    ("score", "double"), ("support", "double"), ("num_records", "double"),
+    ("ratio_to_inliers", "double"), ("n_dims", "int"), ("summary_id", "long"),
+    ("dim_group", "string"), ("dim_level", "int"),
+    ("dim_name", "string"), ("dim_value", "string"), ("cost", "double"),
+    ("current_value", "double"), ("baseline_value", "double"),
+    ("value_change_pct", "double"), ("contribution_change_pct", "double"),
+    ("contribution_to_overall_change_pct", "double"), ("rank", "int"),
 ]
+_OUT_COLUMNS = [name for name, _ in _OUT_FIELDS]
+_ARROW_TYPES = {
+    "string": pa.string(), "long": pa.int64(), "int": pa.int32(),
+    "double": pa.float64(), "boolean": pa.bool_(),
+}
+
+
+def _out_fields(with_key: bool) -> list[tuple[str, str]]:
+    return [("tail_key", "string"), *_OUT_FIELDS] if with_key else _OUT_FIELDS
+
+
+def tail_output_schema(with_key: bool = False) -> str:
+    return ", ".join(f"{name} {kind}" for name, kind in _out_fields(with_key))
+
+
+def tail_output_arrow_schema(with_key: bool = False) -> pa.Schema:
+    return pa.schema(
+        [(name, _ARROW_TYPES[kind]) for name, kind in _out_fields(with_key)]
+    )
 
 
 def _empty_row() -> dict[str, Any]:
@@ -480,7 +495,8 @@ def rows_to_windows(
 
     Rows WITHIN a window are ordered by (dim_name, dim_value), not by
     upstream arrival order (r5): Spark gives no ordering guarantee on
-    the rows applyInPandas receives, and the MacroBase summarizer's
+    the rows of a batch or an applyInPandas group, and the MacroBase
+    summarizer's
     AMC/encoder insertion order (hence the FP-trees' count-tie
     ordering) follows breakdown insertion order — without this sort
     the tail's output could vary with partitioning at count ties."""
@@ -535,24 +551,10 @@ def rows_to_windows(
         yield int(ws_arr[s]), current, records, breakdown, hierarchy
 
 
-_OUT_DTYPES = {
-    "row_type": "object", "seq": "int64", "window_start_epoch": "int64",
-    "current": "float64", "baseline": "float64",
-    "records_in_baseline_offset": "int32", "is_outlier": "object",
-    "score": "float64", "support": "float64", "num_records": "float64",
-    "ratio_to_inliers": "float64", "n_dims": "float64", "summary_id": "float64",
-    "dim_group": "object", "dim_level": "float64",
-    "dim_name": "object", "dim_value": "object", "cost": "float64",
-    "current_value": "float64", "baseline_value": "float64",
-    "value_change_pct": "float64", "contribution_change_pct": "float64",
-    "contribution_to_overall_change_pct": "float64", "rank": "float64",
-}
-
-
 def _typed_frame(rows: list[dict[str, Any]]) -> pd.DataFrame:
     if rows:
         return pd.DataFrame(rows, columns=_OUT_COLUMNS)
-    return pd.DataFrame({c: pd.Series(dtype=t) for c, t in _OUT_DTYPES.items()})
+    return tail_output_arrow_schema().empty_table().to_pandas()
 
 
 def make_batch_tail(aggs_df, config: TailConfig, key_col: str | None = None):
@@ -596,51 +598,116 @@ def make_batch_tail(aggs_df, config: TailConfig, key_col: str | None = None):
     )
 
 
-def make_tail_fn(config: TailConfig, with_key: bool = False):
-    """Builds the applyInPandasWithState function. State schema:
-    (version int, blob binary). Each grouping key gets its own pickled
-    StreamingTail in the state store — with_key=True emits the key as
-    `tail_key` so N independent detectors (multi-key tails, VERDICT
-    r2 #4) share one streaming query."""
-    # compared pickled: a functools.partial parent_value_fn equals only
-    # itself, so `==` would fail every restored tail that carries one
-    config_blob = pickle.dumps(config)
+def _key_parts(table: pa.Table, with_key: bool) -> Iterator[tuple[Any, pa.Table]]:
+    """(tail key, its rows) in key order; one part with key None when
+    the job has no key."""
+    if not with_key:
+        yield None, table
+        return
+    col = table["tail_key"]
+    keys = sorted(pc.unique(col).to_pylist(), key=lambda k: (k is not None, k))
+    for key in keys:
+        mask = pc.is_null(col) if key is None else pc.equal(col, key)
+        yield key, table.filter(mask)
 
-    def fn(key, pdf_iter, state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            version, blob = state.get
-            if version != PICKLE_VERSION:
-                raise RuntimeError(
-                    f"tail state for key {key!r} has version {version}; this "
-                    f"engine reads version {PICKLE_VERSION}. Restart the detect "
-                    "query from a new checkpoint."
-                )
-            tail = pickle.loads(bytes(blob))
-            if pickle.dumps(tail.config) != config_blob:
-                raise RuntimeError(
-                    f"tail state for key {key!r} was built with {tail.config}; "
-                    f"this query runs {config}. Restart the detect query from "
-                    "a new checkpoint."
-                )
-        else:
-            tail = StreamingTail(config)
-        out_rows: list[dict[str, Any]] = []
-        # one rows_to_windows over the whole group: Spark hands it over
-        # in Arrow batches of maxRecordsPerBatch rows, unsorted across
-        # batches, so a per-batch sort would feed windows out of order
-        # and cut a window split across two batches in two
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            for ws, current, records, breakdown, hierarchy in rows_to_windows(pdf):
-                out_rows.extend(
-                    tail.process_window(ws, current, records, breakdown, hierarchy)
-                )
-        state.update((PICKLE_VERSION, pickle.dumps(tail)))
-        if out_rows:
-            frame = _typed_frame(out_rows)
-            if with_key:
-                frame.insert(0, "tail_key", str(key[0]))
-            yield frame
 
-    return fn
+def run_tail_batch(
+    table: pa.Table, tails: dict, config: TailConfig, with_key: bool = False
+) -> pa.Table:
+    """One detect batch on the driver: each key's aggregate rows go
+    through `rows_to_windows` and that key's tail (a new StreamingTail
+    for a key first seen here), and the rows every tail emits come back
+    as one table of `tail_output_arrow_schema(with_key)`. `tails` (tail
+    key -> StreamingTail, key None without a job key) is advanced in
+    place.
+
+    A window's rows may sit in different record batches of `table`, in
+    any order: `rows_to_windows` sorts each key's rows as a whole."""
+    rows: list[dict[str, Any]] = []
+    for key, part in _key_parts(table, with_key):
+        if part.num_rows == 0:
+            continue
+        tail = tails.get(key)
+        if tail is None:
+            tail = tails[key] = StreamingTail(config)
+        for ws, current, records, breakdown, hierarchy in rows_to_windows(
+            part.to_pandas()
+        ):
+            emitted = tail.process_window(ws, current, records, breakdown, hierarchy)
+            rows.extend({"tail_key": key, **r} if with_key else r for r in emitted)
+    schema = tail_output_arrow_schema(with_key)
+    if not rows:
+        return schema.empty_table()
+    # through pandas, as Spark converts a pandas UDF's output: a NaN
+    # in a float column becomes NULL
+    frame = pd.DataFrame(rows, columns=schema.names)
+    table = pa.Table.from_pandas(frame, schema, preserve_index=False)
+    return table.replace_schema_metadata()
+
+
+class TailSnapshots:
+    """The detect query's tail state: after a batch's `alerts/` and
+    `rca/` commits, one file `state-<batch>` in `state_dir` holds
+    (PICKLE_VERSION, pickled TailConfig, pickled {tail key: tail}).
+    The last two snapshots are kept, in memory as bytes and on disk.
+
+    Batch b starts from a fresh unpickled copy of the newest snapshot
+    before b, so a batch that fails never advances the committed tails.
+    A replayed batch whose snapshot exists recomputes its rows (the
+    idempotent sinks skip them) and adopts that snapshot.
+
+    Loading checks every kept snapshot on the driver: another
+    PICKLE_VERSION, or a pickled TailConfig that differs from
+    `config`, raises RuntimeError before the query starts."""
+
+    KEEP = 2
+
+    def __init__(self, state_dir: str, config: TailConfig):
+        self.state_dir = state_dir
+        self.config = config
+        # compared pickled: a functools.partial parent_value_fn equals
+        # only itself, so `==` would fail every equal config that has one
+        self.config_blob = pickle.dumps(config)
+        self.blobs: dict[int, bytes] = {}
+        names = os.listdir(state_dir) if os.path.isdir(state_dir) else []
+        for name in sorted(n for n in names if n.startswith("state-")):
+            self.blobs[int(name.removeprefix("state-"))] = self._load(name)
+
+    def _load(self, name: str) -> bytes:
+        path = os.path.join(self.state_dir, name)
+        with open(path, "rb") as f:
+            version, config_blob, tails_blob = pickle.load(f)
+        if version != PICKLE_VERSION:
+            raise RuntimeError(
+                f"tail state {path} has version {version}; this engine reads "
+                f"version {PICKLE_VERSION}. Start the job in a new work directory."
+            )
+        if config_blob != self.config_blob:
+            raise RuntimeError(
+                f"tail state {path} was built with {pickle.loads(config_blob)}; "
+                f"this query runs {self.config}. Start the job in a new work "
+                "directory."
+            )
+        return tails_blob
+
+    def tails_before(self, batch_id: int) -> dict:
+        """A fresh copy of the tails as the newest snapshot before
+        `batch_id` left them; empty when there is none."""
+        older = [b for b in self.blobs if b < batch_id]
+        return pickle.loads(self.blobs[max(older)]) if older else {}
+
+    def commit(self, batch_id: int, tails: dict) -> None:
+        """Snapshot `tails` as the state after `batch_id` (temp file,
+        then rename), unless that snapshot exists; keep the last two."""
+        if batch_id in self.blobs:
+            return
+        blob = pickle.dumps(tails)
+        os.makedirs(self.state_dir, exist_ok=True)
+        tmp = os.path.join(self.state_dir, f"_tmp_state-{batch_id:010d}")
+        with open(tmp, "wb") as f:
+            pickle.dump((PICKLE_VERSION, self.config_blob, blob), f)
+        os.replace(tmp, os.path.join(self.state_dir, f"state-{batch_id:010d}"))
+        self.blobs[batch_id] = blob
+        for old in sorted(self.blobs)[: -self.KEEP]:
+            del self.blobs[old]
+            os.remove(os.path.join(self.state_dir, f"state-{old:010d}"))

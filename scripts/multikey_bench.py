@@ -1,13 +1,13 @@
 """Multi-key tail throughput bench (VERDICT r2 #4 'done' evidence).
 
-Measures the streaming DETECT stage (applyInPandasWithState over a
-file stream of finalized window aggregates) at local[32], single-key
-vs K-key, on IDENTICAL total window volume: the keyed variant
-partitions the same windows across K independent detector states.
-The streaming detect query runs those states one after another in one
-task (one state partition, see streaming/job.py), so K keys do not
-parallelize the Python tail work across cores; only the batch replay
-`make_batch_tail(key_col=...)` does.
+Measures the streaming DETECT stage (a file stream of finalized
+window aggregates whose sink runs the tails on the driver) at
+local[32], single-key vs K-key, on IDENTICAL total window volume: the
+keyed variant partitions the same windows across K independent
+detector states. The detect sink runs those states one after another
+(see streaming/job.py), so K keys do not parallelize the Python tail
+work across cores; only the batch replay `make_batch_tail(key_col=...)`
+does.
 
 The tail is the MacroBase scorer+classifier with simple RCA — real
 per-window Python work — so this measures the stage the multi-key

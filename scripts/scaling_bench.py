@@ -3,7 +3,7 @@ scaling efficiency >= 0.8 from N to 4N executors; sandbox proxy =
 local[8] vs local[32], per BASELINE.json north_rule).
 
 Phase A (batch aggregation throughput): the flagship distributed stage
-— pages parquet scan -> extract_text pandas UDF -> long-form windowed
+— pages parquet scan -> extract_text (JVM) -> long-form windowed
 dimension aggregation -> parquet sink — run in a FRESH JVM per
 parallelism level on identical input. This is the stage that owns
 >99% of the cluster at 100 TB (the stateful tail consumes one row per

@@ -1,12 +1,16 @@
 """Property/fuzz tests (hypothesis) for the scalar code every record
-passes through: the stats replays, the half-space-trees update and the
-streaming LSH bucket function. A scalar that raises on one odd input
-kills a whole Spark stage, so the invariant under fuzz is "never raise,
-return a sane value".
+passes through: the stats replays, the half-space-trees update, the
+streaming LSH bucket function and html->text extraction. A scalar that
+raises on one odd input kills a whole Spark stage, so the invariant
+under fuzz is "never raise, return a sane value"; extraction must also
+stay byte-identical to its Python reference.
 """
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -19,6 +23,9 @@ from online_anomaly_detection_root_cause_analysis_spark.algorithms.stats import 
     contribution_to_overall_change_percentage,
     hierarchical_cost,
     value_change_percentage,
+)
+from online_anomaly_detection_root_cause_analysis_spark.functions.text import (
+    extract_text,
 )
 
 finite = st.floats(
@@ -193,3 +200,56 @@ def test_lsh_bucket_fn_model(batches, max_group, ttl_min):
     if state.exists:
         ids = list(state.get[0])
         assert len(ids) == len(set(ids)) <= max_group
+
+
+# the Python form of extract_text: tags stripped on the bytes, then one
+# UTF-8 decode with U+FFFD for invalid bytes
+_TAG_RE = re.compile(rb"<[^>]*>")
+
+
+def _extract_text_reference(b: bytes | None) -> str | None:
+    return None if b is None else _TAG_RE.sub(b"", b).decode("utf-8", "replace")
+
+
+def _extract_text_spark(spark, htmls: list) -> list:
+    df = spark.createDataFrame(list(enumerate(htmls)), "i int, html binary")
+    rows = df.select("i", extract_text(df["html"]).alias("text")).collect()
+    return [r.text for r in sorted(rows, key=lambda r: r.i)]
+
+
+# tag delimiters, ASCII, a split euro sign, an encoded surrogate, an
+# overlong NUL, a truncated 4-byte sequence, a byte that is never
+# UTF-8, a code point past U+10FFFF and a real NUL
+_HTML_PIECES = [
+    b"<", b">", b"a", b"\n", b"\xe2", b"\x82", b"\xac", b"\xed\xa0\x80",
+    b"\xc0\x80", b"\xf0\x9f", b"\xff", b"\xf4\x90\x80\x80", b"\x00",
+]
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    htmls=st.lists(
+        st.lists(st.sampled_from(_HTML_PIECES), max_size=24).map(b"".join),
+        min_size=1, max_size=40,
+    )
+)
+def test_extract_text_matches_python_reference(spark, htmls):
+    """The JVM extract_text returns the same string as the Python
+    reference on any mix of tags and valid, invalid or truncated UTF-8."""
+    assert _extract_text_spark(spark, htmls) == [
+        _extract_text_reference(b) for b in htmls
+    ]
+
+
+@pytest.mark.parametrize(
+    "html, text",
+    [
+        # the tag sits inside the euro sign's bytes: stripped, the
+        # bytes around it join into one valid character
+        (b"\xe2<b>\x82\xac", "\u20ac"),
+        (None, None),
+    ],
+)
+def test_extract_text_edge_cases(spark, html, text):
+    assert _extract_text_reference(html) == text
+    assert _extract_text_spark(spark, [html]) == [text]

@@ -12,7 +12,6 @@ from online_anomaly_detection_root_cause_analysis_spark.config import (
     web_pages_parent_value,
 )
 from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
-    AnomalySpan,
     PagesSpec,
     generate_pages,
     pages_schema,

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 import __spark_entry__ as e
 from online_anomaly_detection_root_cause_analysis_spark.plans import (
     explain_str,
-    plan_has,
     read_schema_columns,
 )
 

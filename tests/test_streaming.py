@@ -2,9 +2,9 @@
 
 - streaming windowed aggregation == batch replay (same input, same
   watermark) — exact row parity;
-- the fused stateful tail (applyInPandasWithState across many
-  micro-batches) == a pure-Python replay of the same finalized
-  windows — exact alert/RCA parity;
+- the fused tail (run by the detect sink across many micro-batches,
+  its state snapshotted in `tail_state/`) == a pure-Python replay of
+  the same finalized windows — exact alert/RCA parity;
 - kill + restart from checkpoint yields byte-identical sink tables
   (idempotent exactly-once);
 - out-of-order input within the watermark matches batch.
@@ -81,9 +81,9 @@ def test_multikey_tail_equals_per_key_runs(spark):
 
 
 def test_streaming_multikey_tail_matches_replay(spark, tmp_path):
-    """Keyed applyInPandasWithState across micro-batches: one
-    StreamingTail per url_tld in the state store, output == per-key
-    pure-Python replays of the same finalized windows."""
+    """Keyed tails across micro-batches: one StreamingTail per url_tld
+    in the detect sink's snapshot, output == per-key pure-Python
+    replays of the same finalized windows."""
     import pandas as pd
 
     from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
@@ -292,35 +292,17 @@ def test_stateful_tail_matches_replay(spark, pages_path_factory, tmp_path):
     assert got_rca == want_rca
 
 
-class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState stand-in for driving
-    make_tail_fn without Spark."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
 def test_tail_fn_joins_arrow_batches_of_one_group():
-    """applyInPandasWithState hands one group's rows over in Arrow
-    batches (maxRecordsPerBatch rows each), unsorted across batches.
-    The tail must see the group as a whole: the same rows split into
-    two shuffled chunks give the same output as one chunk."""
+    """`toArrow()` can hand a detect batch over in several record
+    batches, unsorted across them. The tail must see each key's rows
+    as a whole: the same rows split into two shuffled record batches
+    give the same output as one batch."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
-        make_tail_fn,
+        run_tail_batch,
     )
 
     rows = []
@@ -338,11 +320,14 @@ def test_tail_fn_joins_arrow_batches_of_one_group():
     shuffled = pdf.sample(frac=1.0, random_state=np.random.RandomState(3))
     half = len(shuffled) // 2
 
-    fn = make_tail_fn(TailConfig(mode="threshold", min_value=0, max_value=50))
+    config = TailConfig(mode="threshold", min_value=0, max_value=50)
 
     def run(chunks):
-        out = list(fn((0,), iter(chunks), _FakeGroupState()))
-        return pd.concat(out, ignore_index=True) if out else None
+        batches = [
+            pa.RecordBatch.from_pandas(c, preserve_index=False) for c in chunks
+        ]
+        out = run_tail_batch(pa.Table.from_batches(batches), {}, config)
+        return out.to_pandas() if out.num_rows else None
 
     want = run([pdf])
     got = run([shuffled.iloc[:half], shuffled.iloc[half:]])
@@ -350,40 +335,45 @@ def test_tail_fn_joins_arrow_batches_of_one_group():
     pd.testing.assert_frame_equal(got, want)
 
 
-def _restore_tail(stored: TailConfig, running: TailConfig, version_step: int = 0) -> None:
-    """Runs make_tail_fn(running) over a fake GroupState that holds
+def _restore_tail(
+    state_dir, stored: TailConfig, running: TailConfig, version_step: int = 0
+) -> None:
+    """Loads, with TailSnapshots(running), a snapshot file holding
     `stored`'s tail pickled under PICKLE_VERSION + version_step."""
     import pickle
 
-    import pandas as pd
-
     from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
         PICKLE_VERSION,
-        make_tail_fn,
+        TailSnapshots,
     )
 
-    state = _FakeGroupState()
-    state.update((PICKLE_VERSION + version_step, pickle.dumps(StreamingTail(stored))))
-    list(make_tail_fn(running)((0,), iter([pd.DataFrame()]), state))
+    state_dir.mkdir(exist_ok=True)
+    tails = {None: StreamingTail(stored)}
+    with open(state_dir / "state-0000000000", "wb") as f:
+        pickle.dump(
+            (PICKLE_VERSION + version_step, pickle.dumps(stored), pickle.dumps(tails)), f
+        )
+    snapshots = TailSnapshots(str(state_dir), running)
+    assert set(snapshots.tails_before(1)) == {None}
 
 
-def test_tail_fn_rejects_state_of_another_version():
+def test_tail_fn_rejects_state_of_another_version(tmp_path):
     """State pickled under another PICKLE_VERSION is not loaded: the
-    tail fails with the version in the message."""
+    driver fails with the version in the message."""
     from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
         PICKLE_VERSION,
     )
 
     config = TailConfig(mode="threshold", min_value=0, max_value=50)
     with pytest.raises(RuntimeError, match=f"version {PICKLE_VERSION + 1}"):
-        _restore_tail(config, config, version_step=1)
+        _restore_tail(tmp_path / "state", config, config, version_step=1)
 
 
-def test_tail_fn_rejects_state_of_another_tail_config():
+def test_tail_fn_rejects_state_of_another_tail_config(tmp_path):
     """A restart with a new threshold does not silently keep the stored
-    tail's config: the tail fails and names the key. An equal config
-    restores, also when its parent_value_fn is a functools.partial
-    (which equals only itself)."""
+    tail's config: loading fails and names the snapshot and both
+    configs. An equal config restores, also when its parent_value_fn
+    is a functools.partial (which equals only itself)."""
     from functools import partial
 
     from online_anomaly_detection_root_cause_analysis_spark.config import (
@@ -391,9 +381,16 @@ def test_tail_fn_rejects_state_of_another_tail_config():
     )
 
     running = TailConfig(mode="threshold", min_value=0, max_value=50)
-    with pytest.raises(RuntimeError, match=r"key \(0,\) was built with .*max_value=60"):
-        _restore_tail(TailConfig(mode="threshold", min_value=0, max_value=60), running)
-    _restore_tail(TailConfig(mode="threshold", min_value=0, max_value=50), running)
+    with pytest.raises(
+        RuntimeError,
+        match=r"state-0000000000 was built with .*max_value=60.*this query runs .*max_value=50",
+    ):
+        _restore_tail(
+            tmp_path / "a", TailConfig(mode="threshold", min_value=0, max_value=60), running
+        )
+    _restore_tail(
+        tmp_path / "b", TailConfig(mode="threshold", min_value=0, max_value=50), running
+    )
 
     def hierarchical() -> TailConfig:
         return TailConfig(
@@ -401,7 +398,40 @@ def test_tail_fn_rejects_state_of_another_tail_config():
             parent_value_fn=partial(modulo_parent_value, 5),
         )
 
-    _restore_tail(hierarchical(), hierarchical())
+    _restore_tail(tmp_path / "c", hierarchical(), hierarchical())
+
+
+def test_restart_with_another_tail_config_fails_on_the_driver(
+    spark, pages_path_factory, tmp_path
+):
+    """A restart whose tail config differs from the one the snapshots
+    were built with raises from start_detect_query, before any batch
+    runs, and leaves `alerts/` and `rca/` as they were."""
+    pages_path = pages_path_factory("restart_cfg", PagesSpec(n_pages=1000), n_files=4)
+    # every window alerts, so both tables have part files
+    job = _run_job(
+        spark, str(tmp_path / "job"), pages_path,
+        TailConfig(mode="threshold", min_value=0, max_value=0),
+    )
+
+    def tables():
+        return {
+            (sub, name): open(os.path.join(job.work_dir, sub, name), "rb").read()
+            for sub in ("alerts", "rca")
+            for name in os.listdir(os.path.join(job.work_dir, sub))
+        }
+
+    before = tables()
+    assert any(name.startswith("part-") for _, name in before)
+    changed = StreamingJob(
+        work_dir=job.work_dir, cfg=CFG,
+        tail=TailConfig(mode="threshold", min_value=0, max_value=10),
+        size_s=300, slide_s=60,
+    )
+    with pytest.raises(RuntimeError, match="max_value=0.*this query runs .*max_value=10"):
+        changed.start_detect_query(spark)
+    assert "detect" not in {q.name for q in spark.streams.active}
+    assert tables() == before
 
 
 _DETECTOR_SPEC = EWFeatureSpec(
@@ -439,11 +469,12 @@ def _state_partitions(q) -> set:
 
 
 def test_checkpoint_resume(spark, tmp_path, monkeypatch):
-    """Kill + restart resumes from the checkpoints. Both queries run
-    one state-store partition and leave the session's own
-    spark.sql.shuffle.partitions alone; a checkpoint first written at
-    the session's n partitions resumes at n, with the same tables as
-    one uninterrupted 1-partition run."""
+    """Kill + restart resumes from the checkpoints. The aggregate query
+    runs one state-store partition, the detect query none, and both
+    leave the session's own spark.sql.shuffle.partitions alone; an
+    aggregate checkpoint first written at the session's n partitions
+    resumes at n, with the same tables as one uninterrupted
+    1-partition run."""
     from online_anomaly_detection_root_cause_analysis_spark.streaming import job as jobmod
 
     # conftest's 8, unless an earlier in-process get_spark() re-set it
@@ -475,7 +506,11 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
             q.processAllAvailable()
             q.stop()
             assert after_start == session_partitions, q.name
-            assert _state_partitions(q) == {partitions}, q.name
+            if q.name == "aggregate":
+                assert _state_partitions(q) == {partitions}, q.name
+            else:
+                assert q.recentProgress, q.name
+                assert not any(p["stateOperators"] for p in q.recentProgress), q.name
         return job
 
     # the first start writes its checkpoints at the session's n
@@ -503,9 +538,42 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
     assert _norm_rows(got_rca) == _norm_rows(want_rca)
 
 
+def test_streaming_plans_run_no_python_operator(spark, tmp_path):
+    """Neither streaming query hands rows to a Python worker: the
+    aggregate query extracts text from html in the JVM (no
+    ArrowEvalPython or BatchEvalPython), and the detect query runs the
+    tail in its driver-side sink (no FlatMapGroupsInPandasWithState)."""
+    pdf = generate_pages(PagesSpec(n_pages=600)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 2)
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=CFG,
+        tail=TailConfig(mode="threshold", min_value=0, max_value=0),
+        size_s=300, slide_s=60,
+    )
+    stream = build_page_records(
+        read_pages_stream(spark, str(pages)), CFG, use_extracted_text=True
+    )
+    plans = {}
+    for start in (
+        lambda: job.start_aggregate_query(stream),
+        lambda: job.start_detect_query(spark),
+    ):
+        q = start()
+        q.processAllAvailable()
+        plans[q.name] = q._jsq.explainInternal(True)
+        q.stop()
+    assert "regexp_replace" in plans["aggregate"]
+    for op in ("ArrowEvalPython", "BatchEvalPython"):
+        assert op not in plans["aggregate"], op
+    assert "FileScan parquet" in plans["detect"]
+    assert "FlatMapGroupsInPandasWithState" not in plans["detect"]
+
+
 def test_checkpoint_resume_multikey(spark, tmp_path):
-    """Kill + restart with KEYED tails: every per-key pickled state in
-    the store must survive the restart — the resumed run's alert
+    """Kill + restart with KEYED tails: every per-key pickled tail in
+    the snapshot must survive the restart — the resumed run's alert
     tables equal one uninterrupted run, per key."""
     pdf = generate_pages(PagesSpec(n_pages=1600)).sort_values("warc_ts")
     inc_path = tmp_path / "pages_inc"
@@ -1043,8 +1111,8 @@ def test_streaming_job_dedup_col(spark, tmp_path):
 
 
 def test_streaming_hstrees_matches_replay(spark, tmp_path):
-    """Isolation-forest-style detector "held in the state store"
-    (north_star): mode='hstrees' through applyInPandasWithState across
+    """Isolation-forest-style detector held in the tail state
+    (north_star): mode='hstrees' through the detect sink across
     micro-batches equals a pure-Python replay of the same finalized
     windows — score-for-score, flag-for-flag."""
     import pandas as pd

@@ -4,8 +4,8 @@ RCA (jobs/MainJob.scala:86-110); TailConfig(rca_mode="hierarchical")
 runs the hierarchical finder in the streaming tail.
 
 Two gates:
-1. streaming applyInPandasWithState output == pure-Python replay of
-   the same finalized windows (mirror of test_streaming_macrobase);
+1. streaming output (the tail run by the detect query's sink) ==
+   pure-Python replay of the same finalized windows (mirror of test_streaming_macrobase);
 2. the batch replay of the same tail (make_batch_tail) is what the
    hierarchical_contributors(_cooc) queries run, so their DuckDB
    oracles (tests/test_oracle_parity.py) check the tail directly.
@@ -227,7 +227,7 @@ def test_streaming_hierarchy_from_data_matches_fn_and_replay(spark, tmp_path):
 
 
 def test_streaming_zscore_matches_replay(spark, tmp_path):
-    """EWMA z-score state held in the state store across micro-batches
+    """EWMA z-score state held in the tail snapshot across micro-batches
     (north_star): streaming output == pure-Python replay of the same
     finalized windows."""
     import os

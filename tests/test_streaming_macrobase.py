@@ -4,8 +4,6 @@ output == single-pass batch replay of the same finalized windows."""
 
 import os
 
-from pyspark.sql import functions as F
-
 from online_anomaly_detection_root_cause_analysis_spark.algorithms.ewfeature import (
     EWFeatureSpec,
 )
