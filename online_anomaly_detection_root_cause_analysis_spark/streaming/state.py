@@ -13,10 +13,12 @@ to `run_tail_batch`, one tail per key, without a Python worker or a
 state store.
 
 State is the pickled {tail key: StreamingTail} dict, snapshotted
-after every detect batch into `tail_state/` (`TailSnapshots`) —
+after every detect batch into `tail_state/` (`Snapshots`) —
 versioned via PICKLE_VERSION for checkpoint-compatible evolution
 (SURVEY.md §7.3) and stamped with the pickled TailConfig, both
-checked on the driver before the query starts. The reference's
+checked on the driver before the query starts. The aggregate sink
+keeps its open windows the same way (`fold_window_partials`, snapshots
+in `agg_state/`). The reference's
 un-checkpointed warm-up fields bug (EWFeatureTransform.scala:31-32) is
 fixed by construction: everything lives in the pickle.
 
@@ -32,7 +34,7 @@ import math
 import os
 import pickle
 from dataclasses import dataclass, field
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 import pyarrow as pa
@@ -645,29 +647,34 @@ def run_tail_batch(
     return table.replace_schema_metadata()
 
 
-class TailSnapshots:
-    """The detect query's tail state: after a batch's `alerts/` and
-    `rca/` commits, one file `state-<batch>` in `state_dir` holds
-    (PICKLE_VERSION, pickled TailConfig, pickled {tail key: tail}).
-    The last two snapshots are kept, in memory as bytes and on disk.
+class Snapshots:
+    """A sink's driver-side state, kept next to its commits: after a
+    batch's outputs are committed, one file `state-<batch>` in
+    `state_dir` holds (PICKLE_VERSION, pickled stamp, pickled state).
+    The stamp names what the state was built for (the detect sink's
+    TailConfig, the aggregate sink's window spec); the state is any
+    picklable value. The last two snapshots are kept, in memory as
+    bytes and on disk.
 
     Batch b starts from a fresh unpickled copy of the newest snapshot
-    before b, so a batch that fails never advances the committed tails.
-    A replayed batch whose snapshot exists recomputes its rows (the
-    idempotent sinks skip them) and adopts that snapshot.
+    before b (`initial()` when there is none), so a batch that fails
+    never advances the committed state. A replayed batch whose
+    snapshot exists (`batch_id in snapshots`) has committed its
+    outputs already and adopts that snapshot.
 
     Loading checks every kept snapshot on the driver: another
-    PICKLE_VERSION, or a pickled TailConfig that differs from
-    `config`, raises RuntimeError before the query starts."""
+    PICKLE_VERSION, or a pickled stamp that differs from `stamp`,
+    raises RuntimeError before the query starts."""
 
     KEEP = 2
 
-    def __init__(self, state_dir: str, config: TailConfig):
+    def __init__(self, state_dir: str, stamp: Any, initial: Callable[[], Any]):
         self.state_dir = state_dir
-        self.config = config
+        self.stamp = stamp
+        self.initial = initial
         # compared pickled: a functools.partial parent_value_fn equals
         # only itself, so `==` would fail every equal config that has one
-        self.config_blob = pickle.dumps(config)
+        self.stamp_blob = pickle.dumps(stamp)
         self.blobs: dict[int, bytes] = {}
         names = os.listdir(state_dir) if os.path.isdir(state_dir) else []
         for name in sorted(n for n in names if n.startswith("state-")):
@@ -676,38 +683,87 @@ class TailSnapshots:
     def _load(self, name: str) -> bytes:
         path = os.path.join(self.state_dir, name)
         with open(path, "rb") as f:
-            version, config_blob, tails_blob = pickle.load(f)
+            version, stamp_blob, state_blob = pickle.load(f)
         if version != PICKLE_VERSION:
             raise RuntimeError(
-                f"tail state {path} has version {version}; this engine reads "
+                f"state {path} has version {version}; this engine reads "
                 f"version {PICKLE_VERSION}. Start the job in a new work directory."
             )
-        if config_blob != self.config_blob:
+        if stamp_blob != self.stamp_blob:
             raise RuntimeError(
-                f"tail state {path} was built with {pickle.loads(config_blob)}; "
-                f"this query runs {self.config}. Start the job in a new work "
+                f"state {path} was built with {pickle.loads(stamp_blob)}; "
+                f"this query runs {self.stamp}. Start the job in a new work "
                 "directory."
             )
-        return tails_blob
+        return state_blob
 
-    def tails_before(self, batch_id: int) -> dict:
-        """A fresh copy of the tails as the newest snapshot before
-        `batch_id` left them; empty when there is none."""
+    def __contains__(self, batch_id: int) -> bool:
+        return batch_id in self.blobs
+
+    def before(self, batch_id: int) -> Any:
+        """A fresh copy of the state as the newest snapshot before
+        `batch_id` left it; `initial()` when there is none."""
         older = [b for b in self.blobs if b < batch_id]
-        return pickle.loads(self.blobs[max(older)]) if older else {}
+        return pickle.loads(self.blobs[max(older)]) if older else self.initial()
 
-    def commit(self, batch_id: int, tails: dict) -> None:
-        """Snapshot `tails` as the state after `batch_id` (temp file,
+    def commit(self, batch_id: int, state: Any) -> None:
+        """Snapshot `state` as the state after `batch_id` (temp file,
         then rename), unless that snapshot exists; keep the last two."""
         if batch_id in self.blobs:
             return
-        blob = pickle.dumps(tails)
+        blob = pickle.dumps(state)
         os.makedirs(self.state_dir, exist_ok=True)
         tmp = os.path.join(self.state_dir, f"_tmp_state-{batch_id:010d}")
         with open(tmp, "wb") as f:
-            pickle.dump((PICKLE_VERSION, self.config_blob, blob), f)
+            pickle.dump((PICKLE_VERSION, self.stamp_blob, blob), f)
         os.replace(tmp, os.path.join(self.state_dir, f"state-{batch_id:010d}"))
         self.blobs[batch_id] = blob
         for old in sorted(self.blobs)[: -self.KEEP]:
             del self.blobs[old]
             os.remove(os.path.join(self.state_dir, f"state-{old:010d}"))
+
+
+# the key columns of a window partial row (those present in the batch)
+# and how its value columns merge across batches
+_PARTIAL_KEYS = (
+    "tail_key", "window_start_epoch", "dim_name", "dim_value", "dim_group",
+    "dim_level", "parent_name",
+)
+_PARTIAL_MERGE = (("dim_sum", "sum"), ("dim_count", "sum"), ("parent_value", "max"))
+
+
+def fold_window_partials(
+    state: tuple[int, pa.Table | None], partials: pa.Table, size_s: int, delay_ms: int
+) -> tuple[pa.Table, tuple[int, pa.Table | None]]:
+    """One aggregate batch on the driver, Spark's append-mode windowed
+    aggregation applied to the batch's per-(window, dim) partial sums.
+
+    `state` is (watermark ms, open partials or None); `partials` is
+    `long_form_window_aggs(..., with_max_ts=True)` of the batch. Rows
+    of windows that ended at or before the watermark from before this
+    batch are late and dropped; the rest fold into the open partials
+    (sums and counts add, parent_value takes the max). The watermark
+    advances to max(watermark, max event time ms - delay_ms), and
+    stays put on an empty batch. Returns (the windows that end at or
+    before the new watermark, the new state)."""
+    watermark, open_ = state
+    max_us = pc.max(partials["max_ts"]).as_py()
+    partials = partials.drop_columns(["max_ts"])
+    schema = partials.schema
+
+    def ends_ms(table: pa.Table) -> pa.Array:
+        return pc.multiply(pc.add(table["window_start_epoch"], size_s), 1000)
+
+    live = partials.filter(pc.greater(ends_ms(partials), watermark))
+    if open_ is not None and open_.num_rows:
+        keys = [c for c in _PARTIAL_KEYS if c in schema.names]
+        merge = [(c, how) for c, how in _PARTIAL_MERGE if c in schema.names]
+        grouped = pa.concat_tables([open_, live]).group_by(keys, use_threads=False)
+        folded = grouped.aggregate(merge)
+        names = {f"{c}_{how}": c for c, how in merge}
+        live = folded.rename_columns([names.get(c, c) for c in folded.column_names])
+        live = live.select(schema.names).cast(schema)
+    if max_us is not None:
+        watermark = max(watermark, max_us // 1000 - delay_ms)
+    done = pc.less_equal(ends_ms(live), watermark)
+    return live.filter(done), (watermark, live.filter(pc.invert(done)))

@@ -8,7 +8,12 @@ SAME generated directory (self-relative A/Bs) — never to
 BENCH/bench_local_r9_sf1.json or the driver artifacts. Seeded and
 deterministic.
 
-Usage: python scripts/gen_scale_data.py /tmp/sfx1.0 [--docs 50000 --events 1000000]
+`--src` names the dataset whose vocabulary, language mix and event
+values are sampled (default `SRC`). The user base is fixed: events draw
+`user_id` uniformly from 15,000 users whatever `--events` is, so a
+larger dataset has more events per user, not more users.
+
+Usage: python scripts/gen_scale_data.py /tmp/sfx1.0 [--src DIR --docs 50000 --events 1000000]
 """
 
 from __future__ import annotations
@@ -23,8 +28,10 @@ import pyarrow.parquet as pq
 SRC = "/root/testdata/sf0.1"
 
 
-def gen_documents(out_dir: str, n_docs: int, rng: np.random.Generator) -> None:
-    src = pq.read_table(f"{SRC}/documents.parquet").to_pandas()
+def gen_documents(
+    src_dir: str, out_dir: str, n_docs: int, rng: np.random.Generator
+) -> None:
+    src = pq.read_table(f"{src_dir}/documents.parquet").to_pandas()
     toks = src.text.str.split()
     words = np.array(sorted(set(w for t in toks for w in t)))
     # empirical unigram weights
@@ -58,8 +65,10 @@ def gen_documents(out_dir: str, n_docs: int, rng: np.random.Generator) -> None:
     pq.write_table(tbl, f"{out_dir}/documents.parquet")
 
 
-def gen_events(out_dir: str, n_events: int, rng: np.random.Generator) -> None:
-    src = pq.read_table(f"{SRC}/events.parquet", columns=["value"]).to_pandas()
+def gen_events(
+    src_dir: str, out_dir: str, n_events: int, rng: np.random.Generator
+) -> None:
+    src = pq.read_table(f"{src_dir}/events.parquet", columns=["value"]).to_pandas()
     vals = rng.choice(src.value.values, size=n_events, replace=True)
     t0 = np.datetime64("2024-01-01T00:00:00", "us")
     span_us = 30 * 24 * 3600 * 1_000_000
@@ -85,6 +94,7 @@ def gen_events(out_dir: str, n_events: int, rng: np.random.Generator) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("out_dir")
+    ap.add_argument("--src", default=SRC, help="dataset to sample from")
     ap.add_argument("--docs", type=int, default=50_000)
     ap.add_argument("--events", type=int, default=1_000_000)
     ap.add_argument("--seed", type=int, default=42)
@@ -92,8 +102,8 @@ def main() -> None:
 
     os.makedirs(args.out_dir, exist_ok=True)
     rng = np.random.default_rng(args.seed)
-    gen_documents(args.out_dir, args.docs, rng)
-    gen_events(args.out_dir, args.events, rng)
+    gen_documents(args.src, args.out_dir, args.docs, rng)
+    gen_events(args.src, args.out_dir, args.events, rng)
     print(f"generated {args.out_dir}: docs={args.docs} events={args.events}")
 
 

@@ -124,8 +124,6 @@ job = StreamingJob(work_dir=work, cfg=cfg,
 stream = build_page_records(read_pages_stream(spark, {pages_path!r}, max_files_per_trigger={mft}), cfg)
 t0 = time.time()
 q1 = job.start_aggregate_query(stream)
-# the serial tail shuffles one key; don't pay 32 state-store partitions
-spark.conf.set("spark.sql.shuffle.partitions", "4")
 os.makedirs(job.aggs_dir, exist_ok=True)  # detect's file source needs the dir
 # detect runs CONCURRENTLY with aggregate (the production topology) so
 # per-commit latency = aggs-commit -> alerts-commit is meaningful; the

@@ -10,7 +10,6 @@
 - out-of-order input within the watermark matches batch.
 """
 
-import contextlib
 import math
 import os
 
@@ -338,13 +337,13 @@ def test_tail_fn_joins_arrow_batches_of_one_group():
 def _restore_tail(
     state_dir, stored: TailConfig, running: TailConfig, version_step: int = 0
 ) -> None:
-    """Loads, with TailSnapshots(running), a snapshot file holding
-    `stored`'s tail pickled under PICKLE_VERSION + version_step."""
+    """Loads, with Snapshots stamped with `running`, a snapshot file
+    holding `stored`'s tail pickled under PICKLE_VERSION + version_step."""
     import pickle
 
     from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
         PICKLE_VERSION,
-        TailSnapshots,
+        Snapshots,
     )
 
     state_dir.mkdir(exist_ok=True)
@@ -353,8 +352,8 @@ def _restore_tail(
         pickle.dump(
             (PICKLE_VERSION + version_step, pickle.dumps(stored), pickle.dumps(tails)), f
         )
-    snapshots = TailSnapshots(str(state_dir), running)
-    assert set(snapshots.tails_before(1)) == {None}
+    snapshots = Snapshots(str(state_dir), running, dict)
+    assert set(snapshots.before(1)) == {None}
 
 
 def test_tail_fn_rejects_state_of_another_version(tmp_path):
@@ -457,30 +456,13 @@ def test_tail_config_rejects_bad_config(kwargs, message):
         TailConfig(**kwargs)
 
 
-def _state_partitions(q) -> set:
-    """numShufflePartitions of every stateful operator in the query's
-    recorded progress."""
-    parts = {
-        op["numShufflePartitions"]
-        for p in q.recentProgress for op in p["stateOperators"]
-    }
-    assert parts, "no progress with a stateful operator was recorded"
-    return parts
-
-
-def test_checkpoint_resume(spark, tmp_path, monkeypatch):
-    """Kill + restart resumes from the checkpoints. The aggregate query
-    runs one state-store partition, the detect query none, and both
-    leave the session's own spark.sql.shuffle.partitions alone; an
-    aggregate checkpoint first written at the session's n partitions
-    resumes at n, with the same tables as one uninterrupted
-    1-partition run."""
-    from online_anomaly_detection_root_cause_analysis_spark.streaming import job as jobmod
-
-    # conftest's 8, unless an earlier in-process get_spark() re-set it
+def test_checkpoint_resume(spark, tmp_path):
+    """Kill + restart resumes from the checkpoints. Neither query runs
+    a stateful operator (the aggregate query keeps its open windows in
+    `agg_state/`, so its checkpoint has no `state/`), both leave the
+    session's own spark.sql.shuffle.partitions alone, and the
+    restarted run's tables equal one uninterrupted run."""
     session_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    n = int(session_partitions)
-    assert n > 1
 
     spec = PagesSpec(n_pages=2000)
     pdf = generate_pages(spec).sort_values("warc_ts")
@@ -492,7 +474,7 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
     tail = TailConfig(mode="threshold", min_value=0, max_value=50000)
     work = str(tmp_path / "job_inc")
 
-    def run(work_dir: str, pages_path: str, partitions: int):
+    def run(work_dir: str, pages_path: str):
         job = StreamingJob(
             work_dir=work_dir, cfg=CFG, tail=tail, size_s=300, slide_s=60,
         )
@@ -506,36 +488,116 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
             q.processAllAvailable()
             q.stop()
             assert after_start == session_partitions, q.name
-            if q.name == "aggregate":
-                assert _state_partitions(q) == {partitions}, q.name
-            else:
-                assert q.recentProgress, q.name
-                assert not any(p["stateOperators"] for p in q.recentProgress), q.name
+            assert q.recentProgress, q.name
+            assert not any(p["stateOperators"] for p in q.recentProgress), q.name
+        assert not os.path.exists(os.path.join(work_dir, "checkpoints", "aggregate", "state"))
         return job
 
-    # the first start writes its checkpoints at the session's n
-    with monkeypatch.context() as m:
-        m.setattr(jobmod, "_one_state_partition", lambda s: contextlib.nullcontext())
-        run(work, str(inc_path), partitions=n)
-
-    # second half arrives later; restart resumes from the checkpoints,
-    # at the partition count they were written with
+    run(work, str(inc_path))
+    # second half arrives later; restart resumes from the checkpoints
     _write_chunks(pdf.iloc[1000:], inc_path, 4, start_idx=4)
-    job = run(work, str(inc_path), partitions=n)
+    job = run(work, str(inc_path))
 
     # golden: one uninterrupted run over all data
-    golden_work = str(tmp_path / "job_gold")
     all_path = tmp_path / "pages_all"
     all_path.mkdir(parents=True)
     _write_chunks(pdf, all_path, 8)
-    gold = run(golden_work, str(all_path), partitions=1)
+    gold = run(str(tmp_path / "job_gold"), str(all_path))
 
-    got = spark.read.parquet(job.alerts_dir)
-    want = spark.read.parquet(gold.alerts_dir)
-    assert _norm_rows(got) == _norm_rows(want)
-    got_rca = spark.read.parquet(job.rca_dir)
-    want_rca = spark.read.parquet(gold.rca_dir)
-    assert _norm_rows(got_rca) == _norm_rows(want_rca)
+    for sub in ("aggs", "alerts", "rca"):
+        got, want = (os.path.join(j.work_dir, sub) for j in (job, gold))
+        assert _norm_rows(spark.read.parquet(got)) == _norm_rows(spark.read.parquet(want)), sub
+
+
+def _agg_tables(job) -> dict:
+    """The bytes of every file in `aggs/`, by name."""
+    return {
+        name: open(os.path.join(job.aggs_dir, name), "rb").read()
+        for name in os.listdir(job.aggs_dir)
+    }
+
+
+def test_restart_on_a_stateful_aggregate_checkpoint_fails(spark, tmp_path):
+    """A work directory whose aggregate checkpoint holds the state
+    store of a Spark stateful window aggregation (open windows that the
+    driver-side fold would silently ignore) is refused by
+    start_aggregate_query on the driver, before any batch runs."""
+    pdf = generate_pages(PagesSpec(n_pages=600)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 2)
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=CFG,
+        tail=TailConfig(mode="threshold", min_value=0, max_value=0),
+        size_s=300, slide_s=60,
+    )
+    stream = build_page_records(read_pages_stream(spark, str(pages)), CFG)
+    ckpt = os.path.join(job.work_dir, "checkpoints", "aggregate")
+    q = (
+        long_form_window_aggs(stream, CFG, 300, 60, "0 seconds")
+        .writeStream.format("noop").outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert os.listdir(os.path.join(ckpt, "state"))
+
+    with pytest.raises(RuntimeError, match="state store of a stateful window aggregation"):
+        job.start_aggregate_query(stream)
+    assert "aggregate" not in {q.name for q in spark.streams.active}
+    assert not os.path.exists(job.aggs_dir)
+
+
+@pytest.mark.parametrize("change", ["stamp", "version"])
+def test_restart_with_another_window_state_fails_on_the_driver(
+    spark, tmp_path, change
+):
+    """An `agg_state/` snapshot built for another window spec (here
+    another watermark) or pickled under another PICKLE_VERSION fails
+    start_aggregate_query on the driver, naming both, and leaves
+    `aggs/` as it was."""
+    import pickle
+
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        PICKLE_VERSION,
+    )
+
+    pdf = generate_pages(PagesSpec(n_pages=600)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 2)
+    tail = TailConfig(mode="threshold", min_value=0, max_value=0)
+
+    def job_with(watermark: str) -> StreamingJob:
+        return StreamingJob(
+            work_dir=str(tmp_path / "job"), cfg=CFG, tail=tail, size_s=300,
+            slide_s=60, watermark=watermark,
+        )
+
+    job = job_with("0 seconds")
+    stream = build_page_records(read_pages_stream(spark, str(pages)), CFG)
+    q = job.start_aggregate_query(stream)
+    q.processAllAvailable()
+    q.stop()
+    before = _agg_tables(job)
+    assert any(name.startswith("part-") for name in before)
+
+    if change == "stamp":
+        restarted, message = job_with("5 minutes"), (
+            r"'watermark_ms': 0.*this query runs .*'watermark_ms': 300000"
+        )
+    else:
+        newest = os.path.join(job.agg_state_dir, max(os.listdir(job.agg_state_dir)))
+        with open(newest, "rb") as f:
+            _, stamp, state = pickle.load(f)
+        with open(newest, "wb") as f:
+            pickle.dump((PICKLE_VERSION + 1, stamp, state), f)
+        restarted, message = job_with("0 seconds"), f"version {PICKLE_VERSION + 1}"
+    with pytest.raises(RuntimeError, match=message):
+        restarted.start_aggregate_query(stream)
+    assert "aggregate" not in {q.name for q in spark.streams.active}
+    assert _agg_tables(job) == before
 
 
 def test_streaming_plans_run_no_python_operator(spark, tmp_path):
@@ -856,6 +918,254 @@ def test_detect_sink_fault_replays_to_an_uninterrupted_run(
         assert _norm_rows(spark.read.parquet(got)) == _norm_rows(spark.read.parquet(want))
 
 
+@pytest.mark.parametrize("fault", ["before_marker", "before_snapshot"])
+def test_aggregate_sink_fault_replays_to_an_uninterrupted_run(
+    spark, tmp_path, monkeypatch, fault
+):
+    """A raise inside one aggregate batch: after its `aggs/` part file
+    and before its marker (before_marker), or after the marker and
+    before its `agg_state/` snapshot (before_snapshot). The query
+    fails; a restart without the fault replays the batch from the
+    snapshot before it, and `aggs/`, `alerts/` and `rca/` equal an
+    uninterrupted run, with one part file per batch."""
+    from online_anomaly_detection_root_cause_analysis_spark.streaming import sink as sinkmod
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        Snapshots,
+    )
+
+    fault_batch = 2
+    armed = [True]
+    marker = f"_committed_{fault_batch:010d}"
+    real_open, real_commit = open, Snapshots.commit
+
+    def open_failing_on_marker(path, *a, **k):
+        if armed[0] and os.path.basename(str(path)) == marker and "aggs" in str(path):
+            raise RuntimeError("injected fault before the aggs marker")
+        return real_open(path, *a, **k)
+
+    def commit_failing_on_agg_state(self, batch_id, state):
+        if armed[0] and batch_id == fault_batch and self.state_dir.endswith("agg_state"):
+            raise RuntimeError("injected fault before the agg_state snapshot")
+        return real_commit(self, batch_id, state)
+
+    if fault == "before_marker":
+        monkeypatch.setattr(sinkmod, "open", open_failing_on_marker, raising=False)
+    else:
+        monkeypatch.setattr(Snapshots, "commit", commit_failing_on_agg_state)
+
+    pdf = generate_pages(PagesSpec(n_pages=1500)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 5)
+    # every window alerts, so alerts/ and rca/ have rows
+    tail = TailConfig(mode="threshold", min_value=0, max_value=0)
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=CFG, tail=tail, size_s=300, slide_s=60,
+    )
+    stream = build_page_records(read_pages_stream(spark, str(pages)), CFG)
+    q = job.start_aggregate_query(stream)
+    with pytest.raises(Exception, match="injected fault"):
+        q.processAllAvailable()
+    q.stop()
+    part = f"part-{fault_batch:010d}-0000.parquet"
+    assert part in _parts(job.aggs_dir)
+    assert (marker in os.listdir(job.aggs_dir)) == (fault == "before_snapshot")
+    assert f"state-{fault_batch:010d}" not in os.listdir(job.agg_state_dir)
+
+    armed[0] = False
+    job = _run_job(spark, job.work_dir, str(pages), tail)
+    gold = _run_job(spark, str(tmp_path / "gold"), str(pages), tail)
+    assert part in _parts(gold.aggs_dir)
+    for sub in ("aggs", "alerts", "rca"):
+        got, want = (os.path.join(j.work_dir, sub) for j in (job, gold))
+        assert _parts(got) == _parts(want), sub
+        batches = [f.split("-")[1] for f in _parts(got)]
+        assert len(batches) == len(set(batches)), sub
+        assert _norm_rows(spark.read.parquet(got)) == _norm_rows(spark.read.parquet(want))
+
+
+def _spark_append_mode_aggs(records, watermark: str):
+    """Spark's own windowed aggregation in append mode: the stateful
+    withWatermark -> groupBy(window, dim) that the aggregate sink's
+    fold reproduces on the driver."""
+    dims = CFG.dimension_names
+    stack = ", ".join(
+        [f"'{d}', cast(`{d}` as string)" for d in dims] + ["'__total__', '__total__'"]
+    )
+    return (
+        records.withWatermark("ts", watermark)
+        .select(
+            "ts", "value",
+            F.expr(f"stack({len(dims) + 1}, {stack}) as (dim_name, dim_value)"),
+        )
+        .groupBy(F.window("ts", "300 seconds", "60 seconds"), "dim_name", "dim_value")
+        .agg(F.sum("value").alias("dim_sum"), F.count(F.lit(1)).alias("dim_count"))
+        .select(
+            F.unix_timestamp("window.start").alias("window_start_epoch"),
+            "dim_name", "dim_value", "dim_sum", "dim_count",
+        )
+    )
+
+
+def test_late_rows_are_dropped_as_spark_drops_them(spark, tmp_path):
+    """Out-of-order pages, some of them later than the 300 s watermark:
+    the job's `aggs/` equals Spark's own append-mode stateful
+    aggregation of the same files into a memory sink (each file its
+    own trigger, followed by the no-data trigger that evicts what it
+    finalized), so late rows are dropped by the same rule."""
+    import shutil
+
+    pdf = generate_pages(
+        PagesSpec(n_pages=1800, out_of_order_fraction=0.05)
+    ).reset_index(drop=True)
+    # every 20th page arrives one file late, up to ~1500 s behind the
+    # newest event time
+    n_files = 6
+    chunk = (len(pdf) + n_files - 1) // n_files
+    file_of = pdf.index // chunk + (pdf.index % 20 == 0)
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    for i in range(n_files + 1):
+        _write_chunks(pdf[file_of == i], pages, 1, start_idx=i)
+
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=CFG,
+        tail=TailConfig(mode="threshold", min_value=0, max_value=0),
+        size_s=300, slide_s=60, watermark="300 seconds",
+    )
+    q = job.start_aggregate_query(
+        build_page_records(read_pages_stream(spark, str(pages)), CFG)
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    ref_pages = tmp_path / "ref_pages"
+    ref_pages.mkdir()
+    ref = (
+        _spark_append_mode_aggs(
+            build_page_records(read_pages_stream(spark, str(ref_pages)), CFG),
+            "300 seconds",
+        )
+        .writeStream.format("memory").queryName("late_rows_reference")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ref_ckpt"))
+        .start()
+    )
+    try:
+        for name in sorted(os.listdir(pages)):
+            shutil.copy(pages / name, ref_pages / name)
+            ref.processAllAvailable()
+        dropped = sum(
+            op["numRowsDroppedByWatermark"]
+            for p in ref.recentProgress for op in p["stateOperators"]
+        )
+    finally:
+        ref.stop()
+    assert dropped > 0, "no row was later than the watermark"
+
+    want = spark.sql("SELECT * FROM late_rows_reference")
+    got = spark.read.parquet(job.aggs_dir).select(*want.columns)
+    assert want.count() > 0
+    assert _norm_rows(got) == _norm_rows(want)
+
+
+def _partials(rows, max_ts_s):
+    """A batch of window partials as long_form_window_aggs(...,
+    with_max_ts=True) returns it: (window start s, dim value, sum,
+    count, parent value) rows and the batch's max event time."""
+    import pyarrow as pa
+
+    n = len(rows)
+    return pa.table({
+        "window_start_epoch": pa.array([r[0] for r in rows], pa.int64()),
+        "dim_name": pa.array(["lang"] * n, pa.string()),
+        "dim_value": pa.array([r[1] for r in rows], pa.string()),
+        "dim_group": pa.array(["content"] * n, pa.string()),
+        "dim_level": pa.array([1] * n, pa.int32()),
+        "dim_sum": pa.array([r[2] for r in rows], pa.float64()),
+        "dim_count": pa.array([r[3] for r in rows], pa.int64()),
+        "parent_name": pa.array(["site"] * n, pa.string()),
+        "parent_value": pa.array([r[4] for r in rows], pa.string()),
+        "max_ts": pa.array([max_ts_s * 1_000_000] * n, pa.int64()),
+    })
+
+
+def _fold(state, rows, max_ts_s, delay_s=0):
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+        fold_window_partials,
+    )
+
+    emitted, state = fold_window_partials(state, _partials(rows, max_ts_s), 300, delay_s * 1000)
+    return sorted(tuple(r.values()) for r in emitted.to_pylist()), state
+
+
+def _open_rows(state):
+    return sorted(
+        (r["window_start_epoch"], r["dim_value"], r["dim_sum"], r["dim_count"], r["parent_value"])
+        for r in state[1].to_pylist()
+    )
+
+
+def test_fold_emits_a_window_whose_end_equals_the_watermark():
+    """A window is emitted in the batch whose watermark reaches its
+    end; a later row of it is late and dropped, while a window ending
+    one second after the watermark stays open and takes its rows."""
+    emitted, state = _fold(
+        (0, None), [(0, "en", 1.0, 1, "a"), (1, "en", 2.0, 1, "b")], max_ts_s=600, delay_s=300
+    )
+    assert state[0] == 300_000
+    assert [(r[0], r[5]) for r in emitted] == [(0, 1.0)]
+    assert _open_rows(state) == [(1, "en", 2.0, 1, "b")]
+
+    emitted, state = _fold(
+        state, [(0, "en", 5.0, 1, "z"), (1, "en", 3.0, 2, "a")], max_ts_s=600
+    )
+    assert state[0] == 600_000
+    # window 0 is late; window 1 (end 301 s) folds its rows and closes
+    assert emitted == [(1, "lang", "en", "content", 1, 5.0, 3, "site", "b")]
+    assert state[1].num_rows == 0
+
+
+def test_fold_of_an_empty_batch_keeps_the_watermark_and_open_windows():
+    _, state = _fold((0, None), [(600, "en", 1.0, 1, None)], max_ts_s=700)
+    assert state[0] == 700_000
+    emitted, after = _fold(state, [], max_ts_s=0)
+    assert emitted == []
+    assert after[0] == 700_000
+    assert _open_rows(after) == _open_rows(state) == [(600, "en", 1.0, 1, None)]
+
+
+def test_fold_watermark_never_moves_back():
+    """A batch whose newest event is older than the watermark leaves
+    the watermark where it was; its rows of open windows still fold
+    (sums and counts add, the parent value takes the max)."""
+    _, state = _fold((0, None), [(600, "en", 1.0, 1, "a")], max_ts_s=800)
+    emitted, state = _fold(
+        state, [(600, "en", 2.0, 3, "c"), (600, "de", 4.0, 1, None)], max_ts_s=650
+    )
+    assert emitted == []
+    assert state[0] == 800_000
+    assert _open_rows(state) == [(600, "de", 4.0, 1, None), (600, "en", 3.0, 4, "c")]
+
+
+def test_watermark_strings():
+    """The job reads the watermark delay from the same interval string
+    it hands Spark, and rejects a bad one where the job is built."""
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
+        watermark_delay_ms,
+    )
+
+    assert watermark_delay_ms("0 seconds") == 0
+    assert watermark_delay_ms("10 minutes") == 600_000
+    assert watermark_delay_ms("1 hour 30 minutes") == 5_400_000
+    assert watermark_delay_ms("interval 2.5 seconds") == 2_500
+    for bad in ("", "10", "ten minutes", "-5 seconds", "10 fortnights", "10 minutes 3"):
+        with pytest.raises(ValueError, match="not an interval"):
+            StreamingJob(
+                work_dir="unused", cfg=CFG, tail=TailConfig(), watermark=bad,
+            )
+
+
 def test_streaming_session_windows_match_batch(spark, tmp_path):
     """W8 under Structured Streaming: gap-based session windows with a
     watermark, streamed file-by-file — every finalized session matches
@@ -1108,6 +1418,43 @@ def test_streaming_job_dedup_col(spark, tmp_path):
     # and WITHOUT dedup the duplicated stream inflates the totals
     inflated = run(dup_path, "nodedup_job", None)
     assert _norm_rows(inflated) != _norm_rows(baseline)
+
+
+def test_replayed_dedup_batch_runs_its_job(spark, tmp_path):
+    """With dedup_col the aggregate query keeps a Spark state store
+    (the dedup's), which commits only when a batch's plan runs: a
+    replayed batch that has its `agg_state/` snapshot still runs its
+    job, so the restart does not fail Spark's state-store commit check,
+    and `aggs/` stays as the first run committed it."""
+    pdf = generate_pages(PagesSpec(n_pages=1200)).sort_values("warc_ts")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    _write_chunks(pdf, pages, 4)
+    job = StreamingJob(
+        work_dir=str(tmp_path / "job"), cfg=CFG,
+        tail=TailConfig(mode="threshold", min_value=0, max_value=0),
+        size_s=300, slide_s=60, watermark="10 minutes", dedup_col="url",
+    )
+
+    def run():
+        q = job.start_aggregate_query(
+            build_page_records(read_pages_stream(spark, str(pages)), CFG)
+        )
+        q.processAllAvailable()
+        q.stop()
+        return q
+
+    run()
+    before = _agg_tables(job)
+    commits = os.path.join(job.work_dir, "checkpoints", "aggregate", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert f"state-{last:010d}" in os.listdir(job.agg_state_dir)
+    for f in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, f))
+    q = run()
+    assert q.exception() is None
+    assert q.recentProgress[0]["batchId"] == last
+    assert _agg_tables(job) == before
 
 
 def test_streaming_hstrees_matches_replay(spark, tmp_path):
