@@ -13,7 +13,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from online_anomaly_detection_root_cause_analysis_spark.config import (
@@ -39,17 +39,6 @@ from online_anomaly_detection_root_cause_analysis_spark.operators.textstats impo
     document_language_id,
     document_text_stats,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.baseline import (
-    with_offset_baseline,
-    with_offset_baseline_old,
-)
-from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-    dimension_breakdown,
-    session_window_agg,
-    simple_window_records,
-    sliding_window_totals,
-    tumbling_window_totals,
-)
 from online_anomaly_detection_root_cause_analysis_spark.sources.records import (
     build_event_records,
 )
@@ -73,10 +62,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_event_records(df, events_config())
 
 
-def _epoch(col: str = "window_start"):
-    return F.unix_timestamp(col)
-
-
 def _r4(col) -> object:
     """Half-up rounding at 4dp via floor(x*1e4+0.5) — bit-identical to
     the same expression in DuckDB given identical input doubles
@@ -97,31 +82,55 @@ def _q6_aggs(aggs: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- queries
 
-def q_tumbling_window_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    totals = tumbling_window_totals(_events(spark, sf_dir), SIZE_S)
-    return totals.select(
-        _epoch().alias("window_start_epoch"),
-        _r4("current").alias("current"),
-        "records_aggregated",
+def _window_aggs(spark: SparkSession, sf_dir: str, slide_s: int | None) -> DataFrame:
+    """The engine's window aggregation over the events: the
+    `__total__` rows are the per-window totals, the others the
+    per-dimension breakdown, from one shuffle."""
+    return long_form_window_aggs(
+        _events(spark, sf_dir), events_config(), SIZE_S, slide_s, None
     )
+
+
+def _window_totals(spark: SparkSession, sf_dir: str, slide_s: int | None) -> DataFrame:
+    aggs = _window_aggs(spark, sf_dir, slide_s)
+    return aggs.filter(F.col("dim_name") == TOTAL_DIM).select(
+        "window_start_epoch",
+        _r4("dim_sum").alias("current"),
+        F.col("dim_count").alias("records_aggregated"),
+    )
+
+
+def q_tumbling_window_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _window_totals(spark, sf_dir, None)
 
 
 def q_sliding_window_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    totals = sliding_window_totals(_events(spark, sf_dir), SIZE_S, SLIDE_S)
-    return totals.select(
-        _epoch().alias("window_start_epoch"),
-        _r4("current").alias("current"),
-        "records_aggregated",
-    )
+    return _window_totals(spark, sf_dir, SLIDE_S)
 
 
 def q_offset_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    totals = sliding_window_totals(_events(spark, sf_dir), SIZE_S, SLIDE_S)
-    wb = with_offset_baseline(totals, BASELINE_N)
+    """AggregatedRecordsWBaseline top level: current + the mean of the
+    previous BASELINE_N - 1 window totals + their count. `row_number`
+    over the window start is each window's arrival index under the
+    reference's ascending-timestamp contract; the ordering window runs
+    on one task over one row per slide, as the reference's
+    parallelism-1 count window does."""
+    totals = _window_aggs(spark, sf_dir, SLIDE_S).filter(
+        F.col("dim_name") == TOTAL_DIM
+    )
+    order = Window.orderBy("window_start_epoch")
+    trail = order.rowsBetween(-(BASELINE_N - 1), -1)
+    wb = totals.select(
+        "window_start_epoch",
+        "dim_sum",
+        F.row_number().over(order).cast("long").alias("window_idx"),
+        F.avg("dim_sum").over(trail).alias("baseline"),
+        F.count("dim_sum").over(trail).alias("records_in_baseline_offset"),
+    )
     return wb.select(
-        _epoch().alias("window_start_epoch"),
-        F.col("window_idx").cast("long").alias("window_idx"),
-        _r4("current").alias("current"),
+        "window_start_epoch",
+        "window_idx",
+        _r4("dim_sum").alias("current"),
         _r4("baseline").alias("baseline"),
         "records_in_baseline_offset",
     )
@@ -187,26 +196,9 @@ def q_threshold_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dimension_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bd = dimension_breakdown(
-        _events(spark, sf_dir), events_config(), SIZE_S, SLIDE_S
-    )
-    return bd.select(
-        _epoch().alias("window_start_epoch"),
-        "dim_name",
-        "dim_value",
-        _r4("dim_sum").alias("dim_sum"),
-        "dim_count",
-    )
-
-
-def q_dimension_breakdown_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level (salted) aggregation variant — identical result set,
-    skew-resistant plan (north_rule skew handling)."""
-    bd = dimension_breakdown(
-        _events(spark, sf_dir), events_config(), SIZE_S, SLIDE_S, salt_buckets=8
-    )
-    return bd.select(
-        _epoch().alias("window_start_epoch"),
+    aggs = _window_aggs(spark, sf_dir, SLIDE_S)
+    return aggs.filter(F.col("dim_name") != TOTAL_DIM).select(
+        "window_start_epoch",
         "dim_name",
         "dim_value",
         _r4("dim_sum").alias("dim_sum"),
@@ -219,49 +211,6 @@ def q_simple_contributors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("row_type") == "rca").select(
         "window_start_epoch", "dim_name", "dim_value", *_contributor_cols()
     )
-
-
-def q_offset_baseline_old(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 OffsetBaselineAggregatorOld (deprecated in the reference;
-    rebuilt r4 for inventory completeness): current anchored on the
-    FIRST window of each sliding count buffer, baseline = mean of the
-    rest (forward-looking)."""
-    totals = sliding_window_totals(_events(spark, sf_dir), SIZE_S, SLIDE_S)
-    wb = with_offset_baseline_old(totals, BASELINE_N)
-    return wb.select(
-        _epoch().alias("window_start_epoch"),
-        F.col("window_idx").cast("long").alias("window_idx"),
-        _r4("current_old").alias("current_old"),
-        _r4("baseline").alias("baseline"),
-        "records_in_baseline_offset",
-    )
-
-
-def q_window_sum_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 SumAggregatorSimple (deprecated in the reference; rebuilt
-    r4): tumbling sum + first-record epoch + lineage count (the raw
-    carried-records array stays behind carry_records=True — an
-    anti-scale pattern, see operator docstring)."""
-    s = simple_window_records(_events(spark, sf_dir), SIZE_S)
-    return s.select(
-        _epoch().alias("window_start_epoch"),
-        _r4("current").alias("current"),
-        "start_timestamp",
-        "n_records",
-    )
-
-
-def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    s = session_window_agg(df, key="user_id", gap_s=1800, ts="ts", value="value")
-    return s.select(
-        "user_id",
-        F.unix_timestamp("session_start").alias("session_start_epoch"),
-        _r4("current").alias("current"),
-        "records_aggregated",
-    )
-
-
 
 
 # ---------------------------------------------- training-data pipeline ops
@@ -721,18 +670,6 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     blocklist = spark.createDataFrame([(h,) for h in _BLOCKED_HOSTS], ["host"])
     return blocklist_filter(pages, blocklist)
-
-
-def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-event_type value percentiles (p50/p95/p99) — the
-    distribution profile detector thresholds are calibrated from;
-    F.percentile == percentile_cont == DuckDB quantile_cont, quantized
-    to 6dp (operators/windows.py::grouped_percentiles)."""
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        grouped_percentiles,
-    )
-
-    return grouped_percentiles(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2438,16 +2375,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     entry has an oracle_sql() twin."""
     return {
         # -- windowed aggregation
-        "window_sum_simple": q_window_sum_simple,
         "tumbling_window_sum": q_tumbling_window_sum,
         "sliding_window_sum": q_sliding_window_sum,
-        "session_windows": q_session_windows,
         "dimension_breakdown": q_dimension_breakdown,
-        "dimension_breakdown_salted": q_dimension_breakdown_salted,
-        "value_percentiles": q_value_percentiles,
         # -- baselines
         "offset_baseline": q_offset_baseline,
-        "offset_baseline_old": q_offset_baseline_old,
         # -- detectors
         "threshold_alerts": q_threshold_alerts,
         "zscore_alerts": q_zscore_alerts,
@@ -2581,28 +2513,6 @@ FROM costed
 WHERE cost > 0
 QUALIFY rank <= {SUMMARY_SIZE}
 """
-
-_SESSION_SQL = """
-WITH o AS (
-  SELECT user_id, ts, value,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) >= 1800
-              THEN 1 ELSE 0 END AS brk
-  FROM events
-),
-s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-)
-SELECT user_id,
-       CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start_epoch,
-       floor(sum(value)*10000 + 0.5)/10000 AS current,
-       count(*) AS records_aggregated
-FROM s GROUP BY user_id, sid
-"""
-
-
-
 
 _EXACT_DUP_SQL = f"""
 WITH corpus AS ({_DOC_CORPUS_SQL}),
@@ -3013,17 +2923,6 @@ SELECT host, doc_id FROM canon
 WHERE host NOT IN ('src0.example.com', 'src1.example.com',
                    'src2.example.com', 'src3.example.com', 'src4.example.com')
 """
-
-_VALUE_PERCENTILES_SQL = """
-SELECT event_type,
-       COUNT(*) AS n,
-       floor(quantile_cont(value, 0.5) * 1e6 + 0.5) / 1e6 AS p50,
-       floor(quantile_cont(value, 0.95) * 1e6 + 0.5) / 1e6 AS p95,
-       floor(quantile_cont(value, 0.99) * 1e6 + 0.5) / 1e6 AS p99
-FROM events
-GROUP BY event_type
-"""
-
 
 # replants the two-line split + %4 boilerplate insertion and replays
 # df-counting, deletion, and ORDER-preserving reassembly
@@ -3699,29 +3598,6 @@ def oracle_sql() -> dict[str, str]:
                    rbo AS records_in_baseline_offset
             FROM ({_WB})
         """,
-        "offset_baseline_old": f"""
-            SELECT ws AS window_start_epoch, window_idx,
-                   floor(fv*10000 + 0.5)/10000 AS current_old,
-                   floor(bl*10000 + 0.5)/10000 AS baseline,
-                   rbo AS records_in_baseline_offset
-            FROM (
-              SELECT ws, row_number() OVER (ORDER BY ws) AS window_idx,
-                     first_value(current) OVER fr AS fv,
-                     CASE WHEN count(current) OVER fr > 1
-                          THEN (sum(current) OVER fr - first_value(current) OVER fr)
-                               / (count(current) OVER fr - 1) END AS bl,
-                     CAST(count(current) OVER fr - 1 AS INT) AS rbo
-              FROM ({_TOT})
-              WINDOW fr AS (ORDER BY ws ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-            )
-        """,
-        "window_sum_simple": """
-            SELECT CAST(floor(epoch(ts)/300)*300 AS BIGINT) AS window_start_epoch,
-                   floor(sum(value)*10000 + 0.5)/10000 AS current,
-                   min(CAST(floor(epoch(ts)) AS BIGINT)) AS start_timestamp,
-                   count(*) AS n_records
-            FROM events GROUP BY 1
-        """,
         "threshold_alerts": f"""
             WITH wb AS ({_WB}), stats AS (SELECT avg(current) AS avgc FROM ({_TOT}))
             SELECT ws AS window_start_epoch,
@@ -3731,11 +3607,9 @@ def oracle_sql() -> dict[str, str]:
             FROM wb, stats WHERE current > 2*avgc OR current < 0.2*avgc
         """,
         "dimension_breakdown": breakdown_sql,
-        "dimension_breakdown_salted": breakdown_sql,
         "simple_contributors": _SIMPLE_CONTRIBUTORS_SQL,
         "hierarchical_contributors": _HIER_CONTRIBUTORS_SQL,
         "hierarchical_contributors_cooc": _HIER_COOC_SQL,
-        "session_windows": _SESSION_SQL,
         "zscore_alerts": _zscore_oracle_sql(),
         "zscore_alerts_by_key": _zscore_by_key_oracle_sql(),
         "macrobase_alerts": _macrobase_alerts_oracle_sql(),
@@ -3776,7 +3650,6 @@ def oracle_sql() -> dict[str, str]:
         "dataset_card": _DATASET_CARD_SQL,
         "shard_manifest": _SHARD_MANIFEST_SQL,
         "blocklist_filter": _BLOCKLIST_FILTER_SQL,
-        "value_percentiles": _VALUE_PERCENTILES_SQL,
         "length_histogram": """
 WITH keyed AS (
   SELECT lang AS key,

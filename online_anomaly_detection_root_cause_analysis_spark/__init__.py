@@ -16,8 +16,7 @@ Layout
                   AMC, FP-growth, risk ratio) — no Spark imports
 - ``functions``   vectorized pandas/Arrow UDFs + JVM-side column builders
 - ``sources``     deterministic pages generator, batch/stream readers
-- ``operators``   batch windowed aggregation, offset baseline,
-                  dedup/text-analysis ops
+- ``operators``   batch-only dedup/text-analysis ops
 - ``streaming``   stateful streaming stages (the tail runs every detector
                   and RCA finder), exactly-once sink, listener
 """

@@ -476,12 +476,12 @@ def url_host_stats(
     strip scheme, strip a leading `www.`, split host from path, drop
     the query string (tracking params). Registered domain = last two
     host labels. The rollup is ONE shuffle keyed by host; host-key
-    skew at 100 TB (a few giant hosts own most pages) is exactly the
-    skew the engine's salted dimension-breakdown pattern handles —
-    this op keeps plain groupBy because its aggregates are all
-    algebraic (map-side partial agg absorbs the skew before the
-    shuffle). Patterns are backref/lookaround-free so the DuckDB
-    oracle replays them byte-for-byte."""
+    skew at 100 TB (a few giant hosts own most pages) needs no salting:
+    its aggregates are all algebraic, so map-side partial aggregation
+    absorbs the skew before the shuffle (BENCH/skew_salted.json
+    measured the salted plan losing to the plain one). Patterns are
+    backref/lookaround-free so the DuckDB oracle replays them
+    byte-for-byte."""
     lower = F.lower(F.col(url_col))
     no_scheme = F.regexp_replace(lower, r"^[a-z][a-z0-9+.-]*://", "")
     host_raw = F.regexp_extract(no_scheme, r"^([^/?#]+)", 1)
@@ -880,7 +880,7 @@ def dataset_card(
     groups, tiny reduce side; exact F.percentile buffers each slice's
     lengths on its reducer, the honest profiling cost (the production
     variant at petabyte slices is percentile_approx / t-digest, which
-    loses the oracle — same trade documented at grouped_percentiles).
+    loses the oracle).
     (2) the dup count groups on (lang, source, sha256(text)) — corpus-
     proportional key space, partial agg collapses exact copies
     map-side — then folds to the slice key (re-shuffle of one row per

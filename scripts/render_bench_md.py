@@ -343,19 +343,6 @@ throughput pays the per-trigger fixed overhead
 | 1 (latency mode) | {mft1['windows_per_sec']:.0f} | {mft1['p95_trigger_ms']/1000:.1f} s | {mft1['p95_commit_latency_sec']:.1f} s |
 """
             )
-    skew = _load(os.path.join(REPO, "BENCH", "skew_salted.json"))
-    if skew:
-        fx = skew["fixture"]
-        parts.append(
-            f"""### Skew: salted vs unsalted aggregation on a genuinely hot key (VERDICT r6 #6)
-
-`scripts/skew_bench.py` on a fixture where ONE dimension value holds
-{fx['hot_share']:.0%} of {fx['rows']:,} rows ({skew['protocol']}):
-unsalted median **{skew['unsalted_median_s']:.2f} s**, salted
-(salt_buckets=8) **{skew['salted_median_s']:.2f} s** — the salted
-plan LOSES. {skew['finding']}
-"""
-        )
     ann = _load(os.path.join(REPO, "BENCH", "ann_recall_curve.json"))
     if ann:
         lsh_rows = "\n".join(
@@ -481,8 +468,8 @@ verified by plan tests rather than wall-clock here:
 
 - exactly ONE data-volume-proportional shuffle (window x dimension
   aggregation), hash-partitioned on (window, dim_name, dim_value),
-  with optional salted two-level aggregation for hot values
-  (`dimension_breakdown(salt_buckets=...)`, oracle-verified equal);
+  with no salting: map-side partial aggregation absorbs hot keys
+  (BENCH/skew_salted.json);
 - partial (map-side) aggregation before that shuffle — Catalyst
   partial+final HashAggregate pair asserted in tests/test_plans.py;
 - the serial tail consumes one row per window slide (pre-aggregated),

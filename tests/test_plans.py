@@ -4,8 +4,6 @@ read `html`/`text` when the metric is precomputed), small sides
 broadcast, aggregations are partial+final, the hot paths stay in
 whole-stage codegen."""
 
-from pyspark.sql import functions as F
-
 import __spark_entry__ as e
 from online_anomaly_detection_root_cause_analysis_spark.plans import (
     explain_str,
@@ -28,16 +26,12 @@ def test_events_scan_prunes_columns(spark):
 def test_window_agg_is_partial_final(spark):
     df = e.q_sliding_window_sum(spark, SF_DIR)
     plan = explain_str(df)
-    # partial + final HashAggregate pairs (map-side combine). r9 pane
-    # aggregation: raw event rows are aggregated ONCE into tumbling
-    # slide-width pane partials — the size/slide-way Expand of every
-    # event row must be GONE (the old plan's one data-proportional row
-    # multiplication); the pane-to-window expansion is a Generate over
-    # the tiny pane table instead
+    # the long-form window aggregation is one partial + final
+    # HashAggregate pair around its one shuffle (map-side combine),
+    # with no Python in the plan
     assert plan.count("HashAggregate") >= 2
-    assert "Expand" not in plan
-    assert "Generate" in plan
     assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
 
 
 def test_breakdown_stays_jvm_side(spark):
@@ -48,56 +42,9 @@ def test_breakdown_stays_jvm_side(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_salt_varies_within_constant_value_hot_key(spark):
-    """r7 ADVICE: the salt must spread a hot key even when the metric
-    value is CONSTANT within it (count-style metrics, _value == 1 —
-    the r7 hash(_value, dim_name) salt collapsed to one bucket there).
-    On an all-constant fixture the partial stage must occupy every
-    salt bucket, and the salted result must equal the unsalted one."""
-    from datetime import datetime, timedelta
-
-    from online_anomaly_detection_root_cause_analysis_spark.config import (
-        web_pages_config,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        dimension_breakdown,
-    )
-
-    cfg = web_pages_config()
-    dim = cfg.dimension_names[0]
-    t0 = datetime(2024, 1, 1)
-    rows = [
-        (t0 + timedelta(seconds=i), 1.0, *["hot"] * len(cfg.dimension_names))
-        for i in range(400)
-    ]
-    records = spark.createDataFrame(
-        rows, ["ts", "value"] + list(cfg.dimension_names)
-    ).repartition(8)
-
-    w = records.select(
-        F.window("ts", "300 seconds", "60 seconds").alias("w"),
-        F.col("value").alias("_value"),
-        F.lit(dim).alias("dim_name"),
-        F.lit("hot").alias("dim_value"),
-        F.pmod(F.monotonically_increasing_id(), F.lit(16)).alias("_salt"),
-    )
-    n_buckets = w.select("_salt").distinct().count()
-    assert n_buckets == 16  # constant _value no longer collapses the salt
-
-    salted = dimension_breakdown(records, cfg, salt_buckets=16)
-    plain = dimension_breakdown(records, cfg)
-    key = ["window_start", "dim_name", "dim_value"]
-    assert sorted(map(tuple, salted.orderBy(*key).collect())) == sorted(
-        map(tuple, plain.orderBy(*key).collect())
-    )
-
-
 def test_pages_metric_path_never_reads_html(spark, tmp_path):
     from online_anomaly_detection_root_cause_analysis_spark.config import (
         web_pages_config,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        sliding_window_totals,
     )
     from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
         PagesSpec,
@@ -107,6 +54,9 @@ def test_pages_metric_path_never_reads_html(spark, tmp_path):
     from online_anomaly_detection_root_cause_analysis_spark.sources.records import (
         build_page_records,
     )
+    from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
+        long_form_window_aggs,
+    )
 
     path = str(tmp_path / "pages")
     write_pages(spark, path, PagesSpec(n_pages=500), partitions=2)
@@ -115,8 +65,8 @@ def test_pages_metric_path_never_reads_html(spark, tmp_path):
     # column must be pruned out of the scan entirely (the single
     # biggest I/O lever at web scale, SURVEY.md §4.1)
     records = build_page_records(read_pages(spark, path), cfg)
-    totals = sliding_window_totals(records, 300, 60)
-    for cols in read_schema_columns(totals):
+    aggs = long_form_window_aggs(records, cfg, 300, 60, None)
+    for cols in read_schema_columns(aggs):
         assert "html" not in cols
 
 
@@ -152,86 +102,10 @@ def test_near_duplicates_candidates_not_force_broadcast(spark):
     assert "ArrowEvalPython" not in plan
 
 
-def test_deprecated_aggregator_ports(spark):
-    """A3/A4 deprecated-reference parity (rebuilt r4): the old offset
-    baseline anchors current on the FIRST window of the count buffer
-    and averages the REST (forward-looking); SumAggregatorSimple
-    carries min-epoch start_timestamp and (optionally) the raw
-    records, sorted for determinism."""
-    import pandas as pd
-
-    from online_anomaly_detection_root_cause_analysis_spark.operators.baseline import (
-        with_offset_baseline_old,
-    )
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        simple_window_records,
-    )
-
-    totals = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "window_start": pd.to_datetime(
-                    [1000, 1060, 1120, 1180], unit="s"
-                ),
-                "current": [10.0, 20.0, 40.0, 70.0],
-            }
-        )
-    )
-    rows = {
-        r.window_idx: r
-        for r in with_offset_baseline_old(totals, n=3).collect()
-    }
-    # buffer [10] -> current 10, no baseline
-    assert rows[1].current_old == 10.0 and rows[1].baseline is None
-    assert rows[1].records_in_baseline_offset == 0
-    # buffer [10,20] -> current 10, baseline 20
-    assert rows[2].current_old == 10.0 and rows[2].baseline == 20.0
-    # buffer [10,20,40] -> current 10, baseline 30
-    assert rows[3].current_old == 10.0 and rows[3].baseline == 30.0
-    # buffer slides: [20,40,70] -> current 20, baseline 55
-    assert rows[4].current_old == 20.0 and rows[4].baseline == 55.0
-    assert rows[4].records_in_baseline_offset == 2
-
-    ev = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "ts": pd.to_datetime([301, 310, 305, 601], unit="s"),
-                "value": [1.0, 2.0, 4.0, 8.0],
-            }
-        )
-    )
-    out = {
-        r.window_start.timestamp(): r
-        for r in simple_window_records(ev, size_s=300, carry_records=True).collect()
-    }
-    w1 = out[300.0]
-    assert w1.current == 7.0
-    assert w1.start_timestamp == 301  # min epoch, not arrival order
-    assert w1.n_records == 3
-    assert [(r.epoch, r.value) for r in w1.input_records] == [
-        (301, 1.0), (305, 4.0), (310, 2.0)
-    ]
-    assert out[600.0].n_records == 1 and out[600.0].current == 8.0
-
-
 def test_r4_queries_plan_shape(spark):
-    """Plan hygiene for the round-4 queries: the deprecated-aggregator
-    ports are pure JVM column plans (no Python in any form); the old
-    baseline runs ONE ordering window; the summarizer gate's and the
-    threshold/contributor queries' only Python is the single fused
-    tail."""
-    for q in (e.q_offset_baseline_old, e.q_window_sum_simple):
-        plan = explain_str(q(spark, SF_DIR))
-        assert "BatchEvalPython" not in plan, q.__name__
-        assert "ArrowEvalPython" not in plan, q.__name__
-        assert "FlatMapGroupsInPandas" not in plan, q.__name__
-    old = explain_str(e.q_offset_baseline_old(spark, SF_DIR))
-    assert old.count("Window") >= 1
-    simple = explain_str(e.q_window_sum_simple(spark, SF_DIR))
-    assert simple.count("HashAggregate") >= 2  # partial + final
-
-    # the fused tail is the ONLY Python crossing (formatted explain
-    # lists each node twice: tree + detail section)
+    """The summarizer gate's and the threshold/contributor queries'
+    only Python is the single fused tail (formatted explain lists each
+    node twice: tree + detail section)."""
     for q in (
         e.q_macrobase_summaries_single,
         e.q_threshold_alerts,
@@ -331,15 +205,6 @@ def test_blocklist_filter_broadcast_anti_join(spark):
         if "SinglePartition" not in m and "hashpartitioning" in m
     ]
     assert not non_broadcast_exchanges, plan
-
-
-def test_value_percentiles_single_shuffle(spark):
-    """Exact percentiles: one key shuffle, partial+final aggregation,
-    all JVM."""
-    df = e.q_value_percentiles(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BatchEvalPython" not in plan
-    assert "percentile" in plan.lower()
 
 
 def test_duplicate_spans_plan_shape(spark):

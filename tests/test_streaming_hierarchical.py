@@ -17,9 +17,6 @@ from online_anomaly_detection_root_cause_analysis_spark.config import (
     web_pages_config,
     web_pages_parent_value,
 )
-from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-    sliding_window_totals,
-)
 from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
     PagesSpec,
     generate_pages,
@@ -33,6 +30,7 @@ from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
     long_form_window_aggs,
 )
 from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+    TOTAL_DIM,
     StreamingTail,
     TailConfig,
     rows_to_windows,
@@ -41,6 +39,13 @@ from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
 from .test_streaming import _write_chunks
 
 CFG = web_pages_config()
+
+
+def _median_window_total(records) -> float:
+    totals = long_form_window_aggs(records, CFG, 300, 60, None).filter(
+        F.col("dim_name") == TOTAL_DIM
+    )
+    return totals.approxQuantile("dim_sum", [0.5], 0.0)[0]
 
 
 def _pages_tail(max_value: float) -> TailConfig:
@@ -65,8 +70,7 @@ def test_streaming_hierarchical_matches_replay(spark, tmp_path):
     records_batch = build_page_records(
         spark.createDataFrame(pdf), CFG
     )
-    totals = sliding_window_totals(records_batch, 300, 60)
-    max_value = totals.approxQuantile("current", [0.5], 0.0)[0]
+    max_value = _median_window_total(records_batch)
     tail_cfg = _pages_tail(max_value)
 
     job = StreamingJob(
@@ -174,8 +178,7 @@ def test_streaming_hierarchy_from_data_matches_fn_and_replay(spark, tmp_path):
     _write_chunks(pdf, pages, 5)
 
     records_batch = build_page_records(spark.createDataFrame(pdf), CFG)
-    totals = sliding_window_totals(records_batch, 300, 60)
-    max_value = totals.approxQuantile("current", [0.5], 0.0)[0]
+    max_value = _median_window_total(records_batch)
 
     tail_data = TailConfig(
         mode="threshold",
@@ -300,8 +303,7 @@ def test_checkpoint_resume_hierarchy_cooc(spark, tmp_path):
     _write_chunks(pdf.iloc[:750], inc, 3, start_idx=0)
 
     records_batch = build_page_records(spark.createDataFrame(pdf), CFG)
-    totals = sliding_window_totals(records_batch, 300, 60)
-    max_value = totals.approxQuantile("current", [0.5], 0.0)[0]
+    max_value = _median_window_total(records_batch)
     tail_data = TailConfig(
         mode="threshold",
         rca_mode="hierarchical",

@@ -28,6 +28,7 @@ from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
     long_form_window_aggs,
 )
 from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+    TOTAL_DIM,
     TailConfig,
     make_batch_tail,
 )
@@ -46,9 +47,7 @@ def _aggs(spark):
         (F.col("user_id") % 5).cast("string").alias("user_band"),
         (F.col("user_id") % 10).cast("string").alias("user_bucket"),
     )
-    return records, long_form_window_aggs(
-        records, entrymod.hier_events_config(), 300, 60
-    )
+    return long_form_window_aggs(records, entrymod.hier_events_config(), 300, 60)
 
 
 def _detector_spec():
@@ -69,12 +68,8 @@ def _summarizer_spec():
 
 
 def test_threshold_detection_with_macrobase_summarizer(spark):
-    records, aggs = _aggs(spark)
-    from online_anomaly_detection_root_cause_analysis_spark.operators.windows import (
-        sliding_window_totals,
-    )
-
-    avg = sliding_window_totals(records, 300, 60).agg(F.avg("current")).collect()[0][0]
+    aggs = _aggs(spark)
+    avg = aggs.filter(F.col("dim_name") == TOTAL_DIM).agg(F.avg("dim_sum")).first()[0]
     tail = TailConfig(
         mode="threshold", rca_mode="macrobase",
         min_value=0.4 * avg, max_value=1.6 * avg,
@@ -97,7 +92,7 @@ def test_threshold_detection_with_macrobase_summarizer(spark):
 
 
 def test_macrobase_detection_with_simple_rca(spark):
-    _, aggs = _aggs(spark)
+    aggs = _aggs(spark)
     tail = TailConfig(
         mode="macrobase", rca_mode="simple", detector_spec=_detector_spec(),
     )
@@ -117,7 +112,7 @@ def test_macrobase_detection_with_simple_rca(spark):
 
 
 def test_macrobase_detection_with_hierarchical_rca(spark):
-    _, aggs = _aggs(spark)
+    aggs = _aggs(spark)
     tail = TailConfig(
         mode="macrobase", rca_mode="hierarchical", detector_spec=_detector_spec(),
         parent_of={"user_bucket": "user_band"},
